@@ -202,7 +202,7 @@ def apply_batch(
     lsn_lo: int,
     lsn_hi: int,
     *,
-    dedup_strategy: str = "salted",
+    dedup_strategy: str = "agg",
     n_salts: int = 16,
     merge_path: str = "auto",
     broadcast_limit_bytes: int = 256 << 20,
@@ -220,7 +220,9 @@ def apply_batch(
     ``merge_path``: 'broadcast' selects winners with a broadcast
     semi-join (payload never shuffles — right when the chunk's key set
     fits the driver); 'agg' uses the shuffle-based LWW reduction
-    (``dedup_strategy`` picks the physical plan); 'auto' broadcasts
+    (``dedup_strategy`` picks the physical plan: ``agg``, the default
+    everywhere — see dedup.py — or ``window``/``salted``; the MOR
+    append's chunk dedup uses it too); 'auto' broadcasts
     when the estimated (key, _ord) hash relation stays under
     ``broadcast_limit_bytes`` (default 256 MiB) — a byte bound, since
     what actually lands on the driver and every executor is a hash

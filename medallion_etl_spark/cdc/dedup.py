@@ -35,9 +35,10 @@ combiner makes ``agg`` skew-immune — its hot-key reducer sees
 O(n_partitions) rows at ANY skew, where window's single task grows
 linearly with the hot key (survivable at 8M, not at 10^10) — while
 salting pays a second full shuffle for protection the combiner
-already provides. Hence ``agg`` default, ``salted`` reserved for
-combiner-less reductions (full-ordering window ops, collect-style
-aggregates).
+already provides. Hence ``agg`` is the default everywhere — here,
+``apply_batch()``, ``replay()``, ``stream_replay``, the replay CLI and
+bench.py — and ``salted`` is reserved for combiner-less reductions
+(full-ordering window ops, collect-style aggregates).
 """
 
 from __future__ import annotations

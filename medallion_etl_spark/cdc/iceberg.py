@@ -99,7 +99,9 @@ def merge_upsert_duckdb_stmts(
     as distinct, so ON CONFLICT can never fire for them. The source
     view must already be LWW-deduped to one row per key — the same
     precondition merge_upsert_sql documents (ON CONFLICT refuses to
-    update the same row twice, which conveniently ENFORCES it)."""
+    update the same row twice, which conveniently ENFORCES it for
+    non-NULL keys; the NULL-key pair reads only the group's max-``_lsn``
+    source row, so it too applies exactly one winner)."""
     all_cols = [*cols, "_lsn", "_deleted"]
     names = ", ".join(all_cols)
     # the key column never appears in a SET list: its value is pinned
@@ -109,6 +111,14 @@ def merge_upsert_duckdb_stmts(
     set_cols = [c for c in all_cols if c != key_col]
     sets = ", ".join(f"{c} = excluded.{c}" for c in set_cols)
     null_sets = ", ".join(f"{c} = s.{c}" for c in set_cols)
+    # ON CONFLICT refuses a second source row for one key, but nothing
+    # stops two NULL-key source rows: both NULL-key statements read
+    # only the group's max-_lsn row, so a source that broke the
+    # one-row-per-key precondition still yields the LWW winner there
+    null_winner = (
+        f"SELECT * FROM {source_view} WHERE {key_col} IS NULL "
+        f"ORDER BY _lsn DESC LIMIT 1"
+    )
     return [
         # non-NULL keys: WHEN MATCHED AND s._lsn > t._lsn THEN UPDATE
         # + WHEN NOT MATCHED THEN INSERT, as one guarded upsert
@@ -117,13 +127,12 @@ def merge_upsert_duckdb_stmts(
         f"ON CONFLICT ({key_col}) DO UPDATE SET {sets} "
         f"WHERE excluded._lsn > {target}._lsn",
         # NULL-key group, WHEN MATCHED twin
-        f"UPDATE {target} SET {null_sets} FROM {source_view} s "
-        f"WHERE {target}.{key_col} IS NULL AND s.{key_col} IS NULL "
-        f"AND s._lsn > {target}._lsn",
+        f"UPDATE {target} SET {null_sets} FROM ({null_winner}) s "
+        f"WHERE {target}.{key_col} IS NULL AND s._lsn > {target}._lsn",
         # NULL-key group, WHEN NOT MATCHED twin
         f"INSERT INTO {target} ({names}) "
-        f"SELECT {names} FROM {source_view} s WHERE s.{key_col} IS NULL "
-        f"AND NOT EXISTS (SELECT 1 FROM {target} WHERE {key_col} IS NULL)",
+        f"SELECT {names} FROM ({null_winner}) s "
+        f"WHERE NOT EXISTS (SELECT 1 FROM {target} WHERE {key_col} IS NULL)",
     ]
 
 

@@ -47,7 +47,7 @@ def replay(
     table: LakeTable,
     *,
     chunk_size: int = 1_000_000,
-    dedup_strategy: str = "salted",
+    dedup_strategy: str = "agg",
     n_salts: int = 16,
     merge_path: str = "auto",
     write_mode: str = "cow",
@@ -59,6 +59,8 @@ def replay(
 ) -> dict:
     """Replay all not-yet-committed LSN chunks of ``events`` into
     ``table``. ``max_batches`` lets tests simulate a mid-replay kill.
+    ``dedup_strategy`` is passed to ``apply_batch``; its default,
+    ``agg``, is the default everywhere (see dedup.py).
 
     ``on_malformed`` (see quarantine.py): 'fail' raises before anything
     is applied if any event has a NULL lsn/key or an op outside

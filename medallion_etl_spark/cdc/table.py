@@ -194,8 +194,92 @@ def bucket_expr(key_col: str, n_buckets: int) -> F.Column:
     shuffled on the key (groupBy, window) already has every bucket
     contained in a single partition whenever n_buckets is a multiple
     of the shuffle partition count. The merge write exploits this:
-    no extra repartition, one file per bucket dir."""
+    no extra repartition, one file per bucket dir. ``spark_hash`` is
+    its driver-side twin for point lookups (pinned equal by
+    tests/test_read_path.py)."""
     return F.pmod(F.hash(F.col(key_col)), F.lit(n_buckets)).cast("int")
+
+
+_M32 = 0xFFFFFFFF
+
+
+def _rotl32(x: int, r: int) -> int:
+    return ((x << r) | (x >> (32 - r))) & _M32
+
+
+def _mix_k1(k1: int) -> int:
+    return (_rotl32((k1 * 0xCC9E2D51) & _M32, 15) * 0x1B873593) & _M32
+
+
+def _mix_h1(h1: int, k1: int) -> int:
+    return (_rotl32(h1 ^ k1, 13) * 5 + 0xE6546B64) & _M32
+
+
+def _fmix(h1: int, length: int) -> int:
+    h1 ^= length
+    h1 = ((h1 ^ (h1 >> 16)) * 0x85EBCA6B) & _M32
+    h1 = ((h1 ^ (h1 >> 13)) * 0xC2B2AE35) & _M32
+    return h1 ^ (h1 >> 16)
+
+
+def spark_hash(value, dtype: T.DataType) -> int | None:
+    """Spark's ``hash(col)`` (Murmur3 x86_32, seed 42) of one value,
+    computed in Python: ``hashInt`` for int/short/byte, ``hashLong``
+    for long, and ``hashUnsafeBytes`` over UTF-8 for binary-collated
+    strings — which mixes the trailing 1-3 bytes one SIGNED byte at a
+    time, not as the standard Murmur3 tail. NULL hashes to the seed.
+    Returns None for types (or values) this port does not cover, so
+    callers can fall back to Spark."""
+    h = 42
+    if value is None:
+        return h
+    kind = type(dtype)
+    if kind in (T.IntegerType, T.ShortType, T.ByteType, T.LongType):
+        if type(value) is not int:
+            return None
+        if kind is T.LongType:
+            if not -(1 << 63) <= value < 1 << 63:
+                return None
+            v = value & 0xFFFFFFFFFFFFFFFF
+            h = _fmix(_mix_h1(_mix_h1(h, _mix_k1(v & _M32)), _mix_k1(v >> 32)), 8)
+        else:
+            if not -(1 << 31) <= value < 1 << 31:
+                return None
+            h = _fmix(_mix_h1(h, _mix_k1(value & _M32)), 4)
+    elif kind is T.StringType and getattr(dtype, "collation", "UTF8_BINARY") == "UTF8_BINARY":
+        if type(value) is not str:
+            return None
+        b = value.encode("utf-8")
+        aligned = len(b) - len(b) % 4
+        for i in range(0, aligned, 4):
+            h = _mix_h1(h, _mix_k1(int.from_bytes(b[i : i + 4], "little")))
+        for byte in b[aligned:]:
+            h = _mix_h1(h, _mix_k1(((byte ^ 0x80) - 0x80) & _M32))
+        h = _fmix(h, len(b))
+    else:
+        return None
+    return h - (1 << 32) if h & 0x80000000 else h
+
+
+def _source_ordinal(srcs: list[tuple[str, int]]) -> F.Column:
+    """Per-row append ordinal (``didx``) of a multi-source scan, from
+    the parent dir of the row's file. Spark reports ``file_path`` as a
+    URI — ``file:`` + the absolute path with space and ``%``
+    percent-encoded, ``+`` and non-ASCII literal — so the path is
+    percent-decoded first; ``url_decode`` is form decoding ('+' means
+    space), hence the literal '+' is re-escaped before it. A row whose
+    dir maps to no source fails the query: a silent NULL ordinal would
+    lose exact-LSN ties."""
+    path = F.col("_metadata.file_path")
+    decoded = F.url_decode(F.replace(path, F.lit("+"), F.lit("%2B")))
+    parent = F.regexp_replace(decoded, "/[^/]*$", "")
+    ordinals = F.create_map(
+        *[x for d, didx in srcs for x in (F.lit("file:" + os.path.abspath(d)), F.lit(didx))]
+    )
+    return F.coalesce(
+        ordinals[parent],
+        F.raise_error(F.concat(F.lit("file outside the read's sources: "), path)),
+    )
 
 
 def retry_on_fork_rewind(apply_fn, on_retry=None, *, attempts: int = 3):
@@ -671,14 +755,16 @@ class LakeTable:
                 dict.fromkeys([self.key_col] + [c for c in columns if c != self.key_col])
             )
         wanted = set(buckets) if buckets is not None else None
-        # (schema_version, didx, bucket-has-deltas) -> dirs; didx must
-        # ride along so the merge can break exact-LSN ties toward the
-        # newest append. The has-deltas flag splits the read per
-        # BUCKET: a key lives in exactly one bucket and a clean bucket
-        # is a single COW dir already holding one row per key, so only
-        # delta-carrying buckets need the fold — the merge shuffle is
-        # O(|delta buckets|), not O(|table|).
-        groups: dict[tuple[int, int, bool], list[str]] = {}
+        # (schema_version, bucket-has-deltas) -> [(dir, didx)]: ONE
+        # parquet scan per group, however many delta dirs it spans. The
+        # has-deltas flag splits the read per BUCKET: a key lives in
+        # exactly one bucket and a clean bucket is a single COW dir
+        # already holding one row per key, so only delta-carrying
+        # buckets need the fold — the merge shuffle is O(|delta
+        # buckets|), not O(|table|). The fold tells sources apart by
+        # the append ordinal (didx), derived per row from the file path
+        # (see _source_ordinal) instead of one scan per ordinal.
+        groups: dict[tuple[int, bool], list[tuple[str, int]]] = {}
         for b_str, entry in self.meta["buckets"].items():
             if wanted is not None and int(b_str) not in wanted:
                 continue
@@ -691,24 +777,26 @@ class LakeTable:
                     and int(s["max_lsn"]) <= min_lsn_exclusive
                 ):
                     continue  # footer stat proves no qualifying rows
-                groups.setdefault(
-                    (s["schema_version"], s["didx"], has_deltas), []
-                ).append(os.path.join(self.root, s["dir"]))
+                groups.setdefault((s["schema_version"], has_deltas), []).append(
+                    (os.path.join(self.root, s["dir"]), s["didx"])
+                )
         target_sv = self.schema_version
         clean_parts: list[DataFrame] = []
         merge_parts: list[DataFrame] = []
-        for (sv, didx, has_deltas), dirs in sorted(groups.items()):
-            df = spark.read.schema(self.stored_schema_for(sv)).parquet(*dirs)
+        for (sv, has_deltas), srcs in sorted(groups.items()):
+            df = spark.read.schema(self.stored_schema_for(sv)).parquet(*[d for d, _ in srcs])
             if min_lsn_exclusive is not None:
                 df = df.filter(F.col("_lsn") > F.lit(min_lsn_exclusive))
-            have = {f.name for f in self.schema_for(sv).fields}
-            df = df.select(*aligned_cols(have, target_sv, self.schemas), *INTERNAL_COLS)
-            if columns is not None:
-                df = df.select(*keep, *INTERNAL_COLS)
+            ordinal = ["_didx"] if has_deltas else []
             if has_deltas:
-                merge_parts.append(df.withColumn("_didx", F.lit(didx)))
-            else:
-                clean_parts.append(df)
+                df = df.withColumn("_didx", _source_ordinal(srcs))
+            have = {f.name for f in self.schema_for(sv).fields}
+            df = df.select(
+                *aligned_cols(have, target_sv, self.schemas), *INTERNAL_COLS, *ordinal
+            )
+            if columns is not None:
+                df = df.select(*keep, *INTERNAL_COLS, *ordinal)
+            (merge_parts if has_deltas else clean_parts).append(df)
         parts = list(clean_parts)
         if merge_parts:
             folded = merge_parts[0]
@@ -1001,22 +1089,30 @@ class LakeTable:
         driver-side with the same murmur3 the writer used, so an
         M-key lookup on a B-bucket table opens at most min(M, B)
         bucket dirs — at 100 TB with thousands of buckets this is the
-        difference between a metadata-sized read and a table scan."""
+        difference between a metadata-sized read and a table scan.
+        For int, long and string keys the bucket ids come from
+        ``spark_hash`` with no Spark job; other key types run one."""
         if not keys:
             return self.read(spark, buckets=[], columns=columns)
         key_field = next(f for f in self.schema().fields if f.name == self.key_col)
-        key_df = spark.createDataFrame(
-            [(k,) for k in keys],
-            T.StructType([T.StructField("_k", key_field.dataType, True)]),
-        )
-        # bucket_expr is THE bucket function (FORMAT_VERSION exists
-        # because it changed once) — never re-inline it
-        buckets = [
-            r["_b"]
-            for r in key_df.select(bucket_expr("_k", self.n_buckets).alias("_b"))
-            .distinct()
-            .collect()
-        ]
+        hashes = [spark_hash(k, key_field.dataType) for k in keys]
+        if None not in hashes:
+            # pmod(hash, n): Python's % with a positive divisor is pmod
+            buckets = sorted({h % self.n_buckets for h in hashes})
+        else:
+            # a key type the driver-side port does not cover: let Spark
+            # evaluate bucket_expr, THE bucket function (FORMAT_VERSION
+            # exists because it changed once) — never re-inline it
+            key_df = spark.createDataFrame(
+                [(k,) for k in keys],
+                T.StructType([T.StructField("_k", key_field.dataType, True)]),
+            )
+            buckets = [
+                r["_b"]
+                for r in key_df.select(bucket_expr("_k", self.n_buckets).alias("_b"))
+                .distinct()
+                .collect()
+            ]
         return self.read(spark, buckets=buckets, columns=columns).filter(
             F.col(self.key_col).isin(keys)
         )

@@ -5,6 +5,7 @@ LWW/tombstone semantics apply.py implements."""
 
 from __future__ import annotations
 
+import pandas as pd
 import pytest
 
 from medallion_etl_spark.cdc.iceberg import (
@@ -150,7 +151,7 @@ def test_generated_upsert_sql_executes_to_the_lake_table_state(spark, tmp_path):
         out["n_tok"] = out["n_tok"].astype("Int64").astype(object)
         for c in cols:
             out[c] = out[c].map(
-                lambda v: None if v is None or (v != v) else str(v)
+                lambda v: None if pd.isna(v) else str(v)
             )
         return out
 
@@ -169,7 +170,6 @@ def test_generated_upsert_sql_is_redelivery_idempotent(spark, tmp_path):
     in DuckDB: re-running every chunk a second time (equal LSNs — the
     strictly-greater guard must no-op them) leaves the state
     bit-identical to the single-delivery run."""
-    import pandas as pd
     from pyspark.sql import functions as F
 
     from medallion_etl_spark.synth import gen_events
@@ -200,7 +200,6 @@ def test_upsert_null_key_group_honors_lww_and_tombstones():
     form ONE LWW group — a higher-LSN tombstone beats the stored row,
     and a stale lower-LSN update can never resurrect it."""
     import duckdb
-    import pandas as pd
 
     con = duckdb.connect()
     con.execute(
@@ -225,6 +224,39 @@ def test_upsert_null_key_group_honors_lww_and_tombstones():
     assert con.execute("SELECT _lsn, _deleted FROM docs_t").fetchall() == [(20, True)]
     # exactly one NULL-group row ever exists
     assert con.execute("SELECT count(*) FROM docs_t").fetchall() == [(1,)]
+
+
+def test_upsert_null_key_pair_applies_only_the_max_lsn_source_row():
+    """Two NULL-key rows in one source (the one-row-per-key
+    precondition broken): the INSERT twin and the UPDATE twin both
+    apply only the max-_lsn row, whatever the source order."""
+    import duckdb
+
+    con = duckdb.connect()
+    con.execute(
+        "CREATE TABLE docs_t (doc_id VARCHAR UNIQUE, n_tok BIGINT, "
+        "_lsn BIGINT, _deleted BOOLEAN)"
+    )
+    stmts = merge_upsert_duckdb_stmts("docs_t", "chunk_winners", "doc_id", ["doc_id", "n_tok"])
+
+    def apply(rows):
+        con.register("chunk_winners", pd.DataFrame(rows))
+        for s in stmts:
+            con.execute(s)
+        con.unregister("chunk_winners")
+
+    # not matched: one row inserted, the newest
+    apply([
+        {"doc_id": None, "n_tok": 7, "_lsn": 30, "_deleted": False},
+        {"doc_id": None, "n_tok": 5, "_lsn": 10, "_deleted": False},
+    ])
+    assert con.execute("SELECT n_tok, _lsn FROM docs_t").fetchall() == [(7, 30)]
+    # matched: the newest of two newer rows wins, not the first listed
+    apply([
+        {"doc_id": None, "n_tok": 8, "_lsn": 40, "_deleted": False},
+        {"doc_id": None, "n_tok": 9, "_lsn": 50, "_deleted": False},
+    ])
+    assert con.execute("SELECT n_tok, _lsn FROM docs_t").fetchall() == [(9, 50)]
 
 
 def test_merge_sql_pins_lww_and_tombstone_semantics():

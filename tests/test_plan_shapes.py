@@ -2,7 +2,10 @@
 operator layer must have the shapes the 100 TB story depends on —
 filters/projections pushed into the parquet scan, dims broadcast,
 partial aggregation before shuffles, top-k as TakeOrderedAndProject,
-anti/semi joins planned as joins (not subquery re-scans).
+anti/semi joins planned as joins (not subquery re-scans). The
+LakeTable read path is pinned too: one parquet scan per schema version
+over any number of delta dirs, no Spark job to plan a read, and one
+shuffle for a merge-on-read append.
 
 These tests pin the *plan*, the oracle tests pin the *values*."""
 
@@ -11,6 +14,7 @@ from __future__ import annotations
 import contextlib
 import io
 
+import pytest
 from pyspark.sql import functions as F
 
 from medallion_etl_spark.operators.dedup_text import exact_dedup_docs
@@ -277,3 +281,111 @@ def test_approx_percentile_gate_is_one_pruned_pass(spark, sf_small):
     read_schema = p.split("ReadSchema", 1)[1].splitlines()[0]
     assert "n_chars" in read_schema and "text" not in read_schema
     assert plan(df, mode="simple").count("Exchange") == 1
+
+
+# ---- LakeTable read path ---------------------------------------------------
+
+_EVENTS = "lsn long, op string, doc_id string, tokens array<int>, n_tok int, source string"
+_DELTAS = 8
+
+
+def _mor_apply(spark, table, batch_id, lsn0, write_mode="mor"):
+    from medallion_etl_spark.cdc.apply import apply_batch
+    from medallion_etl_spark.cdc.table import LakeTable
+
+    # 40 keys: every one of the 4 buckets is touched by every batch
+    rows = [(lsn0 + i, "U", f"k{i}", [batch_id], 1, "s") for i in range(40)]
+    apply_batch(
+        spark, table, spark.createDataFrame(rows, _EVENTS),
+        batch_id=batch_id, lsn_lo=lsn0, lsn_hi=lsn0 + 39, write_mode=write_mode,
+    )
+    return LakeTable.load(table.root)
+
+
+@pytest.fixture(scope="module")
+def mor_table(spark, tmp_path_factory):
+    """4 buckets, each a base dir plus 8 merge-on-read delta dirs."""
+    from medallion_etl_spark.cdc.table import LakeTable
+
+    table = LakeTable.create(str(tmp_path_factory.mktemp("plan_mor") / "t"), n_buckets=4)
+    table = _mor_apply(spark, table, 0, 0, write_mode="cow")
+    for b in range(1, _DELTAS + 1):
+        table = _mor_apply(spark, table, b, 100 * b)
+    assert [len(e["deltas"]) for e in table.meta["buckets"].values()] == [_DELTAS] * 4
+    return table
+
+
+@contextlib.contextmanager
+def _spark_jobs(spark):
+    """Collects the ids of the Spark jobs the body launched."""
+    sc = spark.sparkContext
+    group = "plan-shape-pin"
+    sc.setJobGroup(group, "jobs launched while planning a read")
+    ids: list[int] = []
+    try:
+        yield ids
+    finally:
+        ids.extend(sc.statusTracker().getJobIdsForGroup(group))
+        sc.setLocalProperty("spark.jobGroup.id", None)
+
+
+@pytest.mark.smoke
+def test_mor_read_is_one_parquet_scan_per_schema_version(spark, mor_table):
+    """36 source dirs (4 buckets x (base + 8 deltas)), one schema
+    version: the folding read and the COW merge's raw base read each
+    plan ONE parquet scan, not one per delta ordinal."""
+    svs = {
+        s["schema_version"]
+        for e in mor_table.meta["buckets"].values()
+        for s in [e, *e["deltas"]]
+    }
+    assert svs == {mor_table.schema_version}
+    for df in (
+        mor_table.read(spark),
+        mor_table.read(spark, raw=True, merge_deltas=False),
+        mor_table.read(spark, columns=["source"]),
+    ):
+        assert plan(df, mode="simple").count("FileScan parquet") == len(svs)
+    # the fold still reaches every ordinal: the newest delta wins
+    assert {r["tokens"][0] for r in mor_table.read(spark).collect()} == {_DELTAS}
+
+
+@pytest.mark.smoke
+def test_building_a_read_launches_no_spark_job(spark, mor_table):
+    """File listing of the 36 dirs runs on the driver (session conf
+    parallelPartitionDiscovery.threshold), and a string-key lookup
+    computes its bucket ids on the driver: planning costs no job."""
+    with _spark_jobs(spark) as jobs:
+        mor_table.read(spark)
+        mor_table.read(spark, raw=True, merge_deltas=False)
+        mor_table.lookup(spark, ["k1", "k2", "nope"])
+    assert jobs == []
+
+
+@pytest.mark.smoke
+def test_default_mor_apply_plans_one_exchange_over_the_chunk(spark, mor_table, monkeypatch):
+    """apply_batch's shipped dedup strategy (agg) reduces the chunk in
+    ONE shuffle before the delta append; salted would plan two."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    from medallion_etl_spark.cdc.apply import apply_batch
+    from medallion_etl_spark.cdc.table import LakeTable
+
+    written = []
+    real_parquet = DataFrameWriter.parquet
+
+    def recording_parquet(self, path, *args, **kwargs):
+        written.append(self._df)
+        return real_parquet(self, path, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", recording_parquet)
+    clone = mor_table.clone_to(mor_table.root + "-exchange-pin")
+    rows = [(10_000 + i, "U", f"k{i}", [99], 1, "s") for i in range(40)]
+    res = apply_batch(
+        spark, clone, spark.createDataFrame(rows, _EVENTS),
+        batch_id=99, lsn_lo=10_000, lsn_hi=10_039, write_mode="mor",
+    )
+    assert res["write_mode"] == "mor"
+    assert len(written) == 1
+    assert plan(written[0], mode="simple").count("Exchange") == 1
+    assert {r["tokens"][0] for r in LakeTable.load(clone.root).read(spark).collect()} == {99}
