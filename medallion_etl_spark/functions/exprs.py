@@ -11,6 +11,8 @@ for the same byte-equality reason, setup_medallion.sql:490-519.)
 
 from __future__ import annotations
 
+from typing import Callable
+
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -40,6 +42,26 @@ def davg_sql(expr: str, alias: str) -> str:
     return (
         f"CAST(SUM(CAST(({expr}) AS DECIMAL(38,6))) AS DOUBLE) / COUNT({expr}) AS {alias}"
     )
+
+
+def let(value: Column, body: Callable[[Column], Column]) -> Column:
+    """Evaluate ``value`` once per row and pass it to ``body`` as a
+    lambda variable: ``let(words, lambda w: ...)``.
+
+    Why it exists: Spark evaluates higher-order-function lambdas
+    (transform, filter, aggregate, ...) interpreted, and Catalyst shares
+    no subexpression across or inside them. An outer row expression
+    that a lambda reads — ``F.slice(words, i, k)`` with ``words =
+    split(lower(text))`` — is re-evaluated for every array element, and
+    every further use of the same array (eight MinHash transforms, a
+    size, a min) copies the whole expression again: O(uses x n x |text|)
+    per row where O(n) was meant. Binding the array once as the single
+    element of a one-element ``transform`` makes every use read the
+    lambda variable instead. It stays a JVM-side ``Column`` (no UDF,
+    no extra projection) and returns exactly what ``body(value)``
+    returns, NULL ``value`` included.
+    """
+    return F.element_at(F.transform(F.array(value), body), 1)
 
 
 def safe_cast(col, dtype: str) -> Column:

@@ -7,6 +7,10 @@ left-to-right folds, similarity values rounded to 6 decimals).
 Scale shapes (the part that matters at 100 TB):
 - exact dedup: one hash aggregate on a 32-char digest — shuffle carries
   (digest, doc_id, n_chars) only, never the text.
+- per-document cost is linear in its words: every array a lambda
+  reads (the word split, the shingle digests) is bound once per row
+  with functions/exprs.let, so a shingle, window or hash lambda reads a
+  lambda variable, never a re-split of the text.
 - n-gram Jaccard / MinHash: candidate generation is an equi-join on
   shingle / band-bucket keys, i.e. the classic "shingle -> band ->
   bucket-join" plan; stop-shingles (document frequency > DF_CAP) are
@@ -26,6 +30,7 @@ from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..functions.exprs import let
 from ..sources.readers import load_table as T
 from .util import persist_replacing, spread
 
@@ -43,17 +48,26 @@ def _words(col: str = "text") -> F.Column:
     return F.split(F.lower(col), " ")
 
 
+def _windows(words: F.Column, k: int) -> F.Column:
+    """md5 digests of every overlapping k-word window of a BOUND words
+    array (a lambda variable from ``let``), in position order. Caller
+    guarantees size(words) >= k."""
+    return F.transform(
+        F.sequence(F.lit(1), F.size(words) - (k - 1)),
+        lambda i: F.md5(F.encode(F.concat_ws(" ", F.slice(words, i, k)), "UTF-8")),
+    )
+
+
+def _grams(words: F.Column, k: int) -> F.Column:
+    """Word k-gram digests of a BOUND words array; a document shorter
+    than k words is one gram, the digest of all its words."""
+    whole = F.array(F.md5(F.encode(F.concat_ws(" ", words), "UTF-8")))
+    return F.when(F.size(words) >= k, _windows(words, k)).otherwise(whole)
+
+
 def _shingles(words: F.Column, k: int = 3) -> F.Column:
     """Distinct word k-gram shingles, md5-hashed to 32-char digests."""
-    n = F.size(words)
-    grams = F.when(
-        n >= k,
-        F.transform(
-            F.sequence(F.lit(1), n - (k - 1)),
-            lambda i: F.md5(F.encode(F.concat_ws(" ", F.slice(words, i, k)), "UTF-8")),
-        ),
-    ).otherwise(F.array(F.md5(F.encode(F.concat_ws(" ", words), "UTF-8"))))
-    return F.array_distinct(grams)
+    return let(words, lambda w: F.array_distinct(_grams(w, k)))
 
 
 _SHINGLES_SQL = """
@@ -173,13 +187,13 @@ LIMIT {JACCARD_TOPK}
 
 
 def _minhash_sig(shingles: F.Column) -> F.Column:
-    def mh(i: int) -> F.Column:
+    def mh(sh: F.Column, i: int) -> F.Column:
         prefix = F.lit(f"{i}|")
         return F.array_min(
-            F.transform(shingles, lambda s: F.md5(F.encode(F.concat(prefix, s), "UTF-8")))
+            F.transform(sh, lambda s: F.md5(F.encode(F.concat(prefix, s), "UTF-8")))
         )
 
-    return F.array(*[mh(i) for i in range(N_HASHES)])
+    return let(shingles, lambda sh: F.array(*[mh(sh, i) for i in range(N_HASHES)]))
 
 
 def band_buckets(mh: F.Column) -> F.Column:
@@ -303,17 +317,17 @@ def simhash_clusters(spark: SparkSession, sf: str) -> DataFrame:
     hashes = F.transform(
         F.array_distinct(_words()), lambda w: F.md5(F.encode(w, "UTF-8"))
     )
-    def bit(b: int) -> F.Column:
+
+    def bit(hs: F.Column, b: int) -> F.Column:
         pos = b + 1
         total = F.aggregate(
-            hashes,
+            hs,
             F.lit(0),
             lambda acc, h: acc + (F.conv(F.substring(h, pos, 1), 16, 10).cast("int") % 2) * 2 - 1,
         )
         return F.when(total > 0, F.lit("1")).otherwise(F.lit("0"))
 
-    bits = [bit(b) for b in range(SIMHASH_BITS)]
-    sig = F.concat(*bits)
+    sig = let(hashes, lambda hs: F.concat(*[bit(hs, b) for b in range(SIMHASH_BITS)]))
     return (
         docs.select(sig.alias("simhash"), "doc_id")
         .groupBy("simhash")
@@ -466,12 +480,7 @@ def dup_span_stats(spark: SparkSession, sf: str) -> DataFrame:
     docs = spread(spark, T(spark, sf, "documents"))
     words = _words()
     n = F.size(words)
-    wins = F.transform(
-        F.sequence(F.lit(1), n - (DUP_SPAN_K - 1)),
-        lambda i: F.md5(
-            F.encode(F.concat_ws(" ", F.slice(words, i, DUP_SPAN_K)), "UTF-8")
-        ),
-    )
+    wins = let(words, lambda w: _windows(w, DUP_SPAN_K))
     # persisted for the same reason as the shingle frames above: the
     # window-frequency agg and the join-back are both built from it
     flat = persist_replacing(
@@ -557,10 +566,7 @@ def dup_span_removal(docs: DataFrame, k: int = DUP_SPAN_K) -> DataFrame:
     """
     words = _words()
     n = F.size(words)
-    wins = F.transform(
-        F.sequence(F.lit(1), n - (k - 1)),
-        lambda i: F.md5(F.encode(F.concat_ws(" ", F.slice(words, i, k)), "UTF-8")),
-    )
+    wins = let(words, lambda w: _windows(w, k))
     flat = (
         docs.filter(n >= k)
         .select("doc_id", F.posexplode(wins).alias("p0", "w"))

@@ -31,7 +31,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.exprs import md5_bucket, md5_bucket_sql
+from ..functions.exprs import let, md5_bucket, md5_bucket_sql
 from ..sources.readers import load_table as T
 from .util import spread
 
@@ -51,40 +51,47 @@ def doc_repetition_stats(spark: SparkSession, sf: str) -> DataFrame:
     # counting them would inflate every fraction (and '' can become the
     # "top word"); same filter the sibling operators apply
     words = F.filter(F.split(F.lower("text"), " "), lambda w: F.length(w) > 0)
-    n = F.size(words)
 
-    dup_word_frac = F.lit(1.0) - F.size(F.array_distinct(words)) / n
+    def fracs(w: F.Column) -> F.Column:
+        n = F.size(w)
+        dup_word_frac = F.lit(1.0) - F.size(F.array_distinct(w)) / n
 
-    # word 2-grams via 1-based element_at over an index sequence
-    grams = F.transform(
-        F.sequence(F.lit(1), n - 1),
-        lambda i: F.concat_ws(" ", F.element_at(words, i), F.element_at(words, i + 1)),
-    )
-    dup_2gram_frac = F.when(
-        n >= 2, F.lit(1.0) - F.size(F.array_distinct(grams)) / F.size(grams)
-    ).otherwise(F.lit(0.0))
-
-    # fraction of tokens equal to the doc's most frequent token:
-    # count occurrences of each DISTINCT word, take the max
-    top_count = F.array_max(
-        F.transform(
-            F.array_distinct(words),
-            lambda w: F.size(F.filter(words, lambda x: x == w)),
+        # word 2-grams via 1-based element_at over an index sequence
+        grams = F.transform(
+            F.sequence(F.lit(1), n - 1),
+            lambda i: F.concat_ws(" ", F.element_at(w, i), F.element_at(w, i + 1)),
         )
-    )
-    top_word_frac = top_count / n
+        dup_2gram_frac = F.when(
+            n >= 2, F.lit(1.0) - F.size(F.array_distinct(grams)) / F.size(grams)
+        ).otherwise(F.lit(0.0))
 
+        # fraction of tokens equal to the doc's most frequent token:
+        # count occurrences of each DISTINCT word, take the max
+        top_count = F.array_max(
+            F.transform(
+                F.array_distinct(w),
+                lambda d: F.size(F.filter(w, lambda x: x == d)),
+            )
+        )
+        return F.struct(
+            n.alias("n_words"),
+            dup_word_frac.alias("dup_word_frac"),
+            dup_2gram_frac.alias("dup_2gram_frac"),
+            (top_count / n).alias("top_word_frac"),
+        )
+
+    # words bound once: the 2-gram and top-word lambdas read the bound
+    # array, not a re-split of the text per position
+    r = docs.select("doc_id", let(words, fracs).alias("r")).select("doc_id", "r.*")
     keep = (
-        (dup_word_frac <= MAX_DUP_WORD_FRAC)
-        & (dup_2gram_frac <= MAX_DUP_2GRAM_FRAC)
-        & (top_word_frac <= MAX_TOP_WORD_FRAC)
+        (F.col("dup_word_frac") <= MAX_DUP_WORD_FRAC)
+        & (F.col("dup_2gram_frac") <= MAX_DUP_2GRAM_FRAC)
+        & (F.col("top_word_frac") <= MAX_TOP_WORD_FRAC)
     )
-    return docs.select(
+    return r.select(
         "doc_id",
-        n.alias("n_words"),
-        F.round(dup_word_frac, 6).alias("dup_word_frac"),
-        F.round(dup_2gram_frac, 6).alias("dup_2gram_frac"),
-        F.round(top_word_frac, 6).alias("top_word_frac"),
+        "n_words",
+        *[F.round(c, 6).alias(c) for c in ("dup_word_frac", "dup_2gram_frac", "top_word_frac")],
         keep.cast("boolean").alias("keep"),
     ).orderBy("doc_id")
 

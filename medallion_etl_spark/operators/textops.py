@@ -22,7 +22,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.exprs import let
 from ..sources.readers import load_table as T
+from .dedup_text import _grams
 from .util import spread
 
 # Markers for the n-gram/stopword language-ID heuristic. The synthetic
@@ -138,17 +140,28 @@ def lang_id_ngram(spark: SparkSession, sf: str) -> DataFrame:
     docs = spread(spark, T(spark, sf, "documents"))
     words = F.split(F.lower("text"), " ")
 
-    def marker_score(markers: list[str]) -> F.Column:
+    def marker_score(w: F.Column, markers: list[str]) -> F.Column:
         arr = F.array(*[F.lit(x) for x in markers])
-        return F.size(F.filter(words, lambda w: F.array_contains(arr, w)))
+        return F.size(F.filter(w, lambda x: F.array_contains(arr, x)))
 
-    scores = {lang: marker_score(markers) for lang, markers in LANG_MARKERS.items()}
+    # one split per doc: the five marker filters read the bound words,
+    # and the argmax below reads the projected score columns
+    scores = let(
+        words,
+        lambda w: F.struct(
+            *[
+                marker_score(w, LANG_MARKERS[lang]).alias(f"score_{lang}")
+                for lang in sorted(LANG_MARKERS)
+            ]
+        ),
+    )
+    scored = docs.select("doc_id", "lang", scores.alias("sc")).select("doc_id", "lang", "sc.*")
     # argmax via max over (score, reversed-lang) structs so ties break
     # toward the alphabetically-first language
     pairs = F.array(
         *[
             F.struct(
-                scores[lang].alias("s"),
+                F.col(f"score_{lang}").alias("s"),
                 F.lit(-ord(lang[0]) * 256 - ord(lang[1])).alias("tie"),
                 F.lit(lang).alias("lang"),
             )
@@ -156,9 +169,9 @@ def lang_id_ngram(spark: SparkSession, sf: str) -> DataFrame:
         ]
     )
     best = F.array_max(pairs)
-    out = docs.select(
+    out = scored.select(
         "doc_id",
-        *[scores[lang].alias(f"score_{lang}") for lang in sorted(LANG_MARKERS)],
+        *[f"score_{lang}" for lang in sorted(LANG_MARKERS)],
         best.getField("lang").alias("lang_pred"),
         F.col("lang").alias("lang_true"),
     )
@@ -211,21 +224,28 @@ SHINGLE = 4
 def doc_fingerprint(spark: SparkSession, sf: str) -> DataFrame:
     docs = spread(spark, T(spark, sf, "documents"))
     words = F.split(F.lower("text"), " ")
-    n = F.size(words)
-    shingles = F.when(
-        n >= SHINGLE,
-        F.transform(
-            F.sequence(F.lit(1), n - (SHINGLE - 1)),
-            lambda i: F.md5(F.encode(F.concat_ws(" ", F.slice(words, i, SHINGLE)), "UTF-8")),
+    # words bound once for the shingle lambda, shingles once for the
+    # three reductions
+    fp = let(
+        words,
+        lambda w: let(
+            _grams(w, SHINGLE),
+            lambda s: F.struct(
+                F.array_min(s).alias("fp_min"),
+                F.array_max(s).alias("fp_max"),
+                F.size(s).alias("n_shingles"),
+            ),
         ),
-    ).otherwise(F.array(F.md5(F.encode(F.concat_ws(" ", words), "UTF-8"))))
-    return docs.select(
-        "doc_id",
-        F.md5(F.encode(F.lower("text"), "UTF-8")).alias("fp_full"),
-        F.array_min(shingles).alias("fp_min"),
-        F.array_max(shingles).alias("fp_max"),
-        F.size(shingles).alias("n_shingles"),
-    ).orderBy("doc_id")
+    )
+    return (
+        docs.select(
+            "doc_id",
+            F.md5(F.encode(F.lower("text"), "UTF-8")).alias("fp_full"),
+            fp.alias("fp"),
+        )
+        .select("doc_id", "fp_full", "fp.*")
+        .orderBy("doc_id")
+    )
 
 
 DOC_FINGERPRINT_SQL = f"""

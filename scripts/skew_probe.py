@@ -58,6 +58,10 @@ def main() -> None:
             )
             write_events_ordered(stream, ev_path, n_files=max(p, 8))
             events = spark.read.parquet(ev_path)
+            # untimed full read of THIS level's freshly written events,
+            # so rep 0 of every level (not only the first) meets them
+            # in the page cache like the later reps do
+            events.write.format("noop").mode("overwrite").save()
 
             if not warmed:
                 # untimed warm-up: the first replay on a fresh JVM pays

@@ -6,6 +6,8 @@ probe must match the full batch probe restricted to the changed set."""
 
 from __future__ import annotations
 
+import hashlib
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -17,6 +19,7 @@ from medallion_etl_spark.operators.dedup_incremental import (
     refresh_signatures,
     token_minhash,
 )
+from medallion_etl_spark.operators.dedup_text import N_HASHES
 from medallion_etl_spark.synth import gen_events
 
 N_EVENTS = 4000
@@ -65,6 +68,49 @@ def _full_recompute(spark, corpus):
         .collect()
     )
     return {r["doc_id"]: tuple(r["mh"]) for r in rows}
+
+
+def _py_token_minhash(tokens):
+    """Independent stdlib reference of token_minhash: tokens render as
+    decimal strings, word 3-gram shingles (a sequence shorter than 3 is
+    one shingle of all its tokens; NULL signs like the empty sequence),
+    md5 hex digests deduplicated, then per hash i the min over shingles
+    of md5("<i>|" + shingle)."""
+    words = [str(t) for t in tokens or []]
+    if len(words) >= 3:
+        grams = [" ".join(words[i : i + 3]) for i in range(len(words) - 2)]
+    else:
+        grams = [" ".join(words)]
+    shingles = {hashlib.md5(g.encode()).hexdigest() for g in grams}
+    return tuple(
+        min(hashlib.md5(f"{i}|{s}".encode()).hexdigest() for s in shingles)
+        for i in range(N_HASHES)
+    )
+
+
+TOKEN_SEQS = {
+    "empty": [],
+    "one": [7],
+    "two": [7, -3],
+    "three": [7, -3, 12],
+    # repeated 3-grams (the 0,1,2 cycle and a run of 5s), negative ids
+    "forty": [0, 1, 2] * 6 + [5] * 8 + [-(j * 37) for j in range(14)],
+    "null": None,
+}
+
+
+def test_token_minhash_matches_stdlib_reference(spark):
+    """token_minhash digest-for-digest against a pure-Python md5 fold,
+    so the expression is checked against something other than itself."""
+    df = spark.createDataFrame(
+        list(TOKEN_SEQS.items()), "name string, tokens array<int>"
+    )
+    got = {
+        r["name"]: tuple(r["mh"])
+        for r in df.select("name", token_minhash(F.col("tokens")).alias("mh")).collect()
+    }
+    assert got == {name: _py_token_minhash(t) for name, t in TOKEN_SEQS.items()}
+    assert len(set(got["forty"])) > 1
 
 
 def test_incremental_equals_full_recompute(spark, built):

@@ -5,7 +5,8 @@ partial aggregation before shuffles, top-k as TakeOrderedAndProject,
 anti/semi joins planned as joins (not subquery re-scans). The
 LakeTable read path is pinned too: one parquet scan per schema version
 over any number of delta dirs, no Spark job to plan a read, and one
-shuffle for a merge-on-read append.
+shuffle for a merge-on-read append. Operators that hand a row's words
+or shingles to lambdas must bind that array once per row.
 
 These tests pin the *plan*, the oracle tests pin the *values*."""
 
@@ -389,3 +390,60 @@ def test_default_mor_apply_plans_one_exchange_over_the_chunk(spark, mor_table, m
     assert len(written) == 1
     assert plan(written[0], mode="simple").count("Exchange") == 1
     assert {r["tokens"][0] for r in LakeTable.load(clone.root).read(spark).collect()} == {99}
+
+
+# Higher-order-function lambdas run interpreted and Catalyst shares no
+# subexpression across or inside them, so a lambda that reads an outer
+# row expression re-evaluates it per element. Each operator below binds
+# its words / shingle arrays once with functions/exprs.let; these pins
+# fail if a rewrite (or an optimizer rule) inlines the array back into
+# a lambda or a second reduction.
+
+
+def _most_in_one_node(df, needle: str) -> tuple[int, int]:
+    """(largest count of ``needle`` in one Project/Generate node, number
+    of such nodes mentioning it) in the optimized logical plan,
+    persisted relations' stored plans included."""
+    p = df._jdf.queryExecution().optimizedPlan().toString()
+    counts = [
+        line.count(needle)
+        for line in p.splitlines()
+        if "Project [" in line or "Generate " in line
+    ]
+    return max(counts, default=0), sum(1 for c in counts if c)
+
+
+_BOUND_WORDS_QUERIES = [
+    "minhash_near_dup_pairs",
+    "ngram_jaccard_topk",
+    "decontaminate_against_benchmark",
+    "simhash_clusters",
+    "dup_span_stats",
+    "dup_span_removal",
+    "doc_fingerprint",
+    "doc_repetition_stats",
+    "lang_id_ngram",
+]
+
+
+@pytest.mark.smoke
+@pytest.mark.parametrize("name", _BOUND_WORDS_QUERIES)
+def test_word_split_is_bound_once_per_projection(spark, sf_small, name):
+    from medallion_etl_spark.operators import collect_queries
+
+    fn, _ = collect_queries()[name]
+    try:
+        most, nodes = _most_in_one_node(fn(spark, sf_small), "split(lower(text")
+    finally:
+        spark.catalog.clearCache()
+    assert nodes >= 1
+    assert most == 1, f"{name}: a projection splits the text {most} times"
+
+
+@pytest.mark.smoke
+def test_token_minhash_binds_the_token_strings_once(spark):
+    from medallion_etl_spark.operators.dedup_incremental import token_minhash
+
+    df = spark.createDataFrame([([1, 2, 3, 4],)], "tokens array<int>")
+    sig = df.select(token_minhash(F.col("tokens")).alias("mh"))
+    assert _most_in_one_node(sig, "transform(tokens") == (1, 1)
