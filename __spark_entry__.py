@@ -24,7 +24,7 @@ from medallion_etl_spark.operators import collect_queries  # noqa: E402
 
 
 def entry(spark: SparkSession) -> DataFrame:
-    """Flagship: chunked CDC replay (LWW dedup -> salted merge ->
+    """Flagship: chunked CDC replay (fused LWW dedup + merge ->
     exactly-once commit) of the sf0.001 events stream, returning the
     final table state."""
     from medallion_etl_spark.operators.cdc_query import cdc_replay_latest_state

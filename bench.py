@@ -154,13 +154,12 @@ def run_cdc(
     n_events: int,
     *,
     n_chunks: int = 4,
-    strategy: str = "agg",
     merge_path: str = "auto",
     keep_tmp: bool = False,
     events_path: str | None = None,
 ) -> dict:
     """End-to-end replay throughput: synth stream (written to parquet,
-    untimed) -> chunked replay (LWW dedup -> salted merge -> atomic
+    untimed) -> chunked replay (fused LWW dedup + merge -> atomic
     commit) into a fresh LakeTable, timed wall-clock. ``events_path``
     reuses an already-written stream (generation is deterministic and
     untimed — re-writing it per rep is pure setup waste)."""
@@ -185,10 +184,7 @@ def run_cdc(
         table = LakeTable.create(os.path.join(tmp, "table"), n_buckets=64, schema_version=1)
         chunk = max(n_events // n_chunks, 1)
         t0 = time.perf_counter()
-        res = replay(
-            spark, events, table, chunk_size=chunk,
-            dedup_strategy=strategy, merge_path=merge_path,
-        )
+        res = replay(spark, events, table, chunk_size=chunk, merge_path=merge_path)
         wall = time.perf_counter() - t0
         final_rows = LakeTable.load(os.path.join(tmp, "table")).read(spark).count()
         return {

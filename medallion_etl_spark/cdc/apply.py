@@ -17,10 +17,10 @@ block resurrection by stale lower-LSN updates.
 Scale shape:
 - Dedup and merge are FUSED: the chunk's LWW dedup and the merge
   against base are the same max-LSN-per-key reduction, so it runs once
-  over base ∪ raw-chunk (skew-aware, see dedup.py — the default 'agg'
-  strategy's map-side partial aggregate collapses a hot key to one row
-  per input partition before the shuffle). One full shuffle per chunk
-  instead of dedup-shuffle + merge-shuffle.
+  over base ∪ raw-chunk (skew-safe, see dedup.py — its map-side partial
+  aggregate collapses a hot key to one row per input partition before
+  the shuffle). One full shuffle per chunk instead of dedup-shuffle +
+  merge-shuffle.
 - Only buckets containing changed keys are read back and rewritten
   (bucket-granular copy-on-write) — work per batch is
   O(|batch| + |touched buckets|), never O(|table|).
@@ -49,6 +49,10 @@ from .table import (
     entry_signature,
     map_bucket_dirs,
 )
+
+# merge_path='auto' broadcasts the (key, _ord) winners while their
+# estimated hash relation stays under this many bytes
+BROADCAST_LIMIT_BYTES = 256 << 20
 
 
 def _rebase_safe(
@@ -202,10 +206,7 @@ def apply_batch(
     lsn_lo: int,
     lsn_hi: int,
     *,
-    dedup_strategy: str = "agg",
-    n_salts: int = 16,
     merge_path: str = "auto",
-    broadcast_limit_bytes: int = 256 << 20,
     precomputed_stats: list[dict] | None = None,
     precomputed_stats_n_buckets: int | None = None,
     write_mode: str = "cow",
@@ -219,13 +220,11 @@ def apply_batch(
 
     ``merge_path``: 'broadcast' selects winners with a broadcast
     semi-join (payload never shuffles — right when the chunk's key set
-    fits the driver); 'agg' uses the shuffle-based LWW reduction
-    (``dedup_strategy`` picks the physical plan: ``agg``, the default
-    everywhere — see dedup.py — or ``window``/``salted``; the MOR
-    append's chunk dedup uses it too); 'auto' broadcasts
-    when the estimated (key, _ord) hash relation stays under
-    ``broadcast_limit_bytes`` (default 256 MiB) — a byte bound, since
-    what actually lands on the driver and every executor is a hash
+    fits the driver); 'agg' uses the shuffle-based LWW reduction of
+    dedup.py (the MOR append's chunk dedup uses it too); 'auto'
+    broadcasts when the estimated (key, _ord) hash relation stays under
+    ``BROADCAST_LIMIT_BYTES`` (256 MiB) — a byte bound, since what
+    actually lands on the driver and every executor is a hash
     relation, not a row count.
 
     ``write_mode``: 'cow' (default) rewrites every touched bucket —
@@ -387,8 +386,7 @@ def apply_batch(
     if mode == "mor":
         return _apply_mor(
             spark, table, chunk_rows, stats, batch_id, lsn_lo, lsn_hi,
-            target_sv=target_sv, dedup_strategy=dedup_strategy,
-            n_salts=n_salts, timings=timings, mark=mark,
+            target_sv=target_sv, timings=timings, mark=mark,
             allow_rebase=allow_rebase,
         )
     if mode != "cow":
@@ -422,7 +420,7 @@ def apply_batch(
     if merge_path == "broadcast" or (
         merge_path == "auto"
         and broadcast_est_bytes is not None
-        and broadcast_est_bytes <= broadcast_limit_bytes
+        and broadcast_est_bytes <= BROADCAST_LIMIT_BYTES
     ):
         # Winner selection via broadcast semi-join: the winners pass
         # reads ONLY (key, _ord) — parquet column pruning keeps token
@@ -457,11 +455,12 @@ def apply_batch(
         merged = merged.dropDuplicates([key])
     else:
         # Fallback when the chunk's key set is too large to broadcast:
-        # shuffle-based LWW reduction (strategy-selectable, incl. the
-        # explicitly salted path for pathological hot keys).
+        # the shuffle-based LWW reduction; `_ord` only ranks, so it
+        # stays out of the carried payload.
         merged = dedup_latest(
-            combined, keys=(key,), order_col="_ord", strategy=dedup_strategy, n_salts=n_salts
-        ).drop("_ord")
+            combined, keys=(key,), order_col="_ord",
+            payload=[c for c in combined.columns if c not in (key, "_ord")],
+        )
     merged = merged.withColumn("_bucket", bucket_expr(key, table.n_buckets))
 
     rel_dir = table.new_data_dir()
@@ -521,8 +520,6 @@ def _apply_mor(
     lsn_hi: int,
     *,
     target_sv: int,
-    dedup_strategy: str,
-    n_salts: int,
     timings: dict,
     mark,
     allow_rebase: bool,
@@ -542,9 +539,9 @@ def _apply_mor(
     applies at write time."""
     key = table.key_col
     changed = sorted(int(r["_bucket"]) for r in stats)
-    deduped = dedup_latest(
-        chunk_rows, keys=(key,), order_col="_lsn", strategy=dedup_strategy, n_salts=n_salts
-    ).withColumn("_bucket", bucket_expr(key, table.n_buckets))
+    deduped = dedup_latest(chunk_rows, keys=(key,), order_col="_lsn").withColumn(
+        "_bucket", bucket_expr(key, table.n_buckets)
+    )
 
     rel_dir = table.new_data_dir()
     out_dir = os.path.join(table.root, rel_dir)

@@ -4,98 +4,56 @@ highest LSN.
 Reference analog: ``DISTINCT ON (id_personal, id_sucursal) ... ORDER BY
 id DESC`` (reference staff_transformer.py:61-81) — the bronze SERIAL id
 is the LSN. This module is the Spark-native re-expression the
-north_rule names: "last-writer-wins dedup via window-over-LSN per key".
+north_rule names: "last-writer-wins dedup via max-LSN per key".
 
-Three physical strategies, same semantics (property-tested equal):
+The one rule: ``groupBy(keys).agg(max_by(struct(payload), order))``.
+Every LWW reduction in the engine is this call — the COW shuffle merge
+(order ``_ord``), the MOR chunk dedup (``_lsn``) and the read-side fold
+of base ∪ deltas (``struct(_lsn, _didx)``).
 
-``window``   row_number() over (partition by keys order by lsn desc).
-             Simple, but a hot key forces one task to sort that key's
-             entire event set — O(hot) on a single core.
+Why it is skew-safe: LWW has a combiner, so Spark plans a partial
+(map-side) aggregate before the shuffle and each input partition
+reduces a hot key to ONE row before any data moves. The hot key's
+reducer receives ~n_map_tasks rows at any skew (pinned by
+tests/test_plan_shapes.py). BENCH/skew.json (8M events, up to every
+event on ONE key, local[8]) measured it against the two alternatives
+the engine used to ship: a ``row_number()`` window (its single hot
+task sorts the whole hot group, linear in the hot key) and explicit
+two-phase salting (a second full shuffle for protection the combiner
+already gives, 23–39% slower at every skew level).
 
-``agg``      groupBy(keys).agg(max_by(struct(payload), lsn)). Spark
-             plans a partial (map-side) aggregate before the shuffle,
-             so each input partition reduces a hot key to ONE row
-             before any data moves — the built-in answer to skew.
-
-``salted``   explicit two-phase: phase 1 groups by (keys, salt) where
-             salt = pmod(xxhash64(lsn), n_salts) — the hot key's rows
-             spread over ``n_salts`` reducers; phase 2 reduces the
-             ≤ n_salts survivors per key. This is the explicit-salting
-             path BASELINE.json's north_rule requires; at 10^10 events
-             with a pathological hot doc_id it bounds any single
-             reducer's work to |hot| / n_salts.
-
-Ties are impossible by construction (LSNs unique); all strategies also
-break hypothetical ties identically (max_by on a struct with lsn first;
-window orders by lsn desc) so the result is deterministic either way.
-
-Measured (BENCH/skew.json, 8M events, 90% on ONE key, local[8],
-warm-up + best-of-2): window 7.4 s, agg 8.3 s, salted 11.1 s. The
-combiner makes ``agg`` skew-immune — its hot-key reducer sees
-O(n_partitions) rows at ANY skew, where window's single task grows
-linearly with the hot key (survivable at 8M, not at 10^10) — while
-salting pays a second full shuffle for protection the combiner
-already provides. Hence ``agg`` is the default everywhere — here,
-``apply_batch()``, ``replay()``, ``stream_replay``, the replay CLI and
-bench.py — and ``salted`` is reserved for combiner-less reductions
-(full-ordering window ops, collect-style aggregates).
+Ties: equal order values resolve to an arbitrary one of the tied rows.
+The callers make them impossible (``_ord``, ``(_lsn, _didx)``) or
+harmless (the MOR chunk's redelivered copies are identical rows).
 """
 
 from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-
-
-def _payload_cols(df: DataFrame, keys: Sequence[str]) -> list[str]:
-    return [c for c in df.columns if c not in keys]
 
 
 def dedup_latest(
     df: DataFrame,
     keys: Sequence[str] = ("doc_id",),
-    order_col: str = "lsn",
-    strategy: str = "agg",
-    n_salts: int = 16,
+    order_col: str | Column = "lsn",
+    payload: Sequence[str] | None = None,
 ) -> DataFrame:
-    """Return one row per key: the one with the highest ``order_col``.
+    """Return one row per key: the one with the highest ``order_col``
+    (a column name or an expression over ``df``'s columns).
 
-    Output columns == input columns (keys first), independent of
-    strategy.
+    Output columns: ``keys``, then ``payload`` — by default every other
+    input column, in input order. Columns that only rank rows (a
+    tie-break ordinal, say) are left out of ``payload`` so the
+    aggregate buffer does not carry them.
     """
     keys = list(keys)
-    payload = _payload_cols(df, keys)
-    if strategy == "window":
-        w = Window.partitionBy(*keys).orderBy(F.col(order_col).desc())
-        return (
-            df.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1)
-            .drop("_rn")
-            .select(*keys, *payload)
-        )
-    if strategy == "agg":
-        latest = df.groupBy(*keys).agg(
-            F.max_by(F.struct(*[F.col(c) for c in payload]), F.col(order_col)).alias("_latest")
-        )
-        return latest.select(*keys, *[F.col(f"_latest.{c}").alias(c) for c in payload])
-    if strategy == "salted":
-        salt = F.pmod(F.xxhash64(F.col(order_col)), F.lit(n_salts)).alias("_salt")
-        phase1 = (
-            df.withColumn("_salt", salt)
-            .groupBy(*keys, "_salt")
-            .agg(
-                F.max_by(
-                    F.struct(F.col(order_col), *[F.col(c) for c in payload if c != order_col]),
-                    F.col(order_col),
-                ).alias("_latest")
-            )
-        )
-        inner = [order_col] + [c for c in payload if c != order_col]
-        phase2 = phase1.groupBy(*keys).agg(
-            F.max_by(F.col("_latest"), F.col(f"_latest.{order_col}")).alias("_latest")
-        )
-        out = phase2.select(*keys, *[F.col(f"_latest.{c}").alias(c) for c in inner])
-        return out.select(*keys, *payload)
-    raise ValueError(f"unknown dedup strategy: {strategy!r}")
+    if payload is None:
+        payload = [c for c in df.columns if c not in keys]
+    order = F.col(order_col) if isinstance(order_col, str) else order_col
+    latest = df.groupBy(*keys).agg(
+        F.max_by(F.struct(*[F.col(c) for c in payload]), order).alias("_latest")
+    )
+    return latest.select(*keys, *[F.col(f"_latest.{c}").alias(c) for c in payload])

@@ -47,8 +47,6 @@ def replay(
     table: LakeTable,
     *,
     chunk_size: int = 1_000_000,
-    dedup_strategy: str = "agg",
-    n_salts: int = 16,
     merge_path: str = "auto",
     write_mode: str = "cow",
     mor_max_deltas: int = 8,
@@ -59,8 +57,6 @@ def replay(
 ) -> dict:
     """Replay all not-yet-committed LSN chunks of ``events`` into
     ``table``. ``max_batches`` lets tests simulate a mid-replay kill.
-    ``dedup_strategy`` is passed to ``apply_batch``; its default,
-    ``agg``, is the default everywhere (see dedup.py).
 
     ``on_malformed`` (see quarantine.py): 'fail' raises before anything
     is applied if any event has a NULL lsn/key or an op outside
@@ -383,8 +379,6 @@ def replay(
                 batch_id,
                 lo,
                 hi,
-                dedup_strategy=dedup_strategy,
-                n_salts=n_salts,
                 merge_path=merge_path,
                 write_mode=write_mode,
                 mor_max_deltas=mor_max_deltas,

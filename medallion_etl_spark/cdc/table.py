@@ -37,6 +37,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..schemas import DOCS_SCHEMAS
+from .dedup import dedup_latest
 from .evolve import aligned_cols
 
 # v2: bucket function changed xxhash64 -> murmur3 (F.hash); a v1
@@ -280,6 +281,17 @@ def _source_ordinal(srcs: list[tuple[str, int]]) -> F.Column:
         ordinals[parent],
         F.raise_error(F.concat(F.lit("file outside the read's sources: "), path)),
     )
+
+
+def _fsync_dir(path: str) -> None:
+    """Make the renames inside ``path`` durable: a rename lives in the
+    directory, so fsyncing the renamed file alone can lose it on power
+    loss."""
+    fd = os.open(path, os.O_RDONLY)
+    try:
+        os.fsync(fd)
+    finally:
+        os.close(fd)
 
 
 def retry_on_fork_rewind(apply_fn, on_retry=None, *, attempts: int = 3):
@@ -816,24 +828,20 @@ class LakeTable:
         return out.filter(~F.coalesce(F.col("_deleted"), F.lit(False))).drop(*INTERNAL_COLS)
 
     def _merge_sources(self, df: DataFrame) -> DataFrame:
-        """Read-side LWW merge of base + delta rows to one row per key:
-        winner = max ``(_lsn, _didx)``. Same-LSN ties are redelivered
-        copies of one event (identical rows); ``_didx`` resolves them
-        toward the newest append, mirroring the COW merge's
-        chunk-wins-tie convention. ``max_by(struct)`` keeps the
-        map-side partial aggregate (skew-immune, see dedup.py)."""
-        key = self.key_col
+        """Read-side LWW fold of base + delta rows to one row per key,
+        with the engine's one LWW reduction (dedup.py, skew-safe by its
+        map-side partial aggregate): winner = max ``(_lsn, _didx)``.
+        Same-LSN ties are redelivered copies of one event (identical
+        rows); ``_didx`` resolves them toward the newest append,
+        mirroring the COW merge's chunk-wins-tie convention. ``_didx``
+        only ranks, so it stays out of the carried payload."""
         cols = [c for c in df.columns if c != "_didx"]
-        payload = [c for c in cols if c != key]
-        winner = df.groupBy(key).agg(
-            F.max_by(
-                F.struct(*[F.col(c) for c in payload]),
-                F.struct(F.col("_lsn"), F.col("_didx")),
-            ).alias("_latest")
-        )
-        return winner.select(
-            *[F.col(c) if c == key else F.col(f"_latest.{c}").alias(c) for c in cols]
-        )
+        return dedup_latest(
+            df,
+            keys=(self.key_col,),
+            order_col=F.struct(F.col("_lsn"), F.col("_didx")),
+            payload=[c for c in cols if c != self.key_col],
+        ).select(*cols)
 
     def read_changes(
         self,
@@ -2150,9 +2158,11 @@ class LakeTable:
             f.flush()
             os.fsync(f.fileno())
         os.replace(vtmp, os.path.join(md_dir, name))
+        _fsync_dir(md_dir)  # durable before CURRENT can name it
         tmp = os.path.join(md_dir, "CURRENT.tmp")
         with open(tmp, "w") as f:
             f.write(name)
             f.flush()
             os.fsync(f.fileno())
         os.replace(tmp, os.path.join(md_dir, "CURRENT"))
+        _fsync_dir(md_dir)

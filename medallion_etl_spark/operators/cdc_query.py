@@ -3,11 +3,11 @@
 Interprets the driver's ``events`` table as a change stream —
 ``event_id`` is the LSN, ``user_id`` keys the doc, ``event_type =
 'error'`` means delete — builds token payloads deterministically from
-the row values, replays it chunked through the LakeTable (LWW dedup ->
-salted merge -> manifest commit), and returns the final table state.
+the row values, replays it chunked through the LakeTable (fused LWW
+dedup + merge -> manifest commit), and returns the final table state.
 The DuckDB oracle expresses the same semantics as one window query, so
 the driver's correctness gate exercises the ENTIRE engine spine:
-scan -> shuffle -> window/agg -> merge -> atomic commit -> read back.
+scan -> shuffle -> max-LSN agg -> merge -> atomic commit -> read back.
 """
 
 from __future__ import annotations
@@ -129,11 +129,9 @@ def _replay_flagship(
 
 def cdc_replay_latest_state(spark: SparkSession, sf: str) -> DataFrame:
     # merge_path="agg" so the driver's correctness gate exercises
-    # the explicitly-salted shuffle dedup (auto would pick the
-    # broadcast path on a stream this small)
-    return _replay_flagship(
-        spark, sf, "cdc_flagship", dedup_strategy="salted", merge_path="agg"
-    )
+    # the shuffle LWW merge (auto would pick the broadcast path on a
+    # stream this small)
+    return _replay_flagship(spark, sf, "cdc_flagship", merge_path="agg")
 
 
 def cdc_replay_mor_state(spark: SparkSession, sf: str) -> DataFrame:

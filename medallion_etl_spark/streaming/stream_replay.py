@@ -82,8 +82,6 @@ def stream_replay(
     table_root: str,
     checkpoint_dir: str,
     *,
-    dedup_strategy: str = "agg",
-    n_salts: int = 16,
     merge_path: str = "auto",
     write_mode: str = "cow",
     mor_max_deltas: int = 8,
@@ -108,6 +106,14 @@ def stream_replay(
     ``quarantine_dir`` (default ``<table>/_quarantine``) keyed
     ``epoch-N`` and overwritten per epoch, so a replayed epoch stays
     idempotent; 'drop' discards them. Counted in the returned totals.
+
+    ``on_violation`` is the same policy triple for the table's CHECK
+    constraints (see cdc/constraints.py), counted among well-formed
+    rows in the same epoch aggregation: 'fail' (default) fails the
+    query on the first epoch with a violating event; 'quarantine'
+    diverts violating rows (+ ``_reason``) to the epoch's ``…-checks``
+    dir under ``quarantine_dir``, overwritten per epoch; 'drop'
+    discards them. Both count as ``rows_violating`` in the totals.
 
     Returns totals: epochs applied, rows applied.
     """
@@ -197,8 +203,6 @@ def stream_replay(
                 batch_id=stream_batch_id(checkpoint_dir, epoch_id),
                 lsn_lo=int(bounds["lo"]),
                 lsn_hi=int(bounds["hi"]),
-                dedup_strategy=dedup_strategy,
-                n_salts=n_salts,
                 merge_path=merge_path,
                 write_mode=write_mode,
                 mor_max_deltas=mor_max_deltas,

@@ -69,10 +69,10 @@ def gen_events(
     lang, schema_version).
 
     ``hot_fraction`` of events collapse onto ``n_hot`` hot doc_ids —
-    the skew the salted dedup/merge path must absorb. Deletes carry
-    NULL payloads. LSNs are 0..n_events-1, unique and totally ordered;
-    callers may lay the files out in any order (replay sorts/windows by
-    lsn, never by file order).
+    the skew the LWW dedup/merge's map-side partial aggregate must
+    absorb. Deletes carry NULL payloads. LSNs are 0..n_events-1,
+    unique and totally ordered; callers may lay the files out in any
+    order (replay ranks by lsn, never by file order).
     """
     df = spark.range(n_events).withColumnRenamed("id", "lsn")
     lsn = F.col("lsn")

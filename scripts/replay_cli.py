@@ -10,7 +10,7 @@ executors) — parallelism comes entirely from the cluster manager:
         --py-files medallion_etl_spark.zip scripts/replay_cli.py \
         --events /data/change_stream --table /lake/docs \
         [--streaming --checkpoint /lake/_ckpt/docs] \
-        [--chunk-size 100000000] [--strategy agg|salted|window]
+        [--chunk-size 100000000] [--write-mode cow|mor|auto]
 
 Under spark-submit the submit line is authoritative for master and ALL
 sizing (get_spark sets none of them — builder confs would override
@@ -46,7 +46,6 @@ def main() -> None:
     ap.add_argument("--events", required=True, help="parquet dir of change events")
     ap.add_argument("--table", required=True, help="LakeTable root (created if absent)")
     ap.add_argument("--chunk-size", type=int, default=1_000_000)
-    ap.add_argument("--strategy", default="agg", choices=["agg", "salted", "window"])
     ap.add_argument(
         "--write-mode",
         default="cow",
@@ -68,7 +67,6 @@ def main() -> None:
         help="events violating the table's CHECK constraints: fail the "
         "replay (default), divert to <table>/_quarantine/…-checks, or discard",
     )
-    ap.add_argument("--n-salts", type=int, default=16)
     ap.add_argument("--n-buckets", type=int, default=64)
     ap.add_argument("--parallelism", type=int, default=None)
     ap.add_argument("--streaming", action="store_true")
@@ -91,8 +89,6 @@ def main() -> None:
             args.events,
             args.table,
             args.checkpoint,
-            dedup_strategy=args.strategy,
-            n_salts=args.n_salts,
             write_mode=args.write_mode,
             max_files_per_trigger=args.max_files_per_trigger,
             on_malformed=args.on_malformed,
@@ -105,8 +101,6 @@ def main() -> None:
             events,
             LakeTable.load(args.table),
             chunk_size=args.chunk_size,
-            dedup_strategy=args.strategy,
-            n_salts=args.n_salts,
             write_mode=args.write_mode,
             on_malformed=args.on_malformed,
             on_violation=args.on_violation,

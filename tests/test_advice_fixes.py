@@ -76,25 +76,45 @@ def test_stream_batch_ids_namespaced_by_checkpoint():
     assert stream_batch_id("/tmp/ckpt_a", 0) == a0
 
 
-@pytest.mark.parametrize("merge_path", ["broadcast", "agg"])
+@pytest.mark.parametrize("merge_path", ["broadcast", "agg", "mor"])
 def test_null_key_rows_survive_both_merge_paths(spark, tmp_path, merge_path):
     """Spark does not enforce declared non-nullability on parquet
-    reads, so a NULL doc_id can reach the merge. Both physical paths
-    must agree: NULL keys form one LWW group (null-safe equality),
-    matching the shuffle-agg path's groupBy semantics."""
+    reads, so a NULL doc_id can reach the merge. Both physical COW
+    paths and the merge-on-read append + read fold must agree: NULL
+    keys form one LWW group (null-safe equality), matching the
+    shuffle-agg path's groupBy semantics."""
     table = LakeTable.create(str(tmp_path / f"t_{merge_path}"), n_buckets=4)
-    ev = _events(
-        spark,
-        [
-            _row(0, "I", "a"),
-            _row(1, "I", None),
-            _row(2, "U", None, n_tok=9),  # NULL-key LWW winner
-            _row(3, "I", "b"),
-        ],
-    )
-    apply_batch(
-        spark, table, ev, batch_id=0, lsn_lo=0, lsn_hi=3, merge_path=merge_path
-    )
+    if merge_path == "mor":
+        # a COW base holding a NULL-key row, then a merge-on-read delta
+        # whose chunk carries two more: the append's chunk dedup and
+        # the read's base ∪ delta fold both reduce the NULL group
+        apply_batch(
+            spark, table,
+            _events(spark, [_row(0, "I", "a"), _row(1, "I", None), _row(3, "I", "b")]),
+            batch_id=0, lsn_lo=0, lsn_hi=3,
+        )
+        table = LakeTable.load(table.root)
+        apply_batch(
+            spark, table,
+            _events(spark, [_row(4, "U", None, n_tok=5), _row(5, "U", None, n_tok=9)]),
+            batch_id=1, lsn_lo=4, lsn_hi=5, write_mode="mor",
+        )
+        assert any(
+            e.get("deltas") for e in LakeTable.load(table.root).meta["buckets"].values()
+        )
+    else:
+        ev = _events(
+            spark,
+            [
+                _row(0, "I", "a"),
+                _row(1, "I", None),
+                _row(2, "U", None, n_tok=9),  # NULL-key LWW winner
+                _row(3, "I", "b"),
+            ],
+        )
+        apply_batch(
+            spark, table, ev, batch_id=0, lsn_lo=0, lsn_hi=3, merge_path=merge_path
+        )
     got = (
         LakeTable.load(table.root)
         .read(spark)

@@ -1,6 +1,5 @@
-"""LWW dedup: all three physical strategies produce the identical,
-oracle-correct result on a skewed stream (SURVEY.md §7.4: salted path
-must not change results)."""
+"""LWW dedup: the engine's one max-LSN-per-key reduction produces the
+oracle-correct result on a skewed stream."""
 
 from __future__ import annotations
 
@@ -26,9 +25,8 @@ def _oracle_latest(pdf: pd.DataFrame) -> pd.DataFrame:
     return pdf.sort_values("lsn").drop_duplicates("doc_id", keep="last")
 
 
-@pytest.mark.parametrize("strategy", ["window", "agg", "salted"])
-def test_dedup_matches_oracle(spark, events, strategy):
-    got = dedup_latest(events, strategy=strategy).toPandas()
+def test_dedup_matches_oracle(spark, events):
+    got = dedup_latest(events).toPandas()
     exp = _oracle_latest(events.toPandas())
     g = canon(got[["doc_id", "tokens", "n_tok", "source", "lang"]])
     e = canon(exp[["doc_id", "tokens", "n_tok", "source", "lang"]])
@@ -41,21 +39,9 @@ def test_dedup_matches_oracle(spark, events, strategy):
     assert got_lsn == exp_lsn
 
 
-def test_strategies_agree(spark, events):
-    frames = {
-        s: canon(
-            dedup_latest(events, strategy=s).toPandas()[["doc_id", "tokens", "n_tok", "source"]]
-        )
-        for s in ("window", "agg", "salted")
-    }
-    base = frames["window"]
-    for s in ("agg", "salted"):
-        assert frames[s]["doc_id"].tolist() == base["doc_id"].tolist()
-        assert frames[s]["tokens"].tolist() == base["tokens"].tolist()
-
-
 def test_hot_keys_present(events):
-    """The generator actually produces the skew the salted path targets."""
+    """The generator actually produces the hot-key skew the dedup's
+    map-side partial aggregate absorbs."""
     counts = events.groupBy("doc_id").count().toPandas().set_index("doc_id")["count"]
     hot = counts[counts.index.str.startswith("hot-")]
     cold = counts[counts.index.str.startswith("doc-")]

@@ -129,29 +129,52 @@ def test_manifest_and_lineage(spark, tmp_path, events_path):
     assert (lin[lin["bytes_written"] > 0]["rows_applied"] > 0).all()
 
 
-@pytest.mark.parametrize(
-    "merge_path,strategy",
-    [
-        ("broadcast", "agg"),
-        ("agg", "window"),
-        ("agg", "agg"),
-        ("agg", "salted"),
-    ],
-)
-def test_merge_path_and_strategy_invariance(
-    spark, tmp_path, events_path, events_pdf, merge_path, strategy
-):
-    """Every physical merge plan — broadcast semi-join and all three
-    shuffle dedup strategies — produces the identical final state."""
-    table = LakeTable.create(str(tmp_path / f"t_{merge_path}_{strategy}"), n_buckets=4)
+@pytest.mark.parametrize("merge_path", ["broadcast", "agg"])
+def test_merge_path_invariance(spark, tmp_path, events_path, events_pdf, merge_path):
+    """Both physical merge plans — broadcast semi-join and the shuffle
+    LWW reduction — produce the identical final state."""
+    table = LakeTable.create(str(tmp_path / f"t_{merge_path}"), n_buckets=4)
     events = spark.read.parquet(events_path)
-    replay(
-        spark, events, table, chunk_size=4_000,
-        dedup_strategy=strategy, merge_path=merge_path,
-    )
+    replay(spark, events, table, chunk_size=4_000, merge_path=merge_path)
     assert_frames_equal(
         _read_table(spark, LakeTable.load(table.root)), expected_final_state(events_pdf)
     )
+
+
+def _single_key_stream(spark):
+    """Every event hits one doc_id across 3 chunks of 40 LSNs: a delete
+    closing chunk 1 and re-inserted at the start of chunk 2, a delete
+    and re-insert inside chunk 3, and the max-LSN event delivered three
+    times (a redelivery, twice) inside chunk 3."""
+    from medallion_etl_spark.schemas import EVENTS_SCHEMA
+
+    ops = {0: "I", 79: "D", 80: "I", 110: "D", 111: "I"}
+    rows = [
+        (lsn, ops.get(lsn, "U"), "hot", [lsn, 7], lsn % 13, f"s{lsn}", None, 1)
+        for lsn in range(120)
+    ]
+    rows += [rows[-1], rows[-1]]
+    return spark.createDataFrame(rows, EVENTS_SCHEMA)
+
+
+@pytest.mark.parametrize(
+    "kw",
+    [{"merge_path": "auto"}, {"merge_path": "agg"}, {"write_mode": "mor"}],
+    ids=["auto", "agg", "mor"],
+)
+def test_single_hot_key_reads_back_one_max_lsn_row(spark, tmp_path, kw):
+    """All-skew through the engine: every write path reduces a stream
+    on ONE key to exactly one stored row carrying the max-LSN payload."""
+    table = LakeTable.create(str(tmp_path / "t"), n_buckets=4)
+    replay(spark, _single_key_stream(spark), table, chunk_size=40, **kw)
+    table = LakeTable.load(table.root)
+    if "write_mode" in kw:  # the read folds base ∪ deltas
+        assert any(e.get("deltas") for e in table.meta["buckets"].values())
+    got = table.read(spark, raw=True).collect()
+    assert len(got) == 1
+    r = got[0]
+    assert (r["doc_id"], r["_lsn"], r["_deleted"]) == ("hot", 119, False)
+    assert (list(r["tokens"]), r["n_tok"], r["source"]) == ([119, 7], 119 % 13, "s119")
 
 
 def test_crash_before_commit_leaves_previous_snapshot(spark, tmp_path, events_path, events_pdf):

@@ -117,20 +117,35 @@ def test_whole_stage_codegen_covers_scan_expressions(spark, sf_small):
     assert "WholeStageCodegen" in executed or "*(" in executed
 
 
-def test_lww_dedup_agg_strategy_has_partial_agg(spark, sf_small):
-    """The 'agg' LWW strategy must plan a map-side partial aggregate —
-    that partial reduction is the built-in hot-key defense."""
+def _partial_max_by_before_exchange(df) -> None:
+    """The final max_by sits above the key exchange and the partial
+    max_by below it (simple mode prints the root first)."""
+    lines = plan(df, mode="simple").splitlines()
+
+    def first(needle: str) -> int:
+        return next(i for i, line in enumerate(lines) if needle in line)
+
+    exchange = first("Exchange hashpartitioning")
+    assert first("max_by") < exchange < first("partial_max_by")
+
+
+def test_lww_dedup_agg_strategy_has_partial_agg(spark, sf_small, mor_table):
+    """The LWW reduction must plan a map-side partial aggregate — that
+    partial reduction is the built-in hot-key defense — both in
+    dedup_latest itself and where the read path enforces it: the fold
+    of a delta-carrying bucket's base ∪ deltas."""
     from medallion_etl_spark.cdc.dedup import dedup_latest
 
     ev = load_table(spark, sf_small, "events").select(
         F.col("event_id").alias("lsn"), F.concat(F.lit("u"), F.col("user_id")).alias("doc_id"),
         F.col("value"),
     )
-    p = plan(dedup_latest(ev, keys=("doc_id",), order_col="lsn", strategy="agg"))
     # struct-buffered max_by plans as SortAggregate; the property that
     # matters is the PARTIAL aggregate running before the exchange —
     # that map-side reduction is what absorbs hot keys
-    assert "partial_max_by" in p and "Exchange" in p
+    _partial_max_by_before_exchange(dedup_latest(ev, keys=("doc_id",), order_col="lsn"))
+    assert all(e["deltas"] for e in mor_table.meta["buckets"].values())
+    _partial_max_by_before_exchange(mor_table.read(spark))
 
 
 def test_decontamination_broadcasts_eval_side(spark, sf_small):
