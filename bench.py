@@ -154,7 +154,6 @@ def run_cdc(
     n_events: int,
     *,
     n_chunks: int = 4,
-    merge_path: str = "auto",
     keep_tmp: bool = False,
     events_path: str | None = None,
 ) -> dict:
@@ -184,7 +183,7 @@ def run_cdc(
         table = LakeTable.create(os.path.join(tmp, "table"), n_buckets=64, schema_version=1)
         chunk = max(n_events // n_chunks, 1)
         t0 = time.perf_counter()
-        res = replay(spark, events, table, chunk_size=chunk, merge_path=merge_path)
+        res = replay(spark, events, table, chunk_size=chunk)
         wall = time.perf_counter() - t0
         final_rows = LakeTable.load(os.path.join(tmp, "table")).read(spark).count()
         return {
@@ -205,7 +204,6 @@ def _cdc_only(
     parallelism: int,
     n_events: int,
     n_chunks: int,
-    merge_path: str,
     events_path: str | None = None,
 ) -> None:
     from medallion_etl_spark.session import get_spark
@@ -232,10 +230,9 @@ def _cdc_only(
     )
     # warm-up: pay JVM/codegen JIT before the timed run, else the first
     # chunk's compilation time reads as serial work and skews scaling
-    run_cdc(spark, 100_000, n_chunks=1, merge_path=merge_path)
+    run_cdc(spark, 100_000, n_chunks=1)
     res = run_cdc(
-        spark, n_events, n_chunks=n_chunks, merge_path=merge_path,
-        events_path=events_path,
+        spark, n_events, n_chunks=n_chunks, events_path=events_path,
     )
     res["parallelism"] = parallelism
     print(json.dumps(res))
@@ -248,7 +245,6 @@ def run_scaling(
     n_hi: int,
     *,
     reps: int = 2,
-    merge_path: str = "agg",
     out_path: str = "BENCH/scaling.json",
     cluster_jvms: bool = False,
     executor_mem_mb: int = 16384,
@@ -278,7 +274,7 @@ def run_scaling(
                 env["SPARK_GRAFT_DRIVER_MEM"] = "8g"
             cmd = [sys.executable, os.path.abspath(__file__), "--cdc-only",
                    "--parallelism", str(p), "--events", str(n_events),
-                   "--chunks", "2", "--merge-path", merge_path]
+                   "--chunks", "2"]
             if events_path:
                 # reuse one pre-generated stream across levels/reps —
                 # generation is untimed setup, and at 10^8 events
@@ -314,9 +310,6 @@ def main() -> None:
     ap.add_argument("--parallelism", type=int, default=DEFAULT_CPUS)
     ap.add_argument("--cdc-only", action="store_true")
     ap.add_argument("--chunks", type=int, default=4)
-    # agg for --scaling: the broadcast path's driver-side build is serial
-    # and would misrepresent parallel scaling; agg has no driver component
-    ap.add_argument("--merge-path", default="agg", choices=["auto", "broadcast", "agg"])
     ap.add_argument("--scaling", action="store_true")
     # N vs 4N cores. Default 1v4 — the north-rule pair and the only one
     # fully below this box's ~6-10-core shared-DRAM knee (2v8 and 4v16
@@ -340,13 +333,13 @@ def main() -> None:
     args = ap.parse_args()
 
     if args.cdc_only:
-        _cdc_only(args.parallelism, args.events, args.chunks, args.merge_path,
+        _cdc_only(args.parallelism, args.events, args.chunks,
                   events_path=args.events_path)
         return
     if args.scaling:
         print(json.dumps(run_scaling(
             args.events, args.scale_lo, args.scale_hi,
-            reps=args.reps, merge_path=args.merge_path,
+            reps=args.reps,
             out_path=args.scaling_out,
             cluster_jvms=args.cluster_jvms,
             executor_mem_mb=args.executor_mem_mb,

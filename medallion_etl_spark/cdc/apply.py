@@ -20,7 +20,9 @@ Scale shape:
   over base ∪ raw-chunk (skew-safe, see dedup.py — its map-side partial
   aggregate collapses a hot key to one row per input partition before
   the shuffle). One full shuffle per chunk instead of dedup-shuffle +
-  merge-shuffle.
+  merge-shuffle. Merge-on-read runs the same reduction over the chunk
+  alone and commits its output as delta appends instead of bucket
+  replacements; there is no other merge plan.
 - Only buckets containing changed keys are read back and rewritten
   (bucket-granular copy-on-write) — work per batch is
   O(|batch| + |touched buckets|), never O(|table|).
@@ -49,10 +51,6 @@ from .table import (
     entry_signature,
     map_bucket_dirs,
 )
-
-# merge_path='auto' broadcasts the (key, _ord) winners while their
-# estimated hash relation stays under this many bytes
-BROADCAST_LIMIT_BYTES = 256 << 20
 
 
 def _rebase_safe(
@@ -167,35 +165,13 @@ def _dir_bytes(path: str) -> int:
     return total
 
 
-def _record_write(table, rel_dir, stats, batch_id, mark):
-    """Shared post-write tail of the COW and MOR apply paths: map the
-    freshly written ``_bucket=`` dirs, build the per-bucket lineage
-    rows (bytes from the new dirs), and collect the commit footer
-    stats. Returns ``(new_dirs, rows_applied, fstats, lineage_rows)``
-    — one implementation so the two write paths can never diverge in
-    what a commit records. The lineage rows are only BUILT here; the
-    caller writes them AFTER the manifest commit succeeds, so durable
-    lineage never describes an uncommitted attempt (a racing loser's
-    overwrite, a crash before commit) — a crash in the narrow window
-    after commit loses only the diagnostic row, never invents one."""
-    new_dirs = map_bucket_dirs(table.root, rel_dir)
-    rows_applied = sum(int(r["rows_applied"]) for r in stats)
-    lineage_rows = [
-        {
-            "batch_id": batch_id,
-            "partition_id": int(r["_bucket"]),
-            "lsn_lo": int(r["lsn_lo"]),
-            "lsn_hi": int(r["lsn_hi"]),
-            "rows_applied": int(r["rows_applied"]),
-            "bytes_written": _dir_bytes(os.path.join(table.root, new_dirs[int(r["_bucket"])]))
-            if int(r["_bucket"]) in new_dirs
-            else 0,
-        }
-        for r in stats
-    ]
-    mark("footer_stats")
-    fstats = bucket_footer_stats(table.root, new_dirs)
-    return new_dirs, rows_applied, fstats, lineage_rows
+def check_write_mode(write_mode: str) -> None:
+    """Reject an unknown ``write_mode`` before any Spark job runs, so
+    a typo can neither commit a batch record nor start a replay."""
+    if write_mode not in ("cow", "mor", "auto"):
+        raise ValueError(
+            f"write_mode must be one of ('cow', 'mor', 'auto'), got {write_mode!r}"
+        )
 
 
 def apply_batch(
@@ -206,7 +182,6 @@ def apply_batch(
     lsn_lo: int,
     lsn_hi: int,
     *,
-    merge_path: str = "auto",
     precomputed_stats: list[dict] | None = None,
     precomputed_stats_n_buckets: int | None = None,
     write_mode: str = "cow",
@@ -218,28 +193,26 @@ def apply_batch(
     committed batch_id is a no-op; a crash before commit leaves the
     previous snapshot visible and the batch re-appliable.
 
-    ``merge_path``: 'broadcast' selects winners with a broadcast
-    semi-join (payload never shuffles — right when the chunk's key set
-    fits the driver); 'agg' uses the shuffle-based LWW reduction of
-    dedup.py (the MOR append's chunk dedup uses it too); 'auto'
-    broadcasts when the estimated (key, _ord) hash relation stays under
-    ``BROADCAST_LIMIT_BYTES`` (256 MiB) — a byte bound, since what
-    actually lands on the driver and every executor is a hash
-    relation, not a row count.
+    Both write modes run the same kernel — one ``dedup_latest``
+    reduction, one bucket-partitioned write, one validated commit —
+    and differ only in the reduction's input and the commit's
+    arguments.
 
-    ``write_mode``: 'cow' (default) rewrites every touched bucket —
+    ``write_mode``: 'cow' (default) reduces base ∪ chunk of every
+    touched bucket and commits the result as bucket replacements —
     write cost O(|batch| + |touched buckets|), reads stay merge-free.
-    'mor' (merge-on-read, the Iceberg MOR analog) LWW-dedups the chunk
-    alone and APPENDS one delta dir per touched bucket — write cost
-    O(|batch|) regardless of bucket size, and readers fold base ∪
-    deltas per key until the next compaction/COW apply rewrites the
-    bucket (which drops its deltas). 'auto' picks 'mor' when the chunk
-    is small against its touched base (< 1/4 of stored rows, known
-    from metadata) AND no touched bucket would exceed
+    'mor' (merge-on-read, the Iceberg MOR analog) reduces the chunk
+    alone and commits it as one delta dir APPENDED per touched bucket
+    — write cost O(|batch|) regardless of bucket size, and readers fold
+    base ∪ deltas per key until the next compaction/COW apply rewrites
+    the bucket (which drops its deltas). 'auto' picks 'mor' when the
+    chunk is small against its touched base (< 1/4 of stored rows,
+    known from metadata) AND no touched bucket would exceed
     ``mor_max_deltas`` stacked deltas — the cap bounds read
     amplification by forcing a folding COW apply, the self-regulating
     equivalent of Iceberg's delete-file compaction trigger.
     """
+    check_write_mode(write_mode)
     timings: dict[str, float] = {}
     t_last = time.perf_counter()
 
@@ -361,14 +334,11 @@ def apply_batch(
         )
 
     chunk_rows = to_storage_layout(chunk, F.col("lsn"), F.col("op") == "D")
-
-    # both the auto write-mode gate and the COW broadcast gate need
-    # these; compute the metadata passes once
-    total_events = sum(int(r["rows_applied"]) for r in stats)
-    base_rows = table.bucket_rows(changed)
+    rows_applied = sum(int(r["rows_applied"]) for r in stats)
 
     mode = write_mode
     if mode == "auto":
+        base_rows = table.bucket_rows(changed)
         stacked = max(
             (
                 len(table.meta["buckets"].get(str(b), {}).get("deltas", []))
@@ -379,194 +349,78 @@ def apply_batch(
         mode = (
             "mor"
             if base_rows is not None
-            and total_events * 4 < base_rows
+            and rows_applied * 4 < base_rows
             and stacked < mor_max_deltas
             else "cow"
         )
     if mode == "mor":
-        return _apply_mor(
-            spark, table, chunk_rows, stats, batch_id, lsn_lo, lsn_hi,
-            target_sv=target_sv, timings=timings, mark=mark,
-            allow_rebase=allow_rebase,
-        )
-    if mode != "cow":
-        raise ValueError(f"unknown write_mode: {write_mode!r}")
-
-    # FUSED dedup + merge: the chunk's own LWW dedup and the merge
-    # against base are the same reduction (max LSN per key), run ONCE
-    # over base ∪ raw-chunk. `_ord = _lsn*2 (+1 for chunk rows)` makes
-    # the order key unique even when a redelivered event already sits
-    # in the table (identical content; chunk side wins the tie).
-    # merge_deltas=False: any MOR delta rows join the union raw — this
-    # reduction IS the fold, so a separate read-side merge shuffle
-    # would be pure waste (same-LSN stored copies are identical rows;
-    # dropDuplicates / max_by collapse them).
-    base = table.read(spark, buckets=changed, raw=True, merge_deltas=False)
-    base_aligned = to_storage_layout(base, F.col("_lsn"), F.col("_deleted"))
-    combined = base_aligned.withColumn("_ord", F.col("_lsn") * 2).unionByName(
-        chunk_rows.withColumn("_ord", F.col("_lsn") * 2 + 1)
-    )
-
-    # the broadcast set is the keys of base∪chunk, so the gate must
-    # count BOTH: chunk events bound the chunk keys, and the metadata's
-    # per-bucket row counts bound the base keys in touched buckets.
-    # bucket_rows() returns None when any touched bucket has no stored
-    # count — unknown size must force the shuffle path, never broadcast
-    # on an understated bound. ~48 bytes/entry models the broadcast
-    # hash relation (key + _ord longs + hash-table overhead).
-    broadcast_est_bytes = (
-        None if base_rows is None else (total_events + base_rows) * 48
-    )
-    if merge_path == "broadcast" or (
-        merge_path == "auto"
-        and broadcast_est_bytes is not None
-        and broadcast_est_bytes <= BROADCAST_LIMIT_BYTES
-    ):
-        # Winner selection via broadcast semi-join: the winners pass
-        # reads ONLY (key, _ord) — parquet column pruning keeps token
-        # arrays out of it entirely — and the semi-join filters losers
-        # map-side, so the payload NEVER crosses a shuffle until the
-        # final bucket write. On a memory-bandwidth-bound box (and at
-        # 100 TB, on the network) this moves ~|table| bytes per chunk
-        # instead of ~|chunk| + |table|.
-        winners = (
-            combined.select(key, "_ord")
-            .groupBy(key)
-            .agg(F.max("_ord").alias("_w_ord"))
-            .withColumnRenamed(key, "_w_key")
-        )
-        # null-safe key equality: groupBy (here and in the agg path)
-        # treats NULL keys as one group, so the semi-join must too —
-        # plain `=` would drop every NULL-key row on this path only,
-        # making 'auto' results depend on which physical path ran.
-        # EqualNullSafe is still a hash-join key, so this stays a
-        # BroadcastHashJoin.
-        merged = combined.join(
-            F.broadcast(winners),
-            F.col(key).eqNullSafe(F.col("_w_key")) & (F.col("_ord") == F.col("_w_ord")),
-            "left_semi",
-        ).drop("_ord")
-        # The semi-join keeps EVERY copy of the winning event if an
-        # at-least-once source delivered it twice in one chunk (same
-        # key, same lsn -> same _ord). dropDuplicates collapses them
-        # (copies are identical rows) and its shuffle doubles as the
-        # clustering the bucket write needs — replacing the plain
-        # repartition, not adding to it.
-        merged = merged.dropDuplicates([key])
+        # merge-on-read: LWW-dedup the chunk ALONE — the base is never
+        # read. Tombstones are appended like any row, and the read-side
+        # fold (table.read / _merge_sources) applies the same
+        # max-LSN-per-key rule, so delete semantics and out-of-order
+        # convergence match COW.
+        merge_input, order_col = chunk_rows, "_lsn"
     else:
-        # Fallback when the chunk's key set is too large to broadcast:
-        # the shuffle-based LWW reduction; `_ord` only ranks, so it
-        # stays out of the carried payload.
-        merged = dedup_latest(
-            combined, keys=(key,), order_col="_ord",
-            payload=[c for c in combined.columns if c not in (key, "_ord")],
+        # FUSED dedup + merge: the chunk's own LWW dedup and the merge
+        # against base are the same reduction (max LSN per key), run
+        # ONCE over base ∪ raw-chunk. `_ord = _lsn*2 (+1 for chunk
+        # rows)` makes the order key unique even when a redelivered
+        # event already sits in the table (identical content; chunk
+        # side wins the tie). merge_deltas=False: any MOR delta rows
+        # join the union raw — this reduction IS the fold, so a
+        # separate read-side merge shuffle would be pure waste
+        # (same-LSN stored copies are identical rows).
+        base = table.read(spark, buckets=changed, raw=True, merge_deltas=False)
+        base_aligned = to_storage_layout(base, F.col("_lsn"), F.col("_deleted"))
+        merge_input = base_aligned.withColumn("_ord", F.col("_lsn") * 2).unionByName(
+            chunk_rows.withColumn("_ord", F.col("_lsn") * 2 + 1)
         )
-    merged = merged.withColumn("_bucket", bucket_expr(key, table.n_buckets))
+        order_col = "_ord"
+    # `_ord` only ranks, so it stays out of the carried payload
+    merged = dedup_latest(
+        merge_input, keys=(key,), order_col=order_col,
+        payload=[c for c in merge_input.columns if c not in (key, "_ord")],
+    ).withColumn("_bucket", bucket_expr(key, table.n_buckets))
 
     rel_dir = table.new_data_dir()
     out_dir = os.path.join(table.root, rel_dir)
-    # No repartition before the write: the merge reduction shuffled on
-    # the key, and bucket_expr is Spark's own hash-partitioning
-    # function, so each bucket is already contained in one task
-    # (n_buckets is a multiple of shuffle partitions) -> one file per
-    # bucket dir for free. An unaligned config degrades to more files
-    # per bucket, never to incorrect data.
+    # No repartition before the write: the reduction shuffled on the
+    # key, and bucket_expr is Spark's own hash-partitioning function,
+    # so each bucket is already contained in one task (n_buckets is a
+    # multiple of shuffle partitions) -> one file per bucket dir for
+    # free. An unaligned config degrades to more files per bucket,
+    # never to incorrect data.
     mark("plan_build")
     merged.write.mode("overwrite").options(**table.writer_options()).partitionBy(
         "_bucket"
     ).parquet(out_dir)
     mark("merge_write")
 
-    # a changed bucket with all rows deleted produces no dir and is
-    # dropped from metadata
-    new_dirs, rows_applied, fstats, lineage_rows = _record_write(table, rel_dir, stats, batch_id, mark)
-    removed = set(changed) - set(new_dirs)
-    rebased = _commit_validated(
-        table,
-        changed,
-        batch_id,
-        (
-            new_dirs,
-            removed,
-            (batch_id, {"lsn_lo": lsn_lo, "lsn_hi": lsn_hi, "rows_applied": rows_applied}),
-        ),
-        dict(
-            schema_version=target_sv if target_sv != table.schema_version else None,
-            bucket_row_counts={b: s[0] for b, s in fstats.items()},
-            bucket_max_lsns={b: s[1] for b, s in fstats.items()},
-        ),
-        mode="cow",
-        allow_rebase=allow_rebase,
-    )
-    mark("commit")
-    write_lineage(spark, table.root, batch_id, lineage_rows)
-    mark("lineage")
-    return {
-        "batch_id": batch_id,
-        "rows_applied": rows_applied,
-        "buckets": changed,
-        "commit_rebased": rebased,
-        "timings": timings,
-    }
-
-
-def _apply_mor(
-    spark: SparkSession,
-    table: LakeTable,
-    chunk_rows: DataFrame,
-    stats: list[dict],
-    batch_id: int,
-    lsn_lo: int,
-    lsn_hi: int,
-    *,
-    target_sv: int,
-    timings: dict,
-    mark,
-    allow_rebase: bool,
-) -> dict:
-    """Merge-on-read apply: LWW-dedup the chunk ALONE (one reduction
-    over |chunk| rows — the base is never read) and append the result
-    as one delta dir per touched bucket. The read path folds deltas
-    per key (table.read / _merge_sources); compaction or any later COW
-    apply rewrites the bucket and drops its deltas.
-
-    Write cost is O(|chunk|) independent of bucket size — at 10^10
-    events with small micro-batches over large buckets this removes
-    the dominant write-amplification term (COW rewrites each touched
-    bucket fully per batch). Tombstones are appended like any row, so
-    delete semantics and out-of-order convergence are unchanged: the
-    read-side winner rule is the same max-LSN-per-key the COW merge
-    applies at write time."""
-    key = table.key_col
-    changed = sorted(int(r["_bucket"]) for r in stats)
-    deduped = dedup_latest(chunk_rows, keys=(key,), order_col="_lsn").withColumn(
-        "_bucket", bucket_expr(key, table.n_buckets)
-    )
-
-    rel_dir = table.new_data_dir()
-    out_dir = os.path.join(table.root, rel_dir)
-    mark("plan_build")
-    # the dedup shuffled on the key and bucket_expr is Spark's own
-    # hash-partitioning function, so each bucket is already contained
-    # in one task -> one delta file per bucket dir (same alignment the
-    # COW write exploits)
-    deduped.write.mode("overwrite").options(**table.writer_options()).partitionBy(
-        "_bucket"
-    ).parquet(out_dir)
-    mark("merge_write")
-
-    new_dirs, rows_applied, fstats, lineage_rows = _record_write(table, rel_dir, stats, batch_id, mark)
-    rebased = _commit_validated(
-        table,
-        changed,
-        batch_id,
-        (
-            {},
-            set(),
-            (batch_id, {"lsn_lo": lsn_lo, "lsn_hi": lsn_hi, "rows_applied": rows_applied}),
-        ),
-        dict(
-            schema_version=target_sv if target_sv != table.schema_version else None,
+    # A COW bucket with all rows deleted produces no dir and is dropped
+    # from metadata. The lineage rows are only BUILT here and written
+    # AFTER the manifest commit succeeds, so durable lineage never
+    # describes an uncommitted attempt (a racing loser's overwrite, a
+    # crash before commit) — a crash in the narrow window after commit
+    # loses only the diagnostic row, never invents one.
+    new_dirs = map_bucket_dirs(table.root, rel_dir)
+    lineage_rows = [
+        {
+            "batch_id": batch_id,
+            "partition_id": int(r["_bucket"]),
+            "lsn_lo": int(r["lsn_lo"]),
+            "lsn_hi": int(r["lsn_hi"]),
+            "rows_applied": int(r["rows_applied"]),
+            "bytes_written": _dir_bytes(os.path.join(table.root, new_dirs[int(r["_bucket"])]))
+            if int(r["_bucket"]) in new_dirs
+            else 0,
+        }
+        for r in stats
+    ]
+    fstats = bucket_footer_stats(table.root, new_dirs)
+    mark("footer_stats")
+    if mode == "mor":
+        replaced, removed = {}, set()
+        commit_kw = dict(
             delta_appends={
                 b: {
                     "dir": rel,
@@ -576,8 +430,27 @@ def _apply_mor(
                 }
                 for b, rel in new_dirs.items()
             },
+        )
+    else:
+        replaced, removed = new_dirs, set(changed) - set(new_dirs)
+        commit_kw = dict(
+            bucket_row_counts={b: s[0] for b, s in fstats.items()},
+            bucket_max_lsns={b: s[1] for b, s in fstats.items()},
+        )
+    rebased = _commit_validated(
+        table,
+        changed,
+        batch_id,
+        (
+            replaced,
+            removed,
+            (batch_id, {"lsn_lo": lsn_lo, "lsn_hi": lsn_hi, "rows_applied": rows_applied}),
         ),
-        mode="mor",
+        dict(
+            schema_version=target_sv if target_sv != table.schema_version else None,
+            **commit_kw,
+        ),
+        mode=mode,
         allow_rebase=allow_rebase,
     )
     mark("commit")
@@ -587,7 +460,7 @@ def _apply_mor(
         "batch_id": batch_id,
         "rows_applied": rows_applied,
         "buckets": changed,
-        "write_mode": "mor",
+        "write_mode": mode,
         "commit_rebased": rebased,
         "timings": timings,
     }

@@ -115,8 +115,8 @@ def merge_into(
             # no classification join at all, one O(|source|) pass
             return as_events(src, t, lsn, "U")
         # NULL-safe classification: the engine treats a NULL key as a
-        # normal LWW group everywhere else (apply.py's broadcast
-        # semi-join, the preimage join, the Iceberg MERGE's `<=>`) —
+        # normal LWW group everywhere else (apply.py's groupBy
+        # reduction, the preimage join, the Iceberg MERGE's `<=>`) —
         # plain `on=key` equality would misclassify a NULL-key target
         # row as never-matched (delete leaves it, insert duplicates it)
         target_keys = t.read(spark, columns=[]).select(F.col(key).alias("_mk"))

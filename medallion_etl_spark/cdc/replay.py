@@ -27,7 +27,7 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .apply import apply_batch
+from .apply import apply_batch, check_write_mode
 from .constraints import fail_on_violations, violation_reason
 from .manifest import pending_chunks, plan_chunks
 from .quarantine import POLICIES, malformed_reason, split_malformed
@@ -47,7 +47,6 @@ def replay(
     table: LakeTable,
     *,
     chunk_size: int = 1_000_000,
-    merge_path: str = "auto",
     write_mode: str = "cow",
     mor_max_deltas: int = 8,
     max_batches: int | None = None,
@@ -92,6 +91,7 @@ def replay(
         raise ValueError(f"on_malformed must be one of {POLICIES}, got {on_malformed!r}")
     if on_violation not in POLICIES:
         raise ValueError(f"on_violation must be one of {POLICIES}, got {on_violation!r}")
+    check_write_mode(write_mode)
     if chunk_size <= 0:
         raise ValueError(f"chunk_size must be positive, got {chunk_size}")
     bounds = events.agg(
@@ -379,7 +379,6 @@ def replay(
                 batch_id,
                 lo,
                 hi,
-                merge_path=merge_path,
                 write_mode=write_mode,
                 mor_max_deltas=mor_max_deltas,
                 precomputed_stats=stats_by_chunk.get(batch_id, []),

@@ -975,7 +975,8 @@ class LakeTable:
         # bucket) and keys are matched with a semi join, so the cost
         # stays O(changed data). The key semi-join is null-safe only in
         # theory — keys are declared non-null — but eqNullSafe keeps
-        # the two sides consistent with the merge paths' convention.
+        # it consistent with the merge, whose groupBy treats NULL keys
+        # as one LWW group.
         key = self.key_col
         # the changed-bucket ids are CURRENT-layout; they only address
         # the OLD snapshot's files while the bucket count is unchanged.
@@ -1016,7 +1017,7 @@ class LakeTable:
         count on top of their base (same entry_sources walk
         bucket_rows() uses, so the two can never disagree); it is None
         when any source predates counted commits — unknown must never
-        read as 0, the same rule the broadcast gate follows."""
+        read as 0, the same rule the auto write-mode gate follows."""
         buckets = self.meta["buckets"]
         counted = [s["rows"] for e in buckets.values() for s in entry_sources(e)]
         rows = None if any(r is None for r in counted) else sum(int(r) for r in counted)
@@ -2016,15 +2017,15 @@ class LakeTable:
 
     def bucket_rows(self, buckets: list[int] | None = None) -> int | None:
         """Total stored rows (incl. tombstones) in the given buckets,
-        from commit-time footer counts — lets the merge's 'auto' path
-        bound the broadcast by |base keys| without a counting job.
+        from commit-time footer counts — lets apply_batch's 'auto'
+        write mode compare a chunk against its touched base without a
+        counting job.
 
         Returns ``None`` if ANY requested source lacks a stored count:
-        an unknown size must be treated as unbounded by callers (force
-        the shuffle path), never understated as 0. Delta rows are
-        counted on top of base rows — an overcount when a key appears
-        in both, which only ever makes the broadcast bound more
-        conservative."""
+        an unknown size must be treated as unbounded by callers (the
+        auto gate then picks COW), never understated as 0. Delta rows
+        are counted on top of base rows — an overcount when a key
+        appears in both."""
         total = 0
         for b_str, entry in self.meta["buckets"].items():
             if buckets is None or int(b_str) in buckets:
@@ -2115,7 +2116,7 @@ class LakeTable:
             entry = {"dir": rel_dir, "schema_version": sv}
             # store a count only when the caller measured one; an
             # absent key means "unknown" (bucket_rows -> None), which
-            # is safer than a phantom 0 understating broadcast bounds
+            # is safer than a phantom 0 understating the auto gate's base
             if bucket_row_counts is not None and b in bucket_row_counts:
                 entry["rows"] = int(bucket_row_counts[b])
             # highest _lsn stored in the bucket's files (parquet footer

@@ -128,15 +128,12 @@ def _replay_flagship(
 
 
 def cdc_replay_latest_state(spark: SparkSession, sf: str) -> DataFrame:
-    # merge_path="agg" so the driver's correctness gate exercises
-    # the shuffle LWW merge (auto would pick the broadcast path on a
-    # stream this small)
-    return _replay_flagship(spark, sf, "cdc_flagship", merge_path="agg")
+    return _replay_flagship(spark, sf, "cdc_flagship")
 
 
 def cdc_replay_mor_state(spark: SparkSession, sf: str) -> DataFrame:
     """The flagship replay driven through the MERGE-ON-READ write path:
-    every chunk is a per-bucket delta APPEND (apply.py ``_apply_mor``,
+    every chunk is a per-bucket delta APPEND (apply.py ``apply_batch``,
     write cost O(|chunk|), no bucket rewrite) and the returned state is
     read THROUGH the delta fold (table.py ``_merge_sources`` — LWW over
     base ∪ deltas, scoped to delta-carrying buckets) before any
@@ -165,7 +162,7 @@ def _feed_table_root(spark: SparkSession, sf: str) -> str:
     atexit.register(shutil.rmtree, tmp, ignore_errors=True)
     root = f"{tmp}/t"
     table = LakeTable.create(root, n_buckets=8, schema_version=2)
-    replay(spark, stream, table, chunk_size=chunk, merge_path="agg")
+    replay(spark, stream, table, chunk_size=chunk)
     _FEED_ROOTS[sf] = root
     return root
 

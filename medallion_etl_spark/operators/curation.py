@@ -34,7 +34,7 @@ from pyspark.sql import functions as F
 
 from ..sources.readers import load_table as T
 from .dedup_text import _shingles, _words, _SHINGLES_SQL
-from .textops import _MIX_BUCKET_SQL, _MIX_RATE_SQL, STOPWORDS, _STOP_SQL
+from .textops import _MIX_BUCKET_SQL, _MIX_RATE_SQL, _STOP_SQL, quality_features
 from .util import spread
 
 QUALITY_MIN = 0.4  # keeps ~2/3 of the synthetic corpus (median 0.45)
@@ -48,20 +48,9 @@ CONTAM_NUM, CONTAM_DEN = 4, 5  # ratio >= 4/5
 
 
 def _quality(col: str = "text") -> F.Column:
-    """The doc_quality_scores composite, verbatim (rounded to 6 so the
-    threshold comparison is knife-edge-free in both engines)."""
-    lowered = F.lower(col)
-    words = F.split(lowered, " ")
-    n_words = F.size(words)
-    stop_arr = F.array(*[F.lit(s) for s in STOPWORDS])
-    stop_ratio = F.size(F.filter(words, lambda w: F.array_contains(stop_arr, w))) / n_words
-    punct_ratio = F.regexp_count(lowered, F.lit("[^a-z0-9 ]")) / F.length(col)
-    score = (
-        F.least(n_words / F.lit(100.0), F.lit(1.0)) * 0.4
-        + stop_ratio * 0.4
-        + (F.lit(1.0) - punct_ratio) * 0.2
-    )
-    return F.round(score, 6)
+    """The doc_quality_scores composite, rounded to 6 so the threshold
+    comparison is knife-edge-free in both engines."""
+    return F.round(quality_features(col)["quality_score"], 6)
 
 
 def curated_training_mix(spark: SparkSession, sf: str) -> DataFrame:

@@ -42,7 +42,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..sources.readers import load_table as T
-from .textops import STOPWORDS
+from .textops import _STOP_SQL, quality_features
 from .util import persist_replacing, spread
 
 # Budget as a fraction of the corpus's total whitespace-token count.
@@ -52,22 +52,6 @@ BUDGET_FRAC = 0.5
 QUANTUM = 10000
 
 
-def _quality_score() -> F.Column:
-    """The ``doc_quality_scores`` formula (textops.py), rounded to 6."""
-    lowered = F.lower("text")
-    words = F.split(lowered, " ")
-    n_words = F.size(words)
-    stop_arr = F.array(*[F.lit(s) for s in STOPWORDS])
-    stop_ratio = F.size(F.filter(words, lambda w: F.array_contains(stop_arr, w))) / n_words
-    punct_ratio = F.regexp_count(lowered, F.lit("[^a-z0-9 ]")) / F.length("text")
-    return F.round(
-        F.least(n_words / F.lit(100.0), F.lit(1.0)) * 0.4
-        + stop_ratio * 0.4
-        + (F.lit(1.0) - punct_ratio) * 0.2,
-        6,
-    )
-
-
 def token_budget_selection(spark: SparkSession, sf: str) -> DataFrame:
     docs = spread(spark, T(spark, sf, "documents"))
     n_tok = F.size(F.split(F.lower("text"), " "))
@@ -75,7 +59,7 @@ def token_budget_selection(spark: SparkSession, sf: str) -> DataFrame:
         "doc_id",
         "source",
         n_tok.alias("n_tok"),
-        _quality_score().alias("quality_score"),
+        F.round(quality_features()["quality_score"], 6).alias("quality_score"),
     ).withColumn("qbucket", F.floor(F.col("quality_score") * QUANTUM).cast("int"))
     # reused by the bucket rollup, the budget total, and the final join
     feats = persist_replacing("budget_feats", sf, feats)
@@ -121,8 +105,6 @@ def token_budget_selection(spark: SparkSession, sf: str) -> DataFrame:
         .orderBy("doc_id")
     )
 
-
-_STOP_SQL = "[" + ", ".join(f"'{s}'" for s in STOPWORDS) + "]"
 
 TOKEN_BUDGET_SELECTION_SQL = f"""
 WITH f0 AS (

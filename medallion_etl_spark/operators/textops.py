@@ -78,28 +78,41 @@ ORDER BY doc_id
 # weighted composite, the standard pre-training corpus filter shape.
 
 
-def doc_quality_scores(spark: SparkSession, sf: str) -> DataFrame:
-    docs = spread(spark, T(spark, sf, "documents"))
-    lowered = F.lower("text")
+def quality_features(col: str = "text") -> dict[str, F.Column]:
+    """The quality composite over the text column ``col``, unrounded:
+    ``n_words``, ``mean_word_len``, ``stopword_ratio``, ``punct_ratio``
+    and their weighted ``quality_score``. The one definition every
+    quality filter uses (doc_quality_scores, the curation funnel,
+    token-budget selection); the oracle SQL spells the same formula."""
+    lowered = F.lower(col)
     words = F.split(lowered, " ")
     n_words = F.size(words)
     len_nospace = F.length(F.replace(lowered, F.lit(" "), F.lit("")))
-    mean_word_len = len_nospace / n_words
     stop_arr = F.array(*[F.lit(s) for s in STOPWORDS])
     stop_ratio = F.size(F.filter(words, lambda w: F.array_contains(stop_arr, w))) / n_words
-    punct_ratio = F.regexp_count(lowered, F.lit("[^a-z0-9 ]")) / F.length("text")
+    punct_ratio = F.regexp_count(lowered, F.lit("[^a-z0-9 ]")) / F.length(col)
     score = (
         F.least(n_words / F.lit(100.0), F.lit(1.0)) * 0.4
         + stop_ratio * 0.4
         + (F.lit(1.0) - punct_ratio) * 0.2
     )
+    return {
+        "n_words": n_words,
+        "mean_word_len": len_nospace / n_words,
+        "stopword_ratio": stop_ratio,
+        "punct_ratio": punct_ratio,
+        "quality_score": score,
+    }
+
+
+def doc_quality_scores(spark: SparkSession, sf: str) -> DataFrame:
+    docs = spread(spark, T(spark, sf, "documents"))
+    feats = quality_features()
+    n_words = feats.pop("n_words")
     return docs.select(
         "doc_id",
         n_words.alias("n_words"),
-        F.round(mean_word_len, 6).alias("mean_word_len"),
-        F.round(stop_ratio, 6).alias("stopword_ratio"),
-        F.round(punct_ratio, 6).alias("punct_ratio"),
-        F.round(score, 6).alias("quality_score"),
+        *[F.round(c, 6).alias(name) for name, c in feats.items()],
     ).orderBy("doc_id")
 
 

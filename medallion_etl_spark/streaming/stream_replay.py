@@ -40,7 +40,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..schemas import EVENTS_SCHEMA
-from ..cdc.apply import apply_batch
+from ..cdc.apply import apply_batch, check_write_mode
 from ..cdc.constraints import fail_on_violations, split_violations, violation_reason
 from ..cdc.quarantine import POLICIES, malformed_reason, split_malformed
 from ..cdc.table import LakeTable, retry_on_fork_rewind
@@ -82,7 +82,6 @@ def stream_replay(
     table_root: str,
     checkpoint_dir: str,
     *,
-    merge_path: str = "auto",
     write_mode: str = "cow",
     mor_max_deltas: int = 8,
     max_files_per_trigger: int | None = None,
@@ -121,6 +120,7 @@ def stream_replay(
         raise ValueError(f"on_malformed must be one of {POLICIES}, got {on_malformed!r}")
     if on_violation not in POLICIES:
         raise ValueError(f"on_violation must be one of {POLICIES}, got {on_violation!r}")
+    check_write_mode(write_mode)
     totals = {
         "epochs": 0,
         "rows_applied": 0,
@@ -203,7 +203,6 @@ def stream_replay(
                 batch_id=stream_batch_id(checkpoint_dir, epoch_id),
                 lsn_lo=int(bounds["lo"]),
                 lsn_hi=int(bounds["hi"]),
-                merge_path=merge_path,
                 write_mode=write_mode,
                 mor_max_deltas=mor_max_deltas,
                 # epochs are pure stream slices (upstream LSNs):

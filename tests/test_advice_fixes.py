@@ -4,8 +4,9 @@
   silently skip (was: recreated streaming checkpoint restarting at
   epoch 0 silently dropped micro-batches);
 - streaming epochs are namespaced per checkpoint identity;
-- NULL-key rows survive BOTH physical merge paths identically (was:
-  null-rejecting semi-join on the broadcast path only);
+- NULL-key rows survive the COW merge and the MOR append + read fold
+  identically (was: a null-rejecting semi-join on a since-deleted
+  broadcast merge path);
 - unknown bucket row counts are treated as unknown (None), never 0.
 """
 
@@ -76,13 +77,12 @@ def test_stream_batch_ids_namespaced_by_checkpoint():
     assert stream_batch_id("/tmp/ckpt_a", 0) == a0
 
 
-@pytest.mark.parametrize("merge_path", ["broadcast", "agg", "mor"])
+@pytest.mark.parametrize("merge_path", ["agg", "mor"])
 def test_null_key_rows_survive_both_merge_paths(spark, tmp_path, merge_path):
     """Spark does not enforce declared non-nullability on parquet
-    reads, so a NULL doc_id can reach the merge. Both physical COW
-    paths and the merge-on-read append + read fold must agree: NULL
-    keys form one LWW group (null-safe equality), matching the
-    shuffle-agg path's groupBy semantics."""
+    reads, so a NULL doc_id can reach the merge. The COW merge ('agg')
+    and the merge-on-read append + read fold must agree: NULL keys
+    form one LWW group, the groupBy semantics of the one reduction."""
     table = LakeTable.create(str(tmp_path / f"t_{merge_path}"), n_buckets=4)
     if merge_path == "mor":
         # a COW base holding a NULL-key row, then a merge-on-read delta
@@ -112,9 +112,7 @@ def test_null_key_rows_survive_both_merge_paths(spark, tmp_path, merge_path):
                 _row(3, "I", "b"),
             ],
         )
-        apply_batch(
-            spark, table, ev, batch_id=0, lsn_lo=0, lsn_hi=3, merge_path=merge_path
-        )
+        apply_batch(spark, table, ev, batch_id=0, lsn_lo=0, lsn_hi=3)
     got = (
         LakeTable.load(table.root)
         .read(spark)

@@ -129,16 +129,49 @@ def test_manifest_and_lineage(spark, tmp_path, events_path):
     assert (lin[lin["bytes_written"] > 0]["rows_applied"] > 0).all()
 
 
-@pytest.mark.parametrize("merge_path", ["broadcast", "agg"])
-def test_merge_path_invariance(spark, tmp_path, events_path, events_pdf, merge_path):
-    """Both physical merge plans — broadcast semi-join and the shuffle
-    LWW reduction — produce the identical final state."""
-    table = LakeTable.create(str(tmp_path / f"t_{merge_path}"), n_buckets=4)
+def test_cow_and_mor_replays_match_oracle(spark, tmp_path, events_path, events_pdf):
+    """Both write modes feed the one merge kernel a different input —
+    base ∪ chunk rewritten (COW), the chunk alone appended and folded
+    on read (MOR) — and must read back the identical final state."""
     events = spark.read.parquet(events_path)
-    replay(spark, events, table, chunk_size=4_000, merge_path=merge_path)
-    assert_frames_equal(
-        _read_table(spark, LakeTable.load(table.root)), expected_final_state(events_pdf)
-    )
+    expected = expected_final_state(events_pdf)
+    for mode in ("cow", "mor"):
+        table = LakeTable.create(str(tmp_path / f"t_{mode}"), n_buckets=4)
+        replay(spark, events, table, chunk_size=4_000, write_mode=mode)
+        table = LakeTable.load(table.root)
+        assert any(e.get("deltas") for e in table.meta["buckets"].values()) == (
+            mode == "mor"
+        )
+        assert_frames_equal(_read_table(spark, table), expected)
+
+
+def test_unknown_write_mode_is_rejected_before_any_spark_job(spark, tmp_path, events_path):
+    """A mistyped write_mode must fail before a Spark job runs: no
+    empty batch record committed, no replay stats job, no streaming
+    query started."""
+    from medallion_etl_spark.cdc.apply import apply_batch
+    from medallion_etl_spark.schemas import EVENTS_SCHEMA
+    from medallion_etl_spark.streaming.stream_replay import stream_replay
+
+    table = LakeTable.create(str(tmp_path / "t"), n_buckets=4)
+    empty = spark.createDataFrame([], EVENTS_SCHEMA)
+    events = spark.read.parquet(events_path)
+    ckpt = str(tmp_path / "ckpt")
+    sc = spark.sparkContext
+    sc.setJobGroup("bogus-write-mode", "jobs launched despite a rejected write_mode")
+    try:
+        with pytest.raises(ValueError, match="write_mode"):
+            apply_batch(spark, table, empty, 0, 0, 0, write_mode="bogus")
+        with pytest.raises(ValueError, match="write_mode"):
+            replay(spark, events, table, write_mode="bogus")
+        with pytest.raises(ValueError, match="write_mode"):
+            stream_replay(spark, events_path, table.root, ckpt, write_mode="bogus")
+        jobs = sc.statusTracker().getJobIdsForGroup("bogus-write-mode")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(jobs) == []
+    assert not os.path.exists(ckpt)
+    assert LakeTable.load(table.root).version == table.version
 
 
 def _single_key_stream(spark):
@@ -157,18 +190,14 @@ def _single_key_stream(spark):
     return spark.createDataFrame(rows, EVENTS_SCHEMA)
 
 
-@pytest.mark.parametrize(
-    "kw",
-    [{"merge_path": "auto"}, {"merge_path": "agg"}, {"write_mode": "mor"}],
-    ids=["auto", "agg", "mor"],
-)
-def test_single_hot_key_reads_back_one_max_lsn_row(spark, tmp_path, kw):
-    """All-skew through the engine: every write path reduces a stream
+@pytest.mark.parametrize("write_mode", ["cow", "mor"])
+def test_single_hot_key_reads_back_one_max_lsn_row(spark, tmp_path, write_mode):
+    """All-skew through the engine: both write modes reduce a stream
     on ONE key to exactly one stored row carrying the max-LSN payload."""
     table = LakeTable.create(str(tmp_path / "t"), n_buckets=4)
-    replay(spark, _single_key_stream(spark), table, chunk_size=40, **kw)
+    replay(spark, _single_key_stream(spark), table, chunk_size=40, write_mode=write_mode)
     table = LakeTable.load(table.root)
-    if "write_mode" in kw:  # the read folds base ∪ deltas
+    if write_mode == "mor":  # the read folds base ∪ deltas
         assert any(e.get("deltas") for e in table.meta["buckets"].values())
     got = table.read(spark, raw=True).collect()
     assert len(got) == 1

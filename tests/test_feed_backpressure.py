@@ -31,7 +31,6 @@ def _build(spark, tmp_path):
             batch_id=i,
             lsn_lo=lo,
             lsn_hi=hi,
-            merge_path="agg",
         )
     return LakeTable.load(table.root)
 

@@ -24,7 +24,7 @@ from medallion_etl_spark.synth import gen_events
 def _apply(spark, table, events, batch_id, lo, hi):
     chunk = events.filter(F.col("lsn").between(lo, hi))
     apply_batch(
-        spark, table, chunk, batch_id=batch_id, lsn_lo=lo, lsn_hi=hi, merge_path="agg"
+        spark, table, chunk, batch_id=batch_id, lsn_lo=lo, lsn_hi=hi
     )
     return LakeTable.load(table.root)
 

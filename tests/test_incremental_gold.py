@@ -42,7 +42,7 @@ def built(spark, tmp_path):
     for bid, (lo, hi) in enumerate([(0, 1_999), (2_000, 3_999)]):
         chunk = events.filter(F.col("lsn").between(lo, hi))
         apply_batch(
-            spark, table, chunk, batch_id=bid, lsn_lo=lo, lsn_hi=hi, merge_path="agg"
+            spark, table, chunk, batch_id=bid, lsn_lo=lo, lsn_hi=hi
         )
         table = LakeTable.load(table.root)
     return table
@@ -99,7 +99,7 @@ def test_group_disappears_and_appears(spark, built):
     v_before = built.version
     apply_batch(
         spark, built, chunk, batch_id=99, lsn_lo=max_lsn + 1,
-        lsn_hi=max_lsn + 5_000, merge_path="agg",
+        lsn_hi=max_lsn + 5_000,
     )
     table = LakeTable.load(built.root)
     gold_before = aggregate_snapshot(full_before, GROUP, MEASURES)
@@ -128,7 +128,7 @@ def test_all_null_measure_group_stays_null(spark, built):
     gold_before = aggregate_snapshot(built.read(spark), GROUP, MEASURES)
     apply_batch(
         spark, built, chunk, batch_id=98, lsn_lo=max_lsn + 1,
-        lsn_hi=max_lsn + 3, merge_path="agg",
+        lsn_hi=max_lsn + 3,
     )
     table = LakeTable.load(built.root)
     incr = maintain_gold(spark, table, v_before, gold_before, GROUP, MEASURES)

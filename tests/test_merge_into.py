@@ -191,7 +191,7 @@ def test_merge_loses_to_newer_upstream_events(spark, tmp_path):
 
 def test_merge_classifies_null_keys_null_safely(spark, loaded):
     """A NULL-key row is a normal LWW group everywhere else in the
-    engine (apply.py's broadcast path uses eqNullSafe); merge_into's
+    engine (apply.py's groupBy reduction keeps one); merge_into's
     matched/not-matched classification must agree — plain equality
     would leave a NULL-key row undeletable and re-insert it forever."""
     table, before = loaded

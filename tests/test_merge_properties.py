@@ -79,13 +79,13 @@ def test_any_chunking_any_order_converges(spark, tmp_path_factory, events, data)
         chunk = df.filter(F.col("lsn").between(lo, hi))
         apply_batch(
             spark, table, chunk, batch_id=bid, lsn_lo=lo, lsn_hi=hi,
-            merge_path="agg", write_mode=mode,
+            write_mode=mode,
         )
         table = LakeTable.load(root)
         if redeliver:  # at-least-once source: same batch again is a no-op
             res = apply_batch(
                 spark, table, chunk, batch_id=bid, lsn_lo=lo, lsn_hi=hi,
-                merge_path="agg", write_mode=mode,
+                write_mode=mode,
             )
             assert res.get("skipped")
 

@@ -378,14 +378,10 @@ def test_building_a_read_launches_no_spark_job(spark, mor_table):
     assert jobs == []
 
 
-@pytest.mark.smoke
-def test_default_mor_apply_plans_one_exchange_over_the_chunk(spark, mor_table, monkeypatch):
-    """apply_batch's shipped dedup strategy (agg) reduces the chunk in
-    ONE shuffle before the delta append; salted would plan two."""
+@pytest.fixture
+def written_frames(monkeypatch):
+    """Every DataFrame handed to ``DataFrameWriter.parquet`` in the test."""
     from pyspark.sql.readwriter import DataFrameWriter
-
-    from medallion_etl_spark.cdc.apply import apply_batch
-    from medallion_etl_spark.cdc.table import LakeTable
 
     written = []
     real_parquet = DataFrameWriter.parquet
@@ -395,6 +391,16 @@ def test_default_mor_apply_plans_one_exchange_over_the_chunk(spark, mor_table, m
         return real_parquet(self, path, *args, **kwargs)
 
     monkeypatch.setattr(DataFrameWriter, "parquet", recording_parquet)
+    return written
+
+
+@pytest.mark.smoke
+def test_default_mor_apply_plans_one_exchange_over_the_chunk(spark, mor_table, written_frames):
+    """apply_batch's shipped dedup strategy (agg) reduces the chunk in
+    ONE shuffle before the delta append; salted would plan two."""
+    from medallion_etl_spark.cdc.apply import apply_batch
+    from medallion_etl_spark.cdc.table import LakeTable
+
     clone = mor_table.clone_to(mor_table.root + "-exchange-pin")
     rows = [(10_000 + i, "U", f"k{i}", [99], 1, "s") for i in range(40)]
     res = apply_batch(
@@ -402,9 +408,42 @@ def test_default_mor_apply_plans_one_exchange_over_the_chunk(spark, mor_table, m
         batch_id=99, lsn_lo=10_000, lsn_hi=10_039, write_mode="mor",
     )
     assert res["write_mode"] == "mor"
-    assert len(written) == 1
-    assert plan(written[0], mode="simple").count("Exchange") == 1
+    assert len(written_frames) == 1
+    assert plan(written_frames[0], mode="simple").count("Exchange") == 1
     assert {r["tokens"][0] for r in LakeTable.load(clone.root).read(spark).collect()} == {99}
+
+
+@pytest.mark.smoke
+def test_default_cow_apply_plans_the_one_lww_reduction(spark, mor_table, written_frames):
+    """The default COW apply writes the output of the one LWW reduction
+    over base ∪ deltas ∪ chunk — partial max_by below the key exchange,
+    no broadcast semi-join — and the state the LWW oracle names: a
+    stale event loses, a delete wins, every delta is folded away."""
+    from medallion_etl_spark.cdc.apply import apply_batch
+    from medallion_etl_spark.cdc.table import LakeTable
+
+    clone = mor_table.clone_to(mor_table.root + "-cow-pin")
+    rows = [(10_000 + i, "U", f"k{i}", [99], 1, "s") for i in range(2, 40)]
+    rows += [(50, "U", "k0", [55], 1, "s"), (10_100, "D", "k1", None, 1, "s")]
+    res = apply_batch(
+        spark, clone, spark.createDataFrame(rows, _EVENTS),
+        batch_id=99, lsn_lo=50, lsn_hi=10_100,
+    )
+    assert len(written_frames) == 1
+    p = plan(written_frames[0], mode="simple")
+    assert "BroadcastHashJoin" not in p and "LeftSemi" not in p
+    _partial_max_by_before_exchange(written_frames[0])
+    assert res["write_mode"] == "cow"
+
+    # the fixture's history: batch b wrote tokens [b] at LSN 100*b + i
+    history = [(100 * b + i, "U", f"k{i}", [b]) for b in range(_DELTAS + 1) for i in range(40)]
+    latest = {}
+    for lsn, op, key, tokens in sorted(history + [r[:4] for r in rows]):
+        latest[key] = (op, tokens)
+    expected = {k: tokens for k, (op, tokens) in latest.items() if op != "D"}
+    table = LakeTable.load(clone.root)
+    assert not any(e.get("deltas") for e in table.meta["buckets"].values())
+    assert {r["doc_id"]: list(r["tokens"]) for r in table.read(spark).collect()} == expected
 
 
 # Higher-order-function lambdas run interpreted and Catalyst shares no

@@ -20,7 +20,7 @@ N_KEYS = 400
 def _apply(spark, table, events, batch_id, lo, hi):
     chunk = events.filter(F.col("lsn").between(lo, hi))
     apply_batch(
-        spark, table, chunk, batch_id=batch_id, lsn_lo=lo, lsn_hi=hi, merge_path="agg"
+        spark, table, chunk, batch_id=batch_id, lsn_lo=lo, lsn_hi=hi
     )
     return LakeTable.load(table.root)
 

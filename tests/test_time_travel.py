@@ -90,7 +90,7 @@ def test_change_feed_prunes_untouched_buckets(spark, tmp_path):
     base = gen_events(spark, n_events=4_000, n_keys=400)
     apply_batch(
         spark, table, base, batch_id=0, lsn_lo=0,
-        lsn_hi=4_000, merge_path="agg",
+        lsn_hi=4_000,
     )
     table = LakeTable.load(table.root)
     v_before = table.version
@@ -100,7 +100,7 @@ def test_change_feed_prunes_untouched_buckets(spark, tmp_path):
     )
     apply_batch(
         spark, table, delta, batch_id=1, lsn_lo=10_000,
-        lsn_hi=20_000, merge_path="agg",
+        lsn_hi=20_000,
     )
     table = LakeTable.load(table.root)
     feed = table.read_changes(spark, since_version=v_before)

@@ -40,7 +40,7 @@ def _events(spark, n=40_000):
 def _build(spark, root):
     t = LakeTable.create(root, n_buckets=4)
     apply_batch(
-        spark, t, _events(spark), batch_id=0, lsn_lo=0, lsn_hi=39_999, merge_path="agg"
+        spark, t, _events(spark), batch_id=0, lsn_lo=0, lsn_hi=39_999
     )
     return LakeTable.load(root)
 
@@ -233,7 +233,6 @@ def test_quantile_zorder_compact_preserves_data_and_tightens_stats(spark, tmp_pa
         lin_t = LakeTable.create(str(tmp_path / "lin"), n_buckets=4)
         apply_batch(
             spark, lin_t, _skewed(spark), batch_id=0, lsn_lo=0, lsn_hi=39_999,
-            merge_path="agg",
         )
         lin_t = LakeTable.load(lin_t.root)
         before = sorted(
@@ -244,7 +243,6 @@ def test_quantile_zorder_compact_preserves_data_and_tightens_stats(spark, tmp_pa
         q_t = LakeTable.create(str(tmp_path / "q"), n_buckets=4)
         apply_batch(
             spark, q_t, _skewed(spark), batch_id=0, lsn_lo=0, lsn_hi=39_999,
-            merge_path="agg",
         )
         q_t = LakeTable.load(q_t.root)
         q_t.compact(
