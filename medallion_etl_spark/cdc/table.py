@@ -9,17 +9,18 @@ built from first principles the same way those formats do it:
   bucket granularity); untouched buckets keep their existing files.
   At 100 TB this is the difference between rewriting the table per
   batch and rewriting ~|batch|-proportional data.
-- **Versioned metadata** (``metadata/version-N.json``) listing, per
-  bucket, the current data directory and the schema version its files
-  were written with (so type-widen evolution reads old files with
-  their own schema and casts — no reliance on parquet mergeSchema).
-- **Atomic commit**: a tiny ``metadata/CURRENT`` pointer file replaced
-  with ``os.replace`` (atomic on POSIX). The commit manifest
-  (batch_id -> lsn range) lives INSIDE the metadata document, so data
-  visibility and the exactly-once bookkeeping change in the same
-  atomic operation. A crash before the swap leaves the table exactly
-  at the previous snapshot — this closes the reference's BUG-001
-  (bronze DELETE committed before INSERT; reference BUGS.md:9-14).
+- **Versioned metadata** (one document per snapshot, kept by
+  ``cdc/metalog.py``) listing, per bucket, the current data directory
+  and the schema version its files were written with (so type-widen
+  evolution reads old files with their own schema and casts — no
+  reliance on parquet mergeSchema).
+- **Atomic commit**: one atomic pointer swap publishes a snapshot
+  (``metalog.commit``). The commit manifest (batch_id -> lsn range)
+  lives INSIDE the metadata document, so data visibility and the
+  exactly-once bookkeeping change in the same atomic operation. A
+  crash before the swap leaves the table exactly at the previous
+  snapshot — this closes the reference's BUG-001 (bronze DELETE
+  committed before INSERT; reference BUGS.md:9-14).
 
 Readers recompute the bucket id from ``doc_id`` — it is never stored —
 so bucket pruning is always consistent with the data.
@@ -37,13 +38,9 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..schemas import DOCS_SCHEMAS
+from . import metalog
 from .dedup import dedup_latest
 from .evolve import aligned_cols
-
-# v2: bucket function changed xxhash64 -> murmur3 (F.hash); a v1
-# table's bucket layout is unreadable by v2 code and vice versa, so
-# load() refuses on mismatch instead of silently mis-bucketing.
-FORMAT_VERSION = 2
 
 # Row-level bookkeeping persisted in every data file (never surfaced by
 # a non-raw read):
@@ -154,39 +151,81 @@ def entry_signature(entry: dict) -> tuple:
     return (entry["dir"], tuple(d["dir"] for d in entry.get("deltas", [])))
 
 
-def entry_max_lsn(entry: dict) -> int | None:
-    """Highest ``_lsn`` stored anywhere in the bucket (base + deltas),
-    None when any source lacks the footer stat (unknown must mean
-    'scan', never 'skip')."""
-    best: int | None = None
-    for s in entry_sources(entry):
-        if s["max_lsn"] is None:
-            return None
-        v = int(s["max_lsn"])
-        best = v if best is None else max(best, v)
-    return best
+def plan_changes(
+    old_meta: dict, new_meta: dict, allow_incomplete: bool = False
+) -> tuple[int, dict[int, list[dict]]]:
+    """The ONE change-feed planner (``LakeTable.read_changes`` and the
+    ``lake_feed`` streaming source): the feed from snapshot ``old_meta``
+    to snapshot ``new_meta`` is every row with ``_lsn`` above the old
+    snapshot's commit watermark in a bucket whose layout moved.
 
+    Returns ``(watermark, {bucket: qualifying sources})``. A bucket is
+    planned when its layout signature (base dir + delta dirs) moved and
+    some source may hold a row above the watermark: a source whose
+    footer ``max_lsn`` is at or below it holds none (a compaction or
+    rebucket moves every pointer but adds no LSN, so a feed spanning
+    one stays a metadata diff at zero data I/O); a source without the
+    stat is scanned.
 
-def watermark_crossing_batches(old_meta: dict, new_meta: dict, watermark: int) -> list[int]:
-    """Batch ids committed in the (old, new] span whose planned LSN
-    range starts at or below the old snapshot's commit watermark.
+    Three spans cannot be represented by an LSN-watermark feed and
+    raise instead of under-reporting:
 
-    The engine deliberately supports out-of-LSN-order APPLICATION
-    (late chunks, LSN-range backfills — LWW makes them converge), but
-    an LSN-watermark change feed cannot represent such a commit: its
-    rows become newly visible at LSNs the ``_lsn > watermark`` pruning
-    skips, so a feed spanning it would silently lose them — the same
-    hazard class as RESTORE, and it gets the same loud gate. Empty
-    commits (rows_applied 0 — resume probes, net-empty refresh spans)
-    are exempt: they add no rows."""
-    old_b = old_meta.get("committed_batches", {})
-    return sorted(
+    - a RESTORE inside the span resurrects rows at their ORIGINAL LSNs,
+      below the watermark (no completeness flag can fix that);
+    - a compaction purged tombstones above the watermark, so delete
+      records are gone — unless ``allow_incomplete`` (upserts are
+      complete), or the span starts at the EMPTY snapshot (no batch
+      ever committed): from empty, purged tombstones are net-zero;
+    - a batch committed in the span with an LSN range starting at or
+      below the watermark (an out-of-order chunk or an LSN-range
+      backfill: LWW converges, but its rows sit below the pruning).
+      Empty commits (``rows_applied`` 0 — resume probes, net-empty
+      refresh spans) add no rows and are exempt."""
+    since = int(old_meta["version"])
+    last_restore = int(new_meta.get("last_restore_commit", 0))
+    if since < last_restore:
+        raise ValueError(
+            f"change feed since version {since} crosses the RESTORE "
+            f"committed at version {last_restore}: restored rows carry "
+            "pre-restore LSNs that an LSN-watermark feed cannot represent "
+            "— re-bootstrap the downstream from the current snapshot (or "
+            "feed from a version >= the restore)."
+        )
+    old_batches = old_meta["committed_batches"]
+    watermark = max((int(r["lsn_hi"]) for r in old_batches.values()), default=-1)
+    purge_lsn = int(new_meta.get("compaction_watermark_lsn", -1)) if old_batches else -1
+    if watermark < purge_lsn and not allow_incomplete:
+        raise ValueError(
+            f"change feed since version {since} (watermark LSN {watermark}) "
+            f"predates a compaction that purged tombstones up to LSN "
+            f"{purge_lsn}: delete records in that span are gone. Re-bootstrap "
+            "from the current snapshot (read_changes also accepts "
+            "allow_incomplete=True when missing deletes are acceptable)."
+        )
+    crossers = sorted(
         int(bid)
-        for bid, rec in new_meta.get("committed_batches", {}).items()
-        if bid not in old_b
+        for bid, rec in new_meta["committed_batches"].items()
+        if bid not in old_batches
         and int(rec.get("rows_applied", 0)) > 0
         and int(rec["lsn_lo"]) <= watermark
     )
+    if crossers:
+        raise ValueError(
+            f"change feed since version {since} (watermark LSN {watermark}) "
+            f"spans batch(es) {crossers} committed with LSN ranges at or "
+            "below it (an out-of-order chunk or an LSN-range backfill): "
+            "their rows are invisible to an LSN-watermark feed — "
+            "re-bootstrap the downstream from the current snapshot."
+        )
+    old_sigs = {b: entry_signature(e) for b, e in old_meta["buckets"].items()}
+    changed: dict[int, list[dict]] = {}
+    for b, e in new_meta["buckets"].items():
+        if old_sigs.get(b) == entry_signature(e):
+            continue
+        srcs = [s for s in entry_sources(e) if s["max_lsn"] is None or int(s["max_lsn"]) > watermark]
+        if srcs:
+            changed[int(b)] = srcs
+    return watermark, changed
 
 
 def bucket_expr(key_col: str, n_buckets: int) -> F.Column:
@@ -283,21 +322,10 @@ def _source_ordinal(srcs: list[tuple[str, int]]) -> F.Column:
     )
 
 
-def _fsync_dir(path: str) -> None:
-    """Make the renames inside ``path`` durable: a rename lives in the
-    directory, so fsyncing the renamed file alone can lose it on power
-    loss."""
-    fd = os.open(path, os.O_RDONLY)
-    try:
-        os.fsync(fd)
-    finally:
-        os.close(fd)
-
-
 def retry_on_fork_rewind(apply_fn, on_retry=None, *, attempts: int = 3):
     """Run ``apply_fn()`` retrying ONLY on the commit-time fork/rewind
     guard (a concurrent commit moved the on-disk HEAD between a
-    handle's load and its commit — see ``_commit_meta``). Any other
+    handle's load and its commit — see ``metalog.commit``). Any other
     error, and the final attempt's failure, propagate unchanged.
 
     ``on_retry()`` runs before each re-attempt so the caller can
@@ -316,6 +344,24 @@ def retry_on_fork_rewind(apply_fn, on_retry=None, *, attempts: int = 3):
             if on_retry is not None:
                 on_retry()
     raise AssertionError("unreachable")
+
+
+# Everything a write-audit-publish adopts from the stage — its data
+# state, with the value a document lacking the field reads as. NOT the
+# clone registry: clone_to itself commits a registration, so the
+# version NUMBER always moves — only data divergence blocks a
+# fast-forward.
+_ADOPTED_FIELDS = (
+    ("buckets", None),
+    ("committed_batches", None),
+    ("schema_version", None),
+    ("schemas", None),
+    ("n_buckets", None),
+    ("clustering", None),
+    ("compaction_watermark_lsn", -1),
+    ("constraints", {}),
+    ("bloom_key_filter", False),
+)
 
 
 class LakeTable:
@@ -363,10 +409,9 @@ class LakeTable:
                 raise ValueError(
                     f"key column {key_col!r} missing from schema version {v}"
                 )
-        os.makedirs(os.path.join(root, "metadata"), exist_ok=True)
         os.makedirs(os.path.join(root, "data"), exist_ok=True)
         meta = {
-            "format_version": FORMAT_VERSION,
+            "format_version": metalog.FORMAT_VERSION,
             "version": 0,
             "schema_version": schema_version,
             # schema versions live IN TABLE METADATA (the Iceberg/Delta
@@ -384,51 +429,29 @@ class LakeTable:
             # every non-tombstone write must not evaluate to FALSE
             "constraints": dict(constraints or {}),
         }
-        table = cls(root, meta)
-        table._write_metadata(meta)
-        return table
-
-    @classmethod
-    def load(cls, root: str) -> "LakeTable":
-        current = os.path.join(root, "metadata", "CURRENT")
-        with open(current) as f:
-            name = f.read().strip()
-        with open(os.path.join(root, "metadata", name)) as f:
-            meta = json.load(f)
-        if meta.get("format_version") != FORMAT_VERSION:
-            raise ValueError(
-                f"table at {root} has format_version {meta.get('format_version')}, "
-                f"this engine reads {FORMAT_VERSION} (bucket layouts differ; "
-                "rewrite the table with the matching engine version)"
-            )
+        metalog.write(root, meta)
         return cls(root, meta)
 
     @classmethod
+    def load(cls, root: str) -> "LakeTable":
+        return cls(root, metalog.read(root))
+
+    @classmethod
     def exists(cls, root: str) -> bool:
-        return os.path.exists(os.path.join(root, "metadata", "CURRENT"))
+        return metalog.head(root) is not None
 
     @classmethod
     def load_version(cls, root: str, version: int) -> "LakeTable":
         """Time travel: open the snapshot as of ``version``.
 
-        Every commit retains its ``metadata/version-N.json`` and data
-        files are immutable (copy-on-write), so an old snapshot is just
-        the old metadata document — the Iceberg snapshot-id read
-        analog. The returned table is read-only in spirit: committing
-        from it would fork history, so ``commit`` refuses when the
-        on-disk CURRENT is ahead of this snapshot.
+        Every commit retains its version document and data files are
+        immutable (copy-on-write), so an old snapshot is just the old
+        metadata document — the Iceberg snapshot-id read analog. The
+        returned table is read-only in spirit: committing from it would
+        fork history, so ``commit`` refuses when the on-disk HEAD is
+        ahead of this snapshot.
         """
-        path = os.path.join(root, "metadata", f"version-{version}.json")
-        if not os.path.exists(path):
-            raise ValueError(f"no snapshot version {version} at {root}")
-        with open(path) as f:
-            meta = json.load(f)
-        if meta.get("format_version") != FORMAT_VERSION:
-            raise ValueError(
-                f"snapshot {version} at {root} has format_version "
-                f"{meta.get('format_version')}, this engine reads {FORMAT_VERSION}"
-            )
-        return cls(root, meta)
+        return cls(root, metalog.read(root, version))
 
     @classmethod
     def load_as_of(cls, root: str, timestamp) -> "LakeTable":
@@ -451,20 +474,12 @@ class LakeTable:
         if isinstance(timestamp, _dt.datetime):
             timestamp = timestamp.timestamp()
         ts = float(timestamp)
-        md_dir = os.path.join(root, "metadata")
         best: int | None = None
         earliest: float | None = None
-        for name in os.listdir(md_dir):
-            if not (name.startswith("version-") and name.endswith(".json")):
-                continue
-            v = int(name.removeprefix("version-").removesuffix(".json"))
-            path = os.path.join(md_dir, name)
-            with open(path) as f:
-                committed_at = json.load(f).get("committed_at_unix")
-            if committed_at is None:
-                committed_at = os.path.getmtime(path)
+        for v in metalog.versions(root):
+            committed_at = metalog.committed_at(root, v)
             earliest = committed_at if earliest is None else min(earliest, committed_at)
-            if committed_at <= ts and (best is None or v > best):
+            if committed_at <= ts:
                 best = v
         if best is None:
             raise ValueError(
@@ -542,15 +557,7 @@ class LakeTable:
                 "table; name-based alignment would resurrect its old stored "
                 "values — use a fresh name"
             )
-        new_sv = max(self.schemas) + 1
-        new_schema = T.StructType(list(cur.fields) + [T.StructField(name, dt, True)])
-        schemas = dict(self.meta.get("schemas") or {str(v): s.jsonValue() for v, s in DOCS_SCHEMAS.items()})
-        schemas[str(new_sv)] = new_schema.jsonValue()
-        self.commit(
-            {}, set(), None,
-            schema_version=new_sv,
-            meta_updates={"schemas": schemas},
-        )
+        new_sv = self._declare_schema(list(cur.fields) + [T.StructField(name, dt, True)])
         return {"column": name, "type": dt.simpleString(), "schema_version": new_sv, "version": self.version}
 
     def drop_column(self, name: str) -> dict:
@@ -585,11 +592,7 @@ class LakeTable:
                 f"cannot drop column {name!r}: CHECK constraint(s) "
                 f"{dependent} reference it — drop_constraint first"
             )
-        new_sv = max(self.schemas) + 1
-        new_schema = T.StructType([f for f in cur.fields if f.name != name])
-        schemas = dict(self.meta.get("schemas") or {str(v): s.jsonValue() for v, s in DOCS_SCHEMAS.items()})
-        schemas[str(new_sv)] = new_schema.jsonValue()
-        updates: dict = {"schemas": schemas}
+        updates: dict = {}
         clustering = self.meta.get("clustering")
         if clustering and name in clustering.get("cols", []):
             # keep the recorded layout spec truthful: a later rebucket
@@ -600,11 +603,7 @@ class LakeTable:
                 if remaining
                 else {"kind": "key", "cols": [self.key_col]}
             )
-        self.commit(
-            {}, set(), None,
-            schema_version=new_sv,
-            meta_updates=updates,
-        )
+        new_sv = self._declare_schema([f for f in cur.fields if f.name != name], updates)
         return {"column": name, "schema_version": new_sv, "version": self.version}
 
     def widen_column(self, name: str, new_type) -> dict:
@@ -629,18 +628,24 @@ class LakeTable:
                 f"{dt.simpleString()}: not a lossless widening "
                 f"(allowed: {WIDENINGS})"
             )
-        new_sv = max(self.schemas) + 1
-        new_schema = T.StructType(
+        new_sv = self._declare_schema(
             [T.StructField(f.name, dt if f.name == name else f.dataType, f.nullable) for f in cur.fields]
         )
+        return {"column": name, "type": dt.simpleString(), "schema_version": new_sv, "version": self.version}
+
+    def _declare_schema(self, fields: list[T.StructField], meta_updates: dict | None = None) -> int:
+        """The one schema-DDL commit: declare schema version ``max+1``
+        with these fields (plus any other ``meta_updates``) and make it
+        current. Returns the new schema version."""
+        new_sv = max(self.schemas) + 1
         schemas = dict(self.meta.get("schemas") or {str(v): s.jsonValue() for v, s in DOCS_SCHEMAS.items()})
-        schemas[str(new_sv)] = new_schema.jsonValue()
+        schemas[str(new_sv)] = T.StructType(fields).jsonValue()
         self.commit(
             {}, set(), None,
             schema_version=new_sv,
-            meta_updates={"schemas": schemas},
+            meta_updates={"schemas": schemas, **(meta_updates or {})},
         )
-        return {"column": name, "type": dt.simpleString(), "schema_version": new_sv, "version": self.version}
+        return new_sv
 
     def writer_options(self) -> dict[str, str]:
         """Parquet writer options every bucket-file writer (merge,
@@ -893,68 +898,12 @@ class LakeTable:
                 allow_incomplete=allow_incomplete,
             )
         old = LakeTable.load_version(self.root, since_version)
-        # a RESTORE inside the span resurrects rows at their ORIGINAL
-        # LSNs — below the old watermark, so the `_lsn > watermark`
-        # pruning below would silently miss them (and miss un-deletes
-        # entirely). No completeness flag can fix that; the downstream
-        # must re-bootstrap from the current snapshot.
-        last_restore = int(self.meta.get("last_restore_commit", 0))
-        if since_version < last_restore:
-            raise ValueError(
-                f"change feed since version {since_version} crosses the "
-                f"RESTORE committed at version {last_restore}: restored "
-                "rows carry pre-restore LSNs that an LSN-watermark feed "
-                "cannot represent — re-bootstrap the downstream from the "
-                "current snapshot (or feed from a version >= the restore)."
-            )
-        watermark = old.max_committed_lsn()
-        purge_lsn = int(self.meta.get("compaction_watermark_lsn", -1))
-        # a feed from the EMPTY snapshot (watermark -1: no batch ever
-        # committed) is the current live row set; purged tombstones are
-        # net-zero from empty, so nothing is actually missing
-        if watermark == -1 and not old.meta.get("committed_batches"):
-            purge_lsn = -1
-        if watermark < purge_lsn and not allow_incomplete:
-            raise ValueError(
-                f"change feed since version {since_version} (watermark LSN "
-                f"{watermark}) predates a compaction that purged tombstones "
-                f"up to LSN {purge_lsn}: delete records in that span are "
-                "gone. Re-bootstrap from the current snapshot, or pass "
-                "allow_incomplete=True if missing deletes are acceptable."
-            )
-        crossers = watermark_crossing_batches(old.meta, self.meta, watermark)
-        if crossers:
-            raise ValueError(
-                f"change feed since version {since_version} (watermark LSN "
-                f"{watermark}) spans batch(es) {crossers} committed with LSN "
-                "ranges at or below it (an out-of-order chunk or an LSN-range "
-                "backfill): their rows are invisible to an LSN-watermark "
-                "feed — re-bootstrap the downstream from the current snapshot."
-            )
-        # layout-diff (base dir + delta list — a MOR delta append moves
-        # the signature without moving the base pointer), then the
-        # max_lsn stat: a bucket rewritten by a compaction/rebucket
-        # moved its pointer but holds no row above the watermark, so
-        # its files provably contribute nothing — skipping keeps a feed
-        # spanning a full-table rewrite at ZERO data I/O instead of
-        # opening every file for zero rows. An entry without the stat
-        # (older commits) scans as before.
-        old_sigs = {b: entry_signature(e) for b, e in old.meta["buckets"].items()}
-        changed = []
-        for b, e in self.meta["buckets"].items():
-            if old_sigs.get(b) == entry_signature(e):
-                continue
-            m = entry_max_lsn(e)
-            if m is not None and m <= watermark:
-                continue
-            changed.append(int(b))
-        # the watermark is pushed into the read: per-source footer
-        # stats skip whole dirs (a delta-append span reads ONLY the
-        # appended delta files, never the base), and the scan-level
-        # filter prunes row groups before the MOR merge — winner-exact,
-        # see read()
-        # (the watermark filter itself lives inside read() — every
-        # surviving scan group already carries `_lsn > watermark`)
+        watermark, sources = plan_changes(old.meta, self.meta, allow_incomplete)
+        changed = list(sources)
+        # the watermark is pushed into the read: per-source footer stats
+        # skip whole dirs (a delta-append span reads ONLY the appended
+        # delta files, never the base), and the scan-level filter prunes
+        # row groups before the MOR merge — winner-exact, see read()
         raw = self.read(spark, buckets=changed, raw=True, min_lsn_exclusive=watermark)
         feed = (
             raw.withColumn(
@@ -1152,12 +1101,8 @@ class LakeTable:
         ``zorder_coding``: ``linear`` (equal-width bins, one min/max
         aggregate) or ``quantile`` (equal-frequency bins from an
         approxQuantile sketch — use for skewed dimensions)."""
-        base = self.read(spark, raw=True)
         purgeable = F.coalesce(F.col("_deleted"), F.lit(False)) & (
             F.col("_lsn") <= F.lit(watermark_lsn)
-        )
-        keep = base.filter(~purgeable).withColumn(
-            "_bucket", bucket_expr(self.key_col, self.n_buckets)
         )
         # cluster within each bucket: merge writes are arrival-ordered,
         # so compaction is the write-amortized place to sort — parquet
@@ -1165,48 +1110,63 @@ class LakeTable:
         # row-group pruning on top of bucket pruning. Default sort is
         # the key (point lookups); zorder_by trades that for tight
         # stats on several non-key dimensions at once.
-        new_dirs, fstats = self._write_sorted_buckets(
-            keep,
-            n_partitions=self.n_buckets,
-            zorder_by=zorder_by,
-            zorder_coding=zorder_coding,
+        clustering = (
+            {"kind": "zorder", "cols": list(zorder_by), "coding": zorder_coding}
+            if zorder_by
+            else {"kind": "key", "cols": [self.key_col]}
         )
-        removed = {int(b) for b in self.meta["buckets"]} - set(new_dirs)
-        self.commit(
-            new_dirs,
-            removed,
-            None,
-            bucket_row_counts={b: s[0] for b, s in fstats.items()},
-            bucket_max_lsns={b: s[1] for b, s in fstats.items()},
+        new_dirs, removed = self._rewrite_buckets(
+            self.read(spark, raw=True).filter(~purgeable),
+            n_buckets=self.n_buckets,
+            replaces={int(b) for b in self.meta["buckets"]},
+            clustering=clustering,
             meta_updates={
                 # the purge point, for the change feed's retention gate
                 "compaction_watermark_lsn": max(
                     int(self.meta.get("compaction_watermark_lsn", -1)), watermark_lsn
                 ),
                 # operator legibility only — readers never depend on layout
-                "clustering": (
-                    {"kind": "zorder", "cols": list(zorder_by), "coding": zorder_coding}
-                    if zorder_by
-                    else {"kind": "key", "cols": [self.key_col]}
-                ),
+                "clustering": clustering,
             },
         )
         return {"buckets": sorted(new_dirs), "buckets_dropped": sorted(removed)}
 
-    def _write_sorted_buckets(
+    def _clustering(self) -> dict:
+        """The recorded clustering spec (key sort when none is recorded)
+        that fold_deltas and rebucket re-apply. A spec naming a column
+        that no longer exists (pre-fix drop_column, or a hand-edited
+        spec) degrades to key sort instead of crashing the rewrite; the
+        next compact re-establishes layout."""
+        clustering = self.meta.get("clustering") or {"kind": "key", "cols": [self.key_col]}
+        live = {f.name for f in self.schema().fields}
+        if clustering.get("kind") == "zorder" and not set(clustering["cols"]) <= live:
+            return {"kind": "key", "cols": [self.key_col]}
+        return clustering
+
+    def _rewrite_buckets(
         self,
-        keep: DataFrame,
+        rows: DataFrame,
         *,
-        n_partitions: int,
-        zorder_by: list[str] | None,
-        zorder_coding: str,
-    ) -> tuple[dict[int, str], dict]:
-        """The ONE bucket-rewrite tail both maintenance paths share
-        (``compact`` and ``fold_deltas``): sort within buckets — by key
-        or by Z-value — write one dir per bucket, and return (bucket ->
-        new dir, footer stats). Any change to the dir layout or the
-        footer-stat contract lands in both paths by construction."""
-        if zorder_by:
+        n_buckets: int,
+        replaces: set[int],
+        n_partitions: int | None = None,
+        clustering: dict | None = None,
+        meta_updates: dict | None = None,
+    ) -> tuple[dict[int, str], set[int]]:
+        """The ONE bucket-rewrite tail of the maintenance ops (``compact``,
+        ``fold_deltas``, ``rebucket``): bucket ``rows`` into ``n_buckets``
+        over ``n_partitions`` tasks (default one per bucket), sort within
+        each bucket by ``clustering`` (default: the recorded spec), write
+        one dir per bucket, and commit the new pointers with their footer
+        stats — the buckets in ``replaces`` that received no rows lose
+        their entry. Returns (bucket -> new dir, dropped buckets). Any
+        change to the dir layout or the footer-stat contract lands in
+        every op by construction."""
+        if clustering is None:
+            clustering = self._clustering()
+        keep = rows.withColumn("_bucket", bucket_expr(self.key_col, n_buckets))
+        is_zorder = clustering.get("kind") == "zorder"
+        if is_zorder:
             from .zorder import zvalue_col
 
             # materialize the Z-value as a column and sort by the
@@ -1215,26 +1175,36 @@ class LakeTable:
             # array-fold measured ~20x the whole write that way), while
             # a projected column is computed once per row
             keep = keep.withColumn(
-                "_zsort", zvalue_col(keep, zorder_by, coding=zorder_coding)
+                "_zsort",
+                zvalue_col(keep, list(clustering["cols"]), coding=clustering.get("coding", "linear")),
             )
             sort_col = "_zsort"
         else:
             sort_col = self.key_col
         rel_dir = self.new_data_dir()
-        out_dir = os.path.join(self.root, rel_dir)
-        sorted_keep = keep.repartition(
-            n_partitions, F.col("_bucket")
-        ).sortWithinPartitions("_bucket", sort_col)
-        if zorder_by:
-            sorted_keep = sorted_keep.drop("_zsort")
+        keep = keep.repartition(n_partitions or n_buckets, F.col("_bucket")).sortWithinPartitions(
+            "_bucket", sort_col
+        )
+        if is_zorder:
+            keep = keep.drop("_zsort")
         (
-            sorted_keep.write.mode("overwrite")
+            keep.write.mode("overwrite")
             .options(**self.writer_options())
             .partitionBy("_bucket")
-            .parquet(out_dir)
+            .parquet(os.path.join(self.root, rel_dir))
         )
         new_dirs = map_bucket_dirs(self.root, rel_dir)
-        return new_dirs, bucket_footer_stats(self.root, new_dirs)
+        fstats = bucket_footer_stats(self.root, new_dirs)
+        removed = set(replaces) - set(new_dirs)
+        self.commit(
+            new_dirs,
+            removed,
+            None,
+            bucket_row_counts={b: st[0] for b, st in fstats.items()},
+            bucket_max_lsns={b: st[1] for b, st in fstats.items()},
+            meta_updates=meta_updates,
+        )
+        return new_dirs, removed
 
     def fold_deltas(
         self,
@@ -1274,41 +1244,17 @@ class LakeTable:
         )
         if not chosen:
             return {"folded_buckets": [], "committed": False}
-        folded = self.read(spark, buckets=chosen, raw=True)
-        keep = folded.withColumn(
-            "_bucket", bucket_expr(self.key_col, self.n_buckets)
-        )
-        # honor the table's recorded clustering: folding a z-ordered
-        # bucket must re-sort it by the SAME Z-value, or the rewritten
-        # buckets silently lose the row-group pruning the metadata
-        # still claims
-        clustering = self.meta.get("clustering") or {}
-        zorder_by = (
-            list(clustering.get("cols", []))
-            if clustering.get("kind") == "zorder"
-            else None
-        )
-        # same live-column guard as rebucket: a recorded spec naming a
-        # since-dropped column degrades to key sort instead of crashing
-        if zorder_by and not set(zorder_by) <= {
-            f.name for f in self.schema().fields
-        }:
-            zorder_by = None
-        new_dirs, fstats = self._write_sorted_buckets(
-            keep,
+        # honor the table's recorded clustering (the tail's default):
+        # folding a z-ordered bucket must re-sort it by the SAME
+        # Z-value, or the rewritten buckets silently lose the row-group
+        # pruning the metadata still claims. A chosen bucket folding to
+        # zero rows (possible only if every source file was empty)
+        # simply loses its entry.
+        _, removed = self._rewrite_buckets(
+            self.read(spark, buckets=chosen, raw=True),
+            n_buckets=self.n_buckets,
             n_partitions=len(chosen),
-            zorder_by=zorder_by,
-            zorder_coding=clustering.get("coding", "linear"),
-        )
-        # a chosen bucket folding to zero rows (possible only if every
-        # source file was empty) simply loses its entry
-        removed = set(chosen) - set(new_dirs)
-        self.commit(
-            new_dirs,
-            removed,
-            None,
-            bucket_row_counts={b: s[0] for b, s in fstats.items()},
-            bucket_max_lsns={b: s[1] for b, s in fstats.items()},
+            replaces=set(chosen),
         )
         return {
             "folded_buckets": chosen,
@@ -1348,35 +1294,14 @@ class LakeTable:
             raise ValueError(f"new_n_buckets must be >= 1, got {new_n_buckets}")
         if new_n_buckets == self.n_buckets:
             raise ValueError(f"table already has {new_n_buckets} buckets")
-        keep = self.read(spark, raw=True).withColumn(
-            "_bucket", bucket_expr(self.key_col, new_n_buckets)
-        )
-        clustering = self.meta.get("clustering") or {"kind": "key", "cols": [self.key_col]}
-        live = {f.name for f in self.schema().fields}
-        if clustering.get("kind") == "zorder" and not set(clustering["cols"]) <= live:
-            # a column in the recorded spec no longer exists (pre-fix
-            # drop_column, or a hand-edited spec): a key sort keeps the
-            # rebucket usable; the next compact re-establishes layout
-            clustering = {"kind": "key", "cols": [self.key_col]}
-        is_zorder = clustering.get("kind") == "zorder"
-        new_dirs, fstats = self._write_sorted_buckets(
-            keep,
-            n_partitions=new_n_buckets,
-            zorder_by=list(clustering["cols"]) if is_zorder else None,
-            zorder_coding=clustering.get("coding", "linear"),
-        )
-        removed = {int(b) for b in self.meta["buckets"]} - set(new_dirs)
         old_n = self.n_buckets
-        self.commit(
-            new_dirs,
-            removed,
-            None,
-            bucket_row_counts={b: s[0] for b, s in fstats.items()},
-            bucket_max_lsns={b: s[1] for b, s in fstats.items()},
-            meta_updates={
-                "n_buckets": new_n_buckets,
-                "clustering": clustering,
-            },
+        clustering = self._clustering()
+        new_dirs, _ = self._rewrite_buckets(
+            self.read(spark, raw=True),
+            n_buckets=new_n_buckets,
+            replaces={int(b) for b in self.meta["buckets"]},
+            clustering=clustering,
+            meta_updates={"n_buckets": new_n_buckets, "clustering": clustering},
         )
         return {
             "old_n_buckets": old_n,
@@ -1437,10 +1362,9 @@ class LakeTable:
         # load_as_of resolve timestamps from before the clone existed
         meta.pop("clones", None)
         meta["committed_at_unix"] = time.time()
-        os.makedirs(os.path.join(dst_root, "metadata"), exist_ok=True)
         os.makedirs(os.path.join(dst_root, "data"), exist_ok=True)
+        metalog.write(dst_root, meta)
         clone = LakeTable(dst_root, meta)
-        clone._write_metadata(meta)
         # register the clone on the SOURCE HEAD (not this possibly-old
         # snapshot handle) so retention can refuse to unreference dirs
         # the clone points at; bounded reload-and-retry absorbs commit
@@ -1563,61 +1487,22 @@ class LakeTable:
                     dlt["dir"] = rewrite_dir(dlt["dir"])
             return out
 
-        def finish_invalidate(version: int) -> None:
-            # CURRENT goes FIRST: from that instant the stage fails to
-            # load (loudly) instead of serving entries whose dirs moved
-            # away; the marker is diagnostics, written second so a
-            # crash between the two only loses the breadcrumb
-            md = os.path.join(stage.root, "metadata")
-            cur = os.path.join(md, "CURRENT")
-            if os.path.exists(cur):
-                os.remove(cur)
-            marker = os.path.join(md, "PUBLISHED")
-            with open(marker + ".tmp", "w") as f:
-                json.dump({"published_to": src_root, "source_version": version}, f)
-            os.replace(marker + ".tmp", marker)
-
-        adopted = rewritten_buckets()
-
         def data_state(meta: dict) -> tuple:
-            # everything the publish would overwrite; NOT the clone
-            # registry (clone_to itself commits a registration, so the
-            # version NUMBER always moves — only data divergence blocks
-            # a fast-forward)
-            return (
-                meta["buckets"],
-                meta["committed_batches"],
-                meta["schema_version"],
-                meta["schemas"],
-                meta["n_buckets"],
-                meta.get("clustering"),
-                meta.get("compaction_watermark_lsn", -1),
-                meta.get("constraints", {}),
-                meta.get("bloom_key_filter", False),
-            )
+            return tuple(meta.get(k, d) for k, d in _ADOPTED_FIELDS)
 
         # idempotent re-publish: if a previous attempt COMMITTED but
         # crashed before invalidating the stage, the head's data state
         # is exactly this stage's FULL adopted state — finish the
         # invalidation instead of mis-reporting "source advanced". The
-        # comparison must cover every field the publish would write
-        # (constraints, clustering, watermark, bloom included): a
-        # 3-field subset once swallowed a metadata-only staged commit
-        # (e.g. add_constraint on the stage) as "already published",
-        # destroying the stage without committing anything.
-        adopted_state = (
-            adopted,
-            stage.meta["committed_batches"],
-            stage.meta["schema_version"],
-            stage.meta["schemas"],
-            stage.meta["n_buckets"],
-            stage.meta.get("clustering"),
-            stage.meta.get("compaction_watermark_lsn", -1),
-            stage.meta.get("constraints", {}),
-            stage.meta.get("bloom_key_filter", False),
-        )
-        if data_state(head.meta) == adopted_state:
-            finish_invalidate(head.version)
+        # comparison covers every field the publish writes (one field
+        # list, _ADOPTED_FIELDS): a 3-field copy of it once swallowed
+        # a metadata-only staged commit (e.g. add_constraint on the
+        # stage) as "already published", destroying the stage without
+        # committing anything.
+        adopted = {k: stage.meta.get(k, d) for k, d in _ADOPTED_FIELDS}
+        adopted["buckets"] = rewritten_buckets()
+        if data_state(head.meta) == tuple(adopted.values()):
+            metalog.invalidate(stage.root, {"published_to": src_root, "source_version": head.version})
             return {
                 "published": True,
                 "already_published": True,
@@ -1685,19 +1570,7 @@ class LakeTable:
                     set(),
                     None,
                     meta_updates={
-                        "buckets": adopted,
-                        "committed_batches": stage.meta["committed_batches"],
-                        "schema_version": stage.meta["schema_version"],
-                        "schemas": stage.meta["schemas"],
-                        "n_buckets": stage.meta["n_buckets"],
-                        "clustering": stage.meta.get("clustering"),
-                        "compaction_watermark_lsn": stage.meta.get(
-                            "compaction_watermark_lsn", -1
-                        ),
-                        "constraints": stage.meta.get("constraints", {}),
-                        "bloom_key_filter": stage.meta.get(
-                            "bloom_key_filter", False
-                        ),
+                        **adopted,
                         # deregister the stage in the SAME atomic
                         # commit: it stops existing as a clone the
                         # moment it is published
@@ -1720,7 +1593,7 @@ class LakeTable:
             for d in moved:
                 os.rename(os.path.join(src_root, d), os.path.join(stage.root, d))
             raise
-        finish_invalidate(head.version)
+        metalog.invalidate(stage.root, {"published_to": src_root, "source_version": head.version})
         return {
             "published": True,
             "version": head.version,  # commit() advanced the handle in place
@@ -1751,61 +1624,32 @@ class LakeTable:
         (reclaimable by a re-run or ``remove_orphans``) — never a
         loadable version pointing at deleted data. ``grace_seconds``
         (default: the same 3-day window ``remove_orphans`` uses) skips
-        unreferenced dirs younger than the window — they may be an
-        in-flight writer's pre-commit output; tests pass 0.
+        unreferenced dirs whose newest file is younger than the window —
+        they may be an in-flight writer's pre-commit output; tests pass
+        0. The sweep is ``remove_orphans``' own (``_unreferenced`` +
+        ``_sweep``), so a live version dir's write markers stay.
 
         Clone guard: a dir a REGISTERED, still-existing shallow clone
         points at (see ``clone_to``) is never silently deleted — this
         raises listing the clone(s) and dirs instead; ``force=True``
         proceeds anyway (accepting dangling clones). Compact the clone
         to self-contain it and re-run."""
-        md_dir = os.path.join(self.root, "metadata")
         # HEAD from disk, not this handle — expiring from a stale
-        # handle must never delete versions the real HEAD still needs
-        with open(os.path.join(md_dir, "CURRENT")) as f:
-            head = int(f.read().strip().removeprefix("version-").removesuffix(".json"))
-        cutoff = head - max(keep_last, 1) + 1
-        retained_versions = []
-        expired_versions = []
-        for name in os.listdir(md_dir):
-            if not name.startswith("version-") or not name.endswith(".json"):
-                continue
-            v = int(name.removeprefix("version-").removesuffix(".json"))
-            (retained_versions if v >= cutoff else expired_versions).append(v)
-
-        referenced: set[str] = set()
-        for v in retained_versions:
-            with open(os.path.join(md_dir, f"version-{v}.json")) as f:
-                meta = json.load(f)
-            for entry in meta["buckets"].values():
-                for s in entry_sources(entry):  # base + MOR delta dirs
-                    referenced.add(os.path.normpath(s["dir"]))
-
-        # a dir is deletable only if NO retained version references it
-        # (referenced paths are bucket dirs like data/vN/_bucket=K; a
-        # version dir data/vN survives while any of its buckets is
-        # referenced). Two phases: PLAN every removal first so the
-        # clone guard can veto the whole expiry before a byte is lost.
-        data_dir = os.path.join(self.root, "data")
-        to_remove: list[str] = []
-        for vdir in sorted(os.listdir(data_dir)):
-            vpath = os.path.join(data_dir, vdir)
-            if not os.path.isdir(vpath):
-                continue
-            for bdir in sorted(os.listdir(vpath)):
-                rel = os.path.normpath(os.path.join("data", vdir, bdir))
-                if rel not in referenced:
-                    to_remove.append(rel)
+        # handle must never delete versions the real HEAD still needs.
+        # Documents above HEAD (a commit between its doc rename and its
+        # pointer swap) are never expired and count as referencing.
+        cutoff = metalog.head(self.root) - max(keep_last, 1) + 1
+        # PLAN every removal first so the clone guard can veto the
+        # whole expiry before a byte is lost
+        to_remove = self._unreferenced(self._referenced_dirs(cutoff))
 
         # the clone registry comes from the on-disk HEAD metadata for
         # the same reason the head version does: a clone registered
         # after this handle loaded must still be protected
-        with open(os.path.join(md_dir, f"version-{head}.json")) as f:
-            head_meta = json.load(f)
         if not force and to_remove:
             src_abs = os.path.abspath(self.root)
             endangered: dict[str, list[str]] = {}
-            for croot in head_meta.get("clones", []):
+            for croot in metalog.read(self.root).get("clones", []):
                 if not LakeTable.exists(croot):
                     continue  # clone deleted out from under us: nothing to protect
                 refs: set[str] = set()
@@ -1827,41 +1671,17 @@ class LakeTable:
                     "and re-run, or pass force=True to accept dangling them."
                 )
 
-        removed_dirs = []
-        import shutil
-
         # expired metadata documents go FIRST: after this point no
         # load_version/load_as_of can resolve a snapshot whose data is
         # about to disappear, so a crash mid-deletion leaves only
         # harmless orphan dirs (a re-run or remove_orphans reclaims
         # them) — never a readable version pointing at deleted data
-        for v in sorted(expired_versions):
-            os.remove(os.path.join(md_dir, f"version-{v}.json"))
-        # an unreferenced dir younger than the grace window may be an
-        # in-flight writer's pre-commit output (writes always precede
-        # the pointer swap) — the same mtime guard remove_orphans
-        # applies; deleting it would corrupt the writer's commit
-        now = time.time()
-        for rel in to_remove:
-            target = os.path.join(self.root, rel)
-            try:
-                if now - os.path.getmtime(target) < float(grace_seconds):
-                    continue
-            except OSError:
-                continue
-            if os.path.isdir(target):
-                shutil.rmtree(target, ignore_errors=True)
-            elif os.path.exists(target):  # write markers (_SUCCESS etc.)
-                os.remove(target)
-            removed_dirs.append(rel)
-        for vdir in sorted(os.listdir(data_dir)):
-            vpath = os.path.join(data_dir, vdir)
-            if os.path.isdir(vpath) and not os.listdir(vpath):
-                os.rmdir(vpath)
+        expired = metalog.expire(self.root, cutoff)
+        removed, _ = self._sweep(to_remove, grace_seconds)
         return {
-            "retained_versions": sorted(retained_versions),
-            "expired_versions": sorted(expired_versions),
-            "removed_dirs": removed_dirs,
+            "retained_versions": [v for v in metalog.versions(self.root) if v >= cutoff],
+            "expired_versions": expired,
+            "removed_dirs": removed,
         }
 
     def history(self) -> list[dict]:
@@ -1871,17 +1691,10 @@ class LakeTable:
         bucket pointers moved, and the schema/clustering state. Pure
         driver-side metadata reads — no Spark job, cost O(versions),
         independent of table size."""
-        md_dir = os.path.join(self.root, "metadata")
-        versions = sorted(
-            int(n.removeprefix("version-").removesuffix(".json"))
-            for n in os.listdir(md_dir)
-            if n.startswith("version-") and n.endswith(".json")
-        )
         out: list[dict] = []
         prev_meta: dict | None = None
-        for v in versions:
-            with open(os.path.join(md_dir, f"version-{v}.json")) as f:
-                meta = json.load(f)
+        for v in metalog.versions(self.root):
+            meta = metalog.read(self.root, v)
             # after expire_snapshots the oldest retained version has no
             # predecessor on disk: its per-commit diff is UNKNOWABLE,
             # not "everything ever" — report it as a baseline instead
@@ -1939,64 +1752,75 @@ class LakeTable:
         ``expire_snapshots``, which reclaims superseded history and
         must be run in a quiet window. Keeps every metadata version;
         driver-side filesystem work only, no Spark job."""
-        import shutil
-        import time
+        removed, kept_recent = self._sweep(
+            self._unreferenced(self._referenced_dirs()), older_than_seconds
+        )
+        return {"removed_dirs": removed, "kept_recent": kept_recent}
 
-        md_dir = os.path.join(self.root, "metadata")
-        referenced: set[str] = set()
-        for name in os.listdir(md_dir):
-            if not name.startswith("version-") or not name.endswith(".json"):
-                continue
-            with open(os.path.join(md_dir, name)) as f:
-                meta = json.load(f)
-            for entry in meta["buckets"].values():
-                for s in entry_sources(entry):  # base + MOR delta dirs
-                    referenced.add(os.path.normpath(s["dir"]))
+    def _referenced_dirs(self, min_version: int = 0) -> set[str]:
+        """Every data dir (base + MOR deltas) that a version document
+        at or above ``min_version`` references — documents above HEAD
+        included: a commit in flight has renamed its document into place
+        and holds the flock until its pointer swap, which the sweeps do
+        not take."""
+        return {
+            os.path.normpath(s["dir"])
+            for _, meta in metalog.docs(self.root, min_version)
+            for entry in meta["buckets"].values()
+            for s in entry_sources(entry)
+        }
 
-        referenced_vdirs = {os.path.dirname(rel) for rel in referenced}
-        cutoff = time.time() - older_than_seconds
+    def _unreferenced(self, referenced: set[str]) -> list[str]:
+        """Entries of ``data/<vdir>/`` that no referenced set names:
+        bucket dirs, plus loose files (write markers like ``_SUCCESS``)
+        of a vdir no referenced dir lives in — a live vdir's markers
+        are not orphans. Referenced paths are bucket dirs like
+        ``data/vN/_bucket=K``."""
         data_dir = os.path.join(self.root, "data")
-        removed: list[str] = []
-        kept_recent: list[str] = []
+        live_vdirs = {os.path.dirname(rel) for rel in referenced}
+        out: list[str] = []
         for vdir in sorted(os.listdir(data_dir)) if os.path.isdir(data_dir) else []:
             vpath = os.path.join(data_dir, vdir)
             if not os.path.isdir(vpath):
                 continue
-            vdir_live = os.path.normpath(os.path.join("data", vdir)) in referenced_vdirs
+            vrel = os.path.normpath(os.path.join("data", vdir))
             for bdir in sorted(os.listdir(vpath)):
-                rel = os.path.normpath(os.path.join("data", vdir, bdir))
-                if rel in referenced:
+                rel = os.path.join(vrel, bdir)
+                if rel in referenced or (vrel in live_vdirs and not os.path.isdir(os.path.join(vpath, bdir))):
                     continue
-                target_is_dir = os.path.isdir(os.path.join(vpath, bdir))
-                if vdir_live and not target_is_dir:
-                    # loose write markers (_SUCCESS etc.) of a LIVE
-                    # commit's version dir — not orphans
-                    continue
-                target = os.path.join(vpath, bdir)
-                # newest mtime anywhere under the dir: a writer still
-                # streaming files into it keeps bumping this
-                if os.path.isdir(target):
-                    newest = max(
-                        (
-                            os.path.getmtime(os.path.join(dp, f))
-                            for dp, _, fs in os.walk(target)
-                            for f in fs
-                        ),
-                        default=os.path.getmtime(target),
-                    )
-                else:
-                    newest = os.path.getmtime(target)
-                if newest > cutoff:
-                    kept_recent.append(rel)
-                    continue
-                if os.path.isdir(target):
-                    shutil.rmtree(target, ignore_errors=True)
-                else:  # stray write markers (_SUCCESS etc.)
-                    os.remove(target)
+                out.append(rel)
+        return out
+
+    def _sweep(self, candidates: list[str], older_than_seconds: float) -> tuple[list[str], list[str]]:
+        """Delete the unreferenced ``candidates`` idle for longer than
+        ``older_than_seconds`` — judged by the NEWEST mtime under each,
+        which a writer still streaming files into it keeps bumping — and
+        then every emptied vdir. Returns (removed, kept as too recent)."""
+        import shutil
+
+        cutoff = time.time() - float(older_than_seconds)
+        removed: list[str] = []
+        kept_recent: list[str] = []
+        for rel in candidates:
+            target = os.path.join(self.root, rel)
+            newest = max(
+                (os.path.getmtime(os.path.join(dp, f)) for dp, _, fs in os.walk(target) for f in fs),
+                default=os.path.getmtime(target),
+            )
+            if newest > cutoff:
+                kept_recent.append(rel)
+            elif os.path.isdir(target):
+                shutil.rmtree(target, ignore_errors=True)
                 removed.append(rel)
+            else:  # stray write markers (_SUCCESS etc.)
+                os.remove(target)
+                removed.append(rel)
+        data_dir = os.path.join(self.root, "data")
+        for vdir in sorted(os.listdir(data_dir)) if os.path.isdir(data_dir) else []:
+            vpath = os.path.join(data_dir, vdir)
             if os.path.isdir(vpath) and not os.listdir(vpath):
                 os.rmdir(vpath)
-        return {"removed_dirs": removed, "kept_recent": kept_recent}
+        return removed, kept_recent
 
     # ---- commit ----------------------------------------------------------
 
@@ -2056,55 +1880,14 @@ class LakeTable:
         the base (appending to nothing IS the base), so ``e["dir"]``
         stays total for every reader.
 
-        Optimistic concurrency: the head re-check and the pointer swap
-        happen under an exclusive ``flock`` on ``metadata/COMMIT_LOCK``,
+        Optimistic concurrency: ``metalog.commit`` re-checks the head
+        and swaps the pointer under the log's exclusive commit lock,
         so two writers racing from the same base version serialize and
         the loser gets a ``RuntimeError`` (reload-and-retry is the
         caller's move) instead of silently overwriting the winner's
         commit — the single-filesystem analog of Iceberg's conditional
         metadata swap (on an object store this would be a
         compare-and-swap / conditional PUT)."""
-        import fcntl
-
-        md_dir = os.path.join(self.root, "metadata")
-        with open(os.path.join(md_dir, "COMMIT_LOCK"), "w") as lock:
-            fcntl.flock(lock, fcntl.LOCK_EX)
-            try:
-                self._commit_locked(
-                    new_bucket_dirs,
-                    removed_buckets,
-                    batch_record,
-                    schema_version,
-                    bucket_row_counts,
-                    meta_updates,
-                    bucket_max_lsns,
-                    delta_appends,
-                )
-            finally:
-                fcntl.flock(lock, fcntl.LOCK_UN)
-
-    def _commit_locked(
-        self,
-        new_bucket_dirs: dict[int, str],
-        removed_buckets: set[int],
-        batch_record: tuple[int, dict] | None,
-        schema_version: int | None,
-        bucket_row_counts: dict[int, int] | None,
-        meta_updates: dict | None,
-        bucket_max_lsns: dict[int, int | None] | None = None,
-        delta_appends: dict[int, dict] | None = None,
-    ) -> None:
-        current = os.path.join(self.root, "metadata", "CURRENT")
-        if os.path.exists(current):
-            with open(current) as f:
-                head = int(f.read().strip().removeprefix("version-").removesuffix(".json"))
-            if head > self.version:
-                raise RuntimeError(
-                    f"table HEAD is version {head} but this handle is at "
-                    f"{self.version} (a time-travel snapshot, a stale loader, "
-                    "or a concurrent writer won the race): committing would "
-                    "fork/rewind history — reload the table and retry"
-                )
         meta = json.loads(json.dumps(self.meta))  # deep copy
         meta["version"] = self.version + 1
         if schema_version is not None:
@@ -2141,29 +1924,5 @@ class LakeTable:
             meta["committed_batches"][str(batch_id)] = rec
         if meta_updates:
             meta.update(meta_updates)
-        meta["committed_at_unix"] = time.time()
-        self._write_metadata(meta)
+        metalog.commit(self.root, self.version, meta)
         self.meta = meta
-
-    def _write_metadata(self, meta: dict) -> None:
-        md_dir = os.path.join(self.root, "metadata")
-        name = f"version-{meta['version']}.json"
-        # the version document itself is published atomically (tmp +
-        # replace), not just CURRENT: concurrent metadata READERS that
-        # list version files (history, remove_orphans, expire) must
-        # never observe a half-written JSON — a commit is serialized
-        # against other commits by the flock, not against readers
-        vtmp = os.path.join(md_dir, f".{name}.tmp")
-        with open(vtmp, "w") as f:
-            json.dump(meta, f, indent=1)
-            f.flush()
-            os.fsync(f.fileno())
-        os.replace(vtmp, os.path.join(md_dir, name))
-        _fsync_dir(md_dir)  # durable before CURRENT can name it
-        tmp = os.path.join(md_dir, "CURRENT.tmp")
-        with open(tmp, "w") as f:
-            f.write(name)
-            f.flush()
-            os.fsync(f.fileno())
-        os.replace(tmp, os.path.join(md_dir, "CURRENT"))
-        _fsync_dir(md_dir)

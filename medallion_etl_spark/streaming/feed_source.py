@@ -18,8 +18,9 @@ parquet directly with pyarrow and yielding Arrow RecordBatches —
 no driver materialization, and the `_lsn > watermark` filter uses
 parquet row-group statistics via pyarrow's predicate pushdown.
 
-Contracts (same as `read_changes`, documented there): the feed is the
-NET change per key between offsets; tombstones older than a later
+Contracts (same as `read_changes`; both plan with
+`cdc.table.plan_changes`): the feed is the NET change per key between
+offsets; tombstones older than a later
 `compact()` watermark are not replayable; the output schema is fixed
 at query start. A schema evolution DURING a run fails the query
 loudly (Delta's fail-on-schema-change behavior — narrowing the
@@ -44,7 +45,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 from pyspark.sql.datasource import DataSource, DataSourceStreamReader, InputPartition
 
-from ..cdc.table import LakeTable, entry_max_lsn, entry_signature, entry_sources
+from ..cdc.table import LakeTable, plan_changes
 
 FORMAT_NAME = "lake_feed"
 
@@ -161,75 +162,24 @@ class LakeFeedStreamReader(DataSourceStreamReader):
         self._cursor = max(self._cursor, start_v, end_v)
         if end_v <= start_v:
             return []
-        old = LakeTable.load_version(self.root, start_v)
         new = LakeTable.load_version(self.root, end_v)
-        # restore gate (same reason as read_changes): a RESTORE inside
-        # the span resurrects rows at their ORIGINAL LSNs — below this
-        # watermark — which the `_lsn > watermark` pruning would
-        # silently miss. Fail the query; the downstream re-bootstraps.
-        last_restore = int(new.meta.get("last_restore_commit", 0))
-        if start_v < last_restore:
-            raise ValueError(
-                f"stream offset version {start_v} predates the RESTORE "
-                f"committed at version {last_restore}: restored rows carry "
-                "pre-restore LSNs the feed cannot represent — restart the "
-                "stream from a fresh bootstrap"
+        # the batch feed's own planner (cdc/table.py plan_changes): same
+        # gates (restore, retention, watermark crossing) and the same
+        # bucket diff with per-source max_lsn pruning (a MOR delta-append
+        # span reads ONLY the appended delta files)
+        watermark, changed = plan_changes(
+            LakeTable.load_version(self.root, start_v).meta, new.meta
+        )
+        return [
+            FeedPartition(
+                sources=[(os.path.join(self.root, s["dir"]), s["schema_version"]) for s in srcs],
+                key_col=new.key_col,
+                target_schema_version=self.target_sv,
+                watermark_lsn=watermark,
+                schemas_json=self.schemas_json,
             )
-        watermark = old.max_committed_lsn()
-        purge_lsn = int(new.meta.get("compaction_watermark_lsn", -1))
-        if watermark < purge_lsn:
-            # retention gate (same as read_changes): a compaction purged
-            # tombstones this stream has not consumed — failing the
-            # query beats silently losing deletes
-            raise ValueError(
-                f"stream offset version {start_v} (watermark LSN {watermark}) "
-                f"predates a compaction purge up to LSN {purge_lsn}; "
-                "restart the stream from a fresh bootstrap"
-            )
-        from ..cdc.table import watermark_crossing_batches
-
-        crossers = watermark_crossing_batches(old.meta, new.meta, watermark)
-        if crossers:
-            # out-of-order / backfill commit inside the span: its rows
-            # sit at LSNs the watermark pruning skips — fail loudly
-            # (same hazard class and remedy as the restore gate)
-            raise ValueError(
-                f"stream span v{start_v}->v{end_v} (watermark LSN {watermark}) "
-                f"contains batch(es) {crossers} committed at or below the "
-                "watermark (out-of-order chunk / LSN-range backfill); an "
-                "LSN-watermark feed cannot represent them — restart the "
-                "stream from a fresh bootstrap"
-            )
-        old_sigs = {b: entry_signature(e) for b, e in old.meta["buckets"].items()}
-        key_col = new.meta["key_col"]
-        # same layout-diff + max_lsn skip as read_changes: a bucket
-        # rewritten by compaction/rebucket moved its pointer without
-        # adding LSNs, so its partition would emit zero rows — don't
-        # plan it; within a planned bucket, individual sources proven
-        # at/below the watermark by their footer stat are pruned too
-        out: list[FeedPartition] = []
-        for b, e in new.meta["buckets"].items():
-            if old_sigs.get(b) == entry_signature(e):
-                continue
-            m = entry_max_lsn(e)
-            if m is not None and m <= watermark:
-                continue
-            sources = [
-                (os.path.join(self.root, s["dir"]), s["schema_version"])
-                for s in entry_sources(e)
-                if not (s["max_lsn"] is not None and int(s["max_lsn"]) <= watermark)
-            ]
-            if sources:
-                out.append(
-                    FeedPartition(
-                        sources=sources,
-                        key_col=key_col,
-                        target_schema_version=self.target_sv,
-                        watermark_lsn=watermark,
-                        schemas_json=self.schemas_json,
-                    )
-                )
-        return out
+            for srcs in changed.values()
+        ]
 
     # -- data (executor-side, Arrow batches) ----------------------------
 

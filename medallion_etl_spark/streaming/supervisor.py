@@ -11,7 +11,7 @@ module automates that loop, the way a Databricks job retry (or Delta's
 stream.
 
 Only the evolution failure is retried. Everything else — including the
-retention-gate error ("predates a compaction purge"), which a restart
+retention-gate error ("predates a compaction"), which a restart
 can NEVER fix because the missing tombstones are gone — re-raises
 immediately; retrying non-recoverable failures would turn data loss
 into a silent crash loop.
