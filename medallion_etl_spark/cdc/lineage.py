@@ -58,7 +58,12 @@ def write_lineage(spark: SparkSession, table_root: str, batch_id: int, rows: lis
 
 
 def read_lineage(spark: SparkSession, table_root: str) -> DataFrame:
+    """Every batch's lineage rows, always in ``LINEAGE_SCHEMA``'s column
+    order and types. The schema is passed, not inferred: inference
+    costs a Spark job, types the ``batch_id`` partition column by the
+    values on disk (``int`` below 2^31, ``bigint`` for stream-range
+    ids) and puts it last."""
     path = lineage_dir(table_root)
     if not os.path.exists(path):
         return spark.createDataFrame([], LINEAGE_SCHEMA)
-    return spark.read.parquet(path)
+    return spark.read.schema(LINEAGE_SCHEMA).parquet(path).select(*LINEAGE_SCHEMA.fieldNames())

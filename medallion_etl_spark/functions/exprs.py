@@ -102,12 +102,17 @@ def md5_bucket(col, mod: int) -> Column:
     definition of this cross-engine hash — md5_bucket_sql is its DuckDB
     twin; keep them in lockstep (oracle pairing depends on it). Salt by
     concatenating into the input ('<salt>|' + value), not by changing
-    the fold."""
-    h = F.md5(F.encode(col, "UTF-8"))
-    acc = F.ascii(F.substring(h, 1, 1))
-    for i in range(2, 6):
-        acc = acc * 31 + F.ascii(F.substring(h, i, 1))
-    return (acc % mod).cast("int")
+    the fold. The md5 is bound once with ``let``: the fold reads it five
+    times, and inside a lambda (the tokenizer's per-word ``transform``)
+    each read would hash the word again."""
+
+    def fold(h: Column) -> Column:
+        acc = F.ascii(F.substring(h, 1, 1))
+        for i in range(2, 6):
+            acc = acc * 31 + F.ascii(F.substring(h, i, 1))
+        return (acc % mod).cast("int")
+
+    return let(F.md5(F.encode(col, "UTF-8")), fold)
 
 
 def md5_bucket_sql(expr: str, mod: int) -> str:

@@ -135,15 +135,20 @@ def packed_batch_payloads(spark: SparkSession, sf: str) -> DataFrame:
     docs = spread(spark, T(spark, sf, "documents"))
     words = F.filter(F.split(F.lower("text"), " "), lambda w: F.length(w) > 0)
     ids = F.transform(words, _token_id)
-    toks = docs.select(
-        "doc_id", "source", ids.alias("ids"), F.size(ids).alias("n_tok")
-    ).filter(F.col("n_tok") > 0)
+    # one tokenization per row: n_tok reads the projected ids, and the
+    # empty-doc filter sits above the window (an empty doc adds 0 to the
+    # prefix sum) so it is not pushed down onto a second tokenization
+    toks = docs.select("doc_id", "source", ids.alias("ids")).select(
+        "doc_id", "source", "ids", F.size("ids").alias("n_tok")
+    )
     w = (
         Window.partitionBy("source")
         .orderBy("doc_id")
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
-    pre = toks.withColumn("tok_before", F.sum("n_tok").over(w) - F.col("n_tok"))
+    pre = toks.withColumn("tok_before", F.sum("n_tok").over(w) - F.col("n_tok")).filter(
+        F.col("n_tok") > 0
+    )
     first_p = F.floor(F.col("tok_before") / budget)
     last_p = F.floor((F.col("tok_before") + F.col("n_tok") - 1) / budget)
     spans = pre.select(

@@ -200,12 +200,12 @@ def tokenize_documents_raw(spark: SparkSession, sf: str) -> DataFrame:
     docs = spread(spark, T(spark, sf, "documents"))
     words = F.filter(F.split(F.lower("text"), " "), lambda w: F.length(w) > 0)
     tokens = F.transform(words, _token_id)
-    return docs.select(
-        "doc_id",
-        tokens.alias("tokens"),
-        F.size(tokens).cast("int").alias("n_tok"),
-        "source",
-    ).orderBy("doc_id")
+    # n_tok reads the projected array: one tokenization per row (plan-pinned)
+    return (
+        docs.select("doc_id", tokens.alias("tokens"), "source")
+        .select("doc_id", "tokens", F.size("tokens").cast("int").alias("n_tok"), "source")
+        .orderBy("doc_id")
+    )
 
 
 def tokenize_documents(spark: SparkSession, sf: str) -> DataFrame:

@@ -10,16 +10,84 @@ loops in the reference) becomes partition-parallel reads.
 from __future__ import annotations
 
 import os
+import stat
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 
+# Session settings that change how a parquet footer maps to a Catalyst
+# schema (or, for a directory-form table, which columns it infers): one
+# file can read as different schemas under different values.
+_SCHEMA_CONFS = (
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.mergeSchema",
+    "spark.sql.sources.partitionColumnTypeInference.enabled",
+)
+
+# path -> (identity, schema): one entry per table path, replaced when the
+# path's files or the settings above change. Two threads missing at once
+# both infer and each stores a matching pair: a race costs a job, never
+# a wrong schema.
+_SCHEMAS: dict[str, tuple[tuple, T.StructType]] = {}
+
+
+def _file_identity(path: str) -> tuple | None:
+    """(relative path, inode, size, mtime_ns, ctime_ns) of the file, or
+    of every entry under a directory-form table (partition dirs
+    included); None when the driver cannot stat the path (missing, or a
+    URI such as ``s3a://``)."""
+
+    def ident(rel: str, st: os.stat_result) -> tuple:
+        return (rel, st.st_ino, st.st_size, st.st_mtime_ns, st.st_ctime_ns)
+
+    try:
+        st = os.stat(path)
+    except OSError:
+        return None
+    if not stat.S_ISDIR(st.st_mode):
+        return (ident("", st),)
+    out = []
+    for root, dirs, files in os.walk(path):
+        dirs.sort()
+        for name in dirs + sorted(files):
+            full = os.path.join(root, name)
+            try:
+                out.append(ident(os.path.relpath(full, path), os.stat(full)))
+            except OSError:  # removed while walking: identity is unknown
+                return None
+    return tuple(out)
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Parquet table from a testdata scale dir (columnar scan with
-    pushdown — the engine's default source)."""
-    return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    pushdown — the engine's default source).
+
+    A schema-less ``spark.read.parquet`` launches a one-task Spark job
+    to read a footer, and the operator layer's small scans pay it on
+    every query (8 of a curate pass's 42 jobs). The schema is inferred
+    once per file identity (see ``_file_identity``) and session
+    settings, then every read plans as ``spark.read.schema(s)``, which
+    launches no job. A rewritten file or an added part file changes the
+    identity, so the next read infers again. A path the driver cannot
+    stat reads schema-less, so its errors (``PATH_NOT_FOUND``) are
+    Spark's own."""
+    path = os.path.join(sf_dir, f"{name}.parquet")
+    ident = _file_identity(path)
+    if ident is None:
+        return spark.read.parquet(path)
+    key = (ident, tuple(spark.conf.get(k, None) for k in _SCHEMA_CONFS))
+    hit = _SCHEMAS.get(path)
+    if hit is not None and hit[0] == key:
+        schema = hit[1]
+    else:
+        schema = spark.read.parquet(path).schema
+        _SCHEMAS[path] = (key, schema)
+    return spark.read.schema(schema).parquet(path)
 
 
 def read_csv_semicolon(

@@ -129,6 +129,28 @@ def test_manifest_and_lineage(spark, tmp_path, events_path):
     assert (lin[lin["bytes_written"] > 0]["rows_applied"] > 0).all()
 
 
+@pytest.mark.parametrize(
+    "batch_ids",
+    [[0, 7], [1 << 40, (1 << 40) + 1], []],
+    ids=["small-ids", "stream-range-ids", "empty"],
+)
+def test_lineage_reads_in_its_declared_schema(spark, tmp_path, batch_ids):
+    """Column order and types come from LINEAGE_SCHEMA whatever the ids
+    on disk: inferred, ``batch_id`` read as ``int`` below 2^31, as
+    ``bigint`` above, and came last unless the table was empty."""
+    from medallion_etl_spark.cdc.lineage import write_lineage
+    from medallion_etl_spark.schemas import LINEAGE_SCHEMA
+
+    root = str(tmp_path / "t")
+    for b in batch_ids:
+        row = {"partition_id": 3, "lsn_lo": b, "lsn_hi": b + 1, "rows_applied": 2,
+               "bytes_written": 10}
+        write_lineage(spark, root, b, [row])
+    lin = read_lineage(spark, root)
+    assert lin.dtypes == [(f.name, f.dataType.simpleString()) for f in LINEAGE_SCHEMA]
+    assert sorted(tuple(r) for r in lin.collect()) == [(b, 3, b, b + 1, 2, 10) for b in batch_ids]
+
+
 def test_cow_and_mor_replays_match_oracle(spark, tmp_path, events_path, events_pdf):
     """Both write modes feed the one merge kernel a different input —
     base ∪ chunk rewritten (COW), the chunk alone appended and folded

@@ -6,7 +6,8 @@ anti/semi joins planned as joins (not subquery re-scans). The
 LakeTable read path is pinned too: one parquet scan per schema version
 over any number of delta dirs, no Spark job to plan a read, and one
 shuffle for a merge-on-read append. Operators that hand a row's words
-or shingles to lambdas must bind that array once per row.
+or shingles to lambdas must bind that array once per row, and the
+tokenizer hashes each word once.
 
 These tests pin the *plan*, the oracle tests pin the *values*."""
 
@@ -492,6 +493,24 @@ def test_word_split_is_bound_once_per_projection(spark, sf_small, name):
         spark.catalog.clearCache()
     assert nodes >= 1
     assert most == 1, f"{name}: a projection splits the text {most} times"
+
+
+_TOKENIZERS = ["tokenize_documents_raw", "packed_batch_payloads"]
+
+
+@pytest.mark.smoke
+@pytest.mark.parametrize("name", _TOKENIZERS)
+def test_tokenizer_hashes_each_word_once_and_tokenizes_each_row_once(spark, sf_small, name):
+    """Counted over the whole optimized plan: one md5 per word inside
+    the token-id lambda (md5_bucket reads its digest five times) and
+    one tokenization per row (``n_tok`` reads the projected token
+    array; the empty-doc filter is not pushed onto a second copy)."""
+    from medallion_etl_spark.operators import packing, repetition
+
+    fn = getattr(repetition, name, None) or getattr(packing, name)
+    p = fn(spark, sf_small)._jdf.queryExecution().optimizedPlan().toString()
+    assert p.count("split(lower(text") == 1, f"{name}: the text is tokenized more than once"
+    assert p.count("md5(static_invoke(Encode.encode(lambda") == 1, f"{name}: md5 per word > 1"
 
 
 @pytest.mark.smoke
