@@ -102,17 +102,24 @@ def md5_bucket(col, mod: int) -> Column:
     definition of this cross-engine hash — md5_bucket_sql is its DuckDB
     twin; keep them in lockstep (oracle pairing depends on it). Salt by
     concatenating into the input ('<salt>|' + value), not by changing
-    the fold. The md5 is bound once with ``let``: the fold reads it five
-    times, and inside a lambda (the tokenizer's per-word ``transform``)
-    each read would hash the word again."""
+    the fold. A plain row expression: whole-stage codegen computes the
+    md5 once for the fold's five reads. Inside a lambda nothing is
+    shared, so there bind the digest first:
+    ``let(md5_hex(w), lambda h: md5_fold(h, mod))``."""
+    return md5_fold(md5_hex(col), mod)
 
-    def fold(h: Column) -> Column:
-        acc = F.ascii(F.substring(h, 1, 1))
-        for i in range(2, 6):
-            acc = acc * 31 + F.ascii(F.substring(h, i, 1))
-        return (acc % mod).cast("int")
 
-    return let(F.md5(F.encode(col, "UTF-8")), fold)
+def md5_hex(col) -> Column:
+    """The md5 hex digest of a string column's UTF-8 bytes."""
+    return F.md5(F.encode(col, "UTF-8"))
+
+
+def md5_fold(h: Column, mod: int) -> Column:
+    """md5_bucket's fold over an already computed hex digest ``h``."""
+    acc = F.ascii(F.substring(h, 1, 1))
+    for i in range(2, 6):
+        acc = acc * 31 + F.ascii(F.substring(h, i, 1))
+    return (acc % mod).cast("int")
 
 
 def md5_bucket_sql(expr: str, mod: int) -> str:

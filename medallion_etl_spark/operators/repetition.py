@@ -31,7 +31,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.exprs import let, md5_bucket, md5_bucket_sql
+from ..functions.exprs import let, md5_bucket_sql, md5_fold, md5_hex
 from ..sources.readers import load_table as T
 from .util import spread
 
@@ -187,7 +187,9 @@ VOCAB_SIZE = 32768
 
 
 def _token_id(w: F.Column) -> F.Column:
-    return md5_bucket(w, VOCAB_SIZE)
+    # md5_bucket with its digest bound once: this runs inside transform's
+    # lambda, where each of the fold's five reads would hash the word again
+    return let(md5_hex(w), lambda h: md5_fold(h, VOCAB_SIZE))
 
 
 def tokenize_documents_raw(spark: SparkSession, sf: str) -> DataFrame:

@@ -1,14 +1,13 @@
 #!/usr/bin/env python
 """Interleaved A/B of the repository benchmark: a parent revision
-against this checkout (or another revision), run pair by pair.
+against this checkout, run pair by pair.
 
     python scripts/ab.py <parent-rev> --workload curate --pairs 10 --seed0 1901
     python scripts/ab.py HEAD~1 --workload trickle --pairs 10 --seed0 1911 --out BENCH/x.json
 
 The parent revision is extracted with ``git archive`` into a temporary
-directory that is removed on exit (``--change-rev`` does the same for
-the change side; by default the change side is this checkout's working
-tree). Pair ``i`` runs ``python3 perfbench/run.py --workload W --seed
+directory that is removed on exit; the change side is this checkout's
+working tree. Pair ``i`` runs ``python3 perfbench/run.py --workload W --seed
 seed0+i --seconds 18 --trace 0`` once in each checkout, one process at
 a time, and the side that runs first alternates from pair to pair. Each
 run's result is the JSON line ``perfbench/run.py`` prints last.
@@ -35,6 +34,7 @@ import sys
 import tempfile
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+SECONDS = 18  # the run length of the measurement protocol
 
 
 def quartiles(values: list[float]) -> tuple[float, float, float]:
@@ -115,9 +115,9 @@ def extract(rev: str, into: str) -> None:
     subprocess.run(["tar", "-x", "-C", into], input=archive, check=True)
 
 
-def run_once(checkout: str, workload: str, seed: int, seconds: float) -> dict:
+def run_once(checkout: str, workload: str, seed: int) -> dict:
     cmd = [sys.executable, "perfbench/run.py", "--workload", workload, "--seed", str(seed),
-           "--seconds", str(seconds), "--trace", "0"]
+           "--seconds", str(SECONDS), "--trace", "0"]
     proc = subprocess.run(cmd, cwd=checkout, capture_output=True, text=True, timeout=1800)
     last = proc.stdout.strip().splitlines()[-1] if proc.stdout.strip() else "null"
     result = json.loads(last)
@@ -132,8 +132,6 @@ def main(argv: list[str] | None = None) -> int:
     ap.add_argument("--workload", required=True)
     ap.add_argument("--pairs", type=int, default=10)
     ap.add_argument("--seed0", type=int, required=True)
-    ap.add_argument("--seconds", type=float, default=18)
-    ap.add_argument("--change-rev", help="a revision to run instead of this working tree")
     ap.add_argument("--out", help="write every run's result here as JSON")
     args = ap.parse_args(argv)
 
@@ -143,15 +141,12 @@ def main(argv: list[str] | None = None) -> int:
     try:
         checkouts = {"parent": os.path.join(tmp, "parent"), "change": ROOT}
         extract(args.parent_rev, checkouts["parent"])
-        if args.change_rev:
-            checkouts["change"] = os.path.join(tmp, "change")
-            extract(args.change_rev, checkouts["change"])
         seeds = [args.seed0 + i for i in range(args.pairs)]
         runs: dict[str, list[dict]] = {"parent": [], "change": []}
         for i, seed in enumerate(seeds):
             order = ("parent", "change") if i % 2 == 0 else ("change", "parent")
             for side in order:
-                r = run_once(checkouts[side], args.workload, seed, args.seconds)
+                r = run_once(checkouts[side], args.workload, seed)
                 runs[side].append(r)
                 print(f"# pair {i + 1}/{args.pairs} seed {seed} {side}: " + ", ".join(
                     f"{k}={v['value']:.3f}" for k, v in r["metrics"].items()
@@ -162,8 +157,7 @@ def main(argv: list[str] | None = None) -> int:
     if args.out:
         with open(args.out, "w") as f:
             json.dump({"workload": args.workload, "parent_rev": args.parent_rev,
-                       "change_rev": args.change_rev or "working tree", "seeds": seeds,
-                       "runs": runs}, f, indent=1)
+                       "seeds": seeds, "runs": runs}, f, indent=1)
     print(table(args.workload, seeds, runs, bounds))
     bad = flags(runs, seeds)
     for line in bad:

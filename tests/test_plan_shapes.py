@@ -514,6 +514,19 @@ def test_tokenizer_hashes_each_word_once_and_tokenizes_each_row_once(spark, sf_s
 
 
 @pytest.mark.smoke
+@pytest.mark.parametrize("name", ["train_val_test_split", "cms_word_counts"])
+def test_row_level_md5_bucket_stays_a_codegen_expression(spark, sf_small, name):
+    """Outside a lambda ``md5_bucket`` is a plain row expression that
+    whole-stage codegen evaluates with its md5 computed once; binding
+    it with ``let`` there would add an interpreted ``transform``."""
+    from medallion_etl_spark.operators import sampling, sketch
+
+    fn = getattr(sampling, name, None) or getattr(sketch, name)
+    p = fn(spark, sf_small)._jdf.queryExecution().optimizedPlan().toString()
+    assert "md5(" in p and "lambda" not in p, f"{name}: md5_bucket runs inside a lambda"
+
+
+@pytest.mark.smoke
 def test_token_minhash_binds_the_token_strings_once(spark):
     from medallion_etl_spark.operators.dedup_incremental import token_minhash
 
