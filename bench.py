@@ -32,8 +32,9 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from medallion_etl_spark.session import DEFAULT_PARALLELISM as DEFAULT_CPUS  # noqa: E402
+
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 DEFAULT_CDC_EVENTS = int(os.environ.get("SPARK_GRAFT_BENCH_EVENTS", "8000000"))
 
 # Bench tables/shuffle go to tmpfs when available: the sandbox is ONE

@@ -40,7 +40,7 @@ import time
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .constraints import fail_on_violations, violation_reason
+from .constraints import violation_reason
 from .dedup import dedup_latest
 from .evolve import aligned_cols
 from .lineage import write_lineage
@@ -51,6 +51,7 @@ from .table import (
     entry_signature,
     map_bucket_dirs,
 )
+from .triage import fail_on_violations
 
 
 def _rebase_safe(
@@ -243,16 +244,16 @@ def apply_batch(
     key = table.key_col
 
     # per-bucket chunk stats: touched buckets + lineage + the stream's
-    # max schema_version. The batch replayer precomputes these for ALL
-    # chunks in one upfront aggregation (see replay.py) so the per-
-    # chunk path has no extra job; direct callers (streaming epochs,
-    # tests) fall back to computing them here — one small job, map-side
-    # partial agg collapsing to n_buckets rows per task.
+    # max schema_version. Both replayers precompute these in their one
+    # triage aggregation (cdc/triage.py) so the per-chunk path has no
+    # extra job; direct callers (DML, redrive, tests) fall back to
+    # computing them here — one small job, map-side partial agg
+    # collapsing to n_buckets rows per task.
     has_sv = "schema_version" in chunk.columns
     if precomputed_stats is not None:
-        # the batch replayer computed these in its one upfront
-        # aggregation — which also enforced (or diverted) CHECK
-        # constraints and malformed events for the whole stream.
+        # the replayer's triage computed these in the aggregation that
+        # also enforced (or diverted) CHECK constraints and malformed
+        # events.
         # A caller that declares the layout its stats were computed
         # under must still match this handle's: stale _bucket ids
         # against a rebucketed table would merge a PARTIAL base and
@@ -274,13 +275,12 @@ def apply_batch(
             if has_sv
             else [F.lit(None).cast("int").alias("max_sv")]
         )
-        # CHECK-constraint enforcement for direct callers (streaming
-        # epochs pre-check in stream_replay; predicate DML and tests
-        # land here): the violation count rides this same stats job —
-        # zero extra jobs on the clean path, per-constraint diagnostic
-        # only on the error path. apply_batch itself is fail-only; the
-        # quarantine/drop policies live in the replayers, which can
-        # divert rows BEFORE planning.
+        # CHECK-constraint enforcement for direct callers (predicate
+        # DML, redrive and tests land here): the violation count rides
+        # this same stats job — zero extra jobs on the clean path,
+        # per-constraint diagnostic only on the error path. apply_batch
+        # itself is fail-only; the quarantine/drop policies live in
+        # cdc/triage.py, which the replayers run BEFORE planning.
         vreason = violation_reason(table.constraints)
         viol_agg = (
             [F.count_if(vreason.isNotNull()).alias("_viol")]
@@ -300,9 +300,7 @@ def apply_batch(
         )
         total_viol = sum(int(r["_viol"]) for r in stats)
         if total_viol:
-            fail_on_violations(
-                chunk, table.constraints, total_viol, context=f"batch {batch_id}"
-            )
+            fail_on_violations(chunk, vreason, total_viol, context=f"batch {batch_id}")
     mark("stats")
     changed = sorted(int(r["_bucket"]) for r in stats)
     if not changed:

@@ -16,19 +16,17 @@ Semantics (SQL-standard CHECK):
   for NOT-NULL semantics);
 - delete tombstones are exempt: a 'D' event names a key, not a
   payload, so payload predicates have nothing to check;
-- enforcement policy mirrors the malformed-event policy
-  (quarantine.py): 'fail' raises before anything is applied (the
-  violation count rides the replayers' existing upfront/epoch
-  aggregations — zero extra jobs on the clean path), 'quarantine'
-  diverts violating events (+ ``_reason = 'check:<name>'``),
-  'drop' discards them with a count.
+- enforcement: the replayers' fail/quarantine/drop ``on_violation``
+  policy (and the malformed-event policy, which wins per row) is
+  decided in cdc/triage.py; ``apply_batch``'s direct callers
+  (predicate DML, redrive) enforce 'fail' on their own stats job.
 
 Everything is pure column expressions — no per-row Python.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
@@ -54,46 +52,3 @@ def violation_reason(constraints: dict[str, str], *, op_aware: bool = True) -> C
         w = F.when(cond, lit) if w is None else w.when(cond, lit)
     return w
 
-
-def violation_counts(df: DataFrame, constraints: dict[str, str], *, op_aware: bool = True) -> dict[str, int]:
-    """Per-constraint violation counts in one aggregation — the ERROR
-    path's diagnostic (the clean path never runs this; its single total
-    rides the caller's existing aggregation).
-
-    Counts by the same first-violated-constraint attribution the
-    ``_reason`` tag uses, so a row violating several constraints is
-    counted ONCE and the per-constraint detail always sums to the
-    caller's total — independent per-predicate counts would overstate
-    it and send the operator hunting for phantom rows."""
-    reason = violation_reason(constraints, op_aware=op_aware)
-    rows = (
-        df.select(reason.alias("_r"))
-        .filter(F.col("_r").isNotNull())
-        .groupBy("_r")
-        .count()
-        .collect()
-    )
-    return {r["_r"]: int(r["count"]) for r in sorted(rows, key=lambda r: r["_r"])}
-
-
-def split_violations(events: DataFrame, constraints: dict[str, str]) -> tuple[DataFrame, DataFrame]:
-    """(passing, violating-with-``_reason``) — one tagging expression so
-    the two frames can never disagree about a row."""
-    reason = violation_reason(constraints)
-    return (
-        events.filter(reason.isNull()),
-        events.withColumn("_reason", reason).filter(F.col("_reason").isNotNull()),
-    )
-
-
-def fail_on_violations(df: DataFrame, constraints: dict[str, str], total: int, *, context: str = "") -> None:
-    """Raise the canonical constraint error: per-constraint counts (one
-    error-path aggregation) plus the remediation hint."""
-    per = violation_counts(df, constraints)
-    detail = ", ".join(f"{n}: {c}" for n, c in per.items()) or f"total: {total}"
-    where = f"{context}: " if context else ""
-    raise ValueError(
-        f"{where}{total} change event(s) violate CHECK constraint(s) "
-        f"({detail}); nothing was applied. Fix the producer, DROP the "
-        "constraint, or re-run with on_violation='quarantine'/'drop'."
-    )

@@ -1,9 +1,9 @@
 """Quarantine redrive: the remediation half of the malformed/violation
-policy (cdc/quarantine.py wrote the rows; this re-applies them).
+policy (cdc/triage.py wrote the rows; this re-applies them).
 
 A diverted event is terminal at its ORIGINAL LSN — the committed batch
 claimed its full planned range, so remediation means re-sending the
-fixed rows at NEW LSNs (quarantine.py's docstring states the
+fixed rows at NEW LSNs (triage.py's docstring states the
 contract; this module is its implementation). ``redrive_quarantine``
 reads one quarantine dataset, applies a caller-supplied fix (a
 DataFrame transform — e.g. patch ``op``, fill a key, correct a value
@@ -55,10 +55,9 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .apply import apply_batch
-from .constraints import violation_reason
 from .manifest import RANGE_REFRESH_BASE, REDRIVE_BASE
-from .quarantine import malformed_reason
 from .table import LakeTable, retry_on_fork_rewind
+from .triage import event_reason
 
 REDRIVE_END = RANGE_REFRESH_BASE  # namespace boundaries live in manifest.py
 _ID_MASK = (1 << 37) - 1
@@ -102,10 +101,7 @@ def redrive_quarantine(
     # the whole redrive mid-flight with the batch id already signed
     # over rows that never applied. Tombstones stay exempt, matching
     # every writer.
-    still_bad = malformed_reason(table.key_col)
-    viol = violation_reason(table.constraints)
-    if viol is not None:
-        still_bad = F.coalesce(still_bad, viol)
+    still_bad = event_reason(table.key_col, table.constraints)
 
     # one small agg: totals, still-bad count, and the content signature
     # over exactly the rows that would be applied (kept rows only, so

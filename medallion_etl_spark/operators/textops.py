@@ -25,7 +25,7 @@ from pyspark.sql import functions as F
 from ..functions.exprs import let
 from ..sources.readers import load_table as T
 from .dedup_text import _grams
-from .util import spread
+from .util import persist_replacing, spread
 
 # Markers for the n-gram/stopword language-ID heuristic. The synthetic
 # corpus is English-like for every label, so accuracy is not the point —
@@ -586,10 +586,15 @@ def source_token_drift(spark: SparkSession, sf: str) -> DataFrame:
     from .repetition import tokenize_documents_raw
 
     raw = tokenize_documents_raw(spark, sf)
-    counts = (
+    # four consumers below (source totals, bucket totals, grand total,
+    # the grid join): persisted, the documents are scanned and
+    # tokenized once instead of once per consumer
+    counts = persist_replacing(
+        "drift_counts",
+        sf,
         raw.select("source", F.explode("tokens").alias("tok"))
         .groupBy("source", (F.col("tok") % DRIFT_BUCKETS).alias("bucket"))
-        .agg(F.count(F.lit(1)).alias("n"))
+        .agg(F.count(F.lit(1)).alias("n")),
     )
     src_tot = counts.groupBy("source").agg(F.sum("n").alias("tot_s"))
     all_tot = counts.groupBy("bucket").agg(F.sum("n").alias("n_all"))

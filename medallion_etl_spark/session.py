@@ -22,7 +22,9 @@ import warnings
 
 from pyspark.sql import SparkSession
 
-DEFAULT_PARALLELISM = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+# local[N] width: $SPARK_GRAFT_CPUS when set, else the CPUs this
+# process may run on (the one default bench.py shares)
+DEFAULT_PARALLELISM = int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
 _warned_submit_gc = False
 
 

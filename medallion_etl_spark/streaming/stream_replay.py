@@ -25,6 +25,13 @@ This is the CDC analog of watermark handling: instead of dropping late
 rows past a watermark, LWW makes them order-insensitive; ``compact()``
 uses a low-watermark LSN only to garbage-collect tombstones.
 
+Malformed and CHECK-violating events: each epoch runs the batch
+replayer's triage (cdc/triage.py) as a one-chunk stream — one
+aggregation yields the policy counts and the per-bucket stats that
+``apply_batch`` takes precomputed, so an epoch runs one aggregation
+before its merge write, and a 'fail' count raises before any diversion
+is written.
+
 Scale: micro-batch size is bounded with ``maxFilesPerTrigger``
 (events/sec throughput then scales with executors exactly like batch
 replay — same plan); state never lives in Spark's state store, it IS
@@ -37,13 +44,11 @@ import hashlib
 import os
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from ..schemas import EVENTS_SCHEMA
 from ..cdc.apply import apply_batch, check_write_mode
-from ..cdc.constraints import fail_on_violations, split_violations, violation_reason
-from ..cdc.quarantine import POLICIES, malformed_reason, split_malformed
 from ..cdc.table import LakeTable, retry_on_fork_rewind
+from ..cdc.triage import Triage, check_policies
 
 # Streaming epochs and batch-replay chunk ids share the table's one
 # commit manifest; without a namespace, epoch 0 of a streaming drain
@@ -98,28 +103,22 @@ def stream_replay(
     directory and stops (the testable drain mode); with ``False`` the
     query keeps tailing until ``timeout_sec``.
 
-    ``on_malformed`` (see cdc/quarantine.py): 'fail' (default) fails
-    the QUERY on the first micro-batch carrying a NULL-lsn/NULL-key/
-    unknown-op event (the count rides the epoch's existing bounds
-    aggregation — no extra job); 'quarantine' diverts bad rows to
-    ``quarantine_dir`` (default ``<table>/_quarantine``) keyed
-    ``epoch-N`` and overwritten per epoch, so a replayed epoch stays
-    idempotent; 'drop' discards them. Counted in the returned totals.
-
-    ``on_violation`` is the same policy triple for the table's CHECK
-    constraints (see cdc/constraints.py), counted among well-formed
-    rows in the same epoch aggregation: 'fail' (default) fails the
-    query on the first epoch with a violating event; 'quarantine'
-    diverts violating rows (+ ``_reason``) to the epoch's ``…-checks``
-    dir under ``quarantine_dir``, overwritten per epoch; 'drop'
-    discards them. Both count as ``rows_violating`` in the totals.
+    ``on_malformed`` / ``on_violation`` are the batch replayer's
+    fail/quarantine/drop policies for malformed events and CHECK
+    violations, decided by the same triage (cdc/triage.py) with the
+    epoch as its one chunk: 'fail' (default) fails the QUERY on the
+    first epoch carrying such an event, before anything of it is
+    written; 'quarantine' diverts the rows (+ ``_reason``) to
+    ``quarantine_dir`` (default ``<table>/_quarantine``) as
+    ``epoch-<ns>-<id>`` (violations: ``…-checks``), overwritten per
+    epoch so a replayed epoch stays idempotent; 'drop' discards them.
+    A row that is both follows the malformed policy. Counted in the
+    returned totals (``rows_quarantined``/``rows_dropped`` for
+    malformed, ``rows_violating`` for violations).
 
     Returns totals: epochs applied, rows applied.
     """
-    if on_malformed not in POLICIES:
-        raise ValueError(f"on_malformed must be one of {POLICIES}, got {on_malformed!r}")
-    if on_violation not in POLICIES:
-        raise ValueError(f"on_violation must be one of {POLICIES}, got {on_violation!r}")
+    check_policies(on_malformed, on_violation)
     check_write_mode(write_mode)
     totals = {
         "epochs": 0,
@@ -131,85 +130,48 @@ def stream_replay(
     }
 
     def apply_epoch(batch_df: DataFrame, epoch_id: int) -> None:
-        table = LakeTable.load(table_root)
-        reason = malformed_reason(table.key_col)
-        # CHECK constraints (cdc/constraints.py) ride the same epoch
-        # bounds aggregation as the malformed count — one job either
-        # way. Violations are counted among WELL-FORMED rows only: a
-        # row that is both malformed and violating follows the
-        # malformed policy (it is diverted before the constraint check
-        # sees the frame), so the count must match what remains.
-        vreason = violation_reason(table.constraints)
-        bounds = batch_df.agg(
-            F.min("lsn").alias("lo"),
-            F.max("lsn").alias("hi"),
-            F.count_if(reason.isNotNull()).alias("bad"),
-            F.count_if(vreason.isNotNull() & reason.isNull()).alias("viol")
-            if vreason is not None
-            else F.lit(0).alias("viol"),
-        ).collect()[0]
-        n_bad = int(bounds["bad"] or 0)
-        if n_bad:
-            if on_malformed == "fail":
-                raise ValueError(
-                    f"epoch {epoch_id}: {n_bad} malformed change event(s) "
-                    "(NULL lsn, NULL key, or op outside {'I','U','D'}). "
-                    "Restart with on_malformed='quarantine' or 'drop'."
-                )
-            clean, bad = split_malformed(batch_df, table.key_col)
-            if on_malformed == "quarantine":
-                # dir carries the stream namespace for the same reason
-                # the batch id does: two checkpoints both restart
-                # epochs at 0, and un-namespaced epoch-0 dirs would
-                # overwrite each other's diverted rows
-                qdir = quarantine_dir or os.path.join(table.root, "_quarantine")
-                bad.write.mode("overwrite").parquet(
-                    os.path.join(qdir, f"epoch-{stream_namespace(checkpoint_dir)}-{epoch_id}")
-                )
-                totals["rows_quarantined"] += n_bad
-            else:
-                totals["rows_dropped"] += n_bad
-            batch_df = clean
-        n_viol = int(bounds["viol"] or 0)
-        if n_viol:
-            if on_violation == "fail":
-                fail_on_violations(
-                    batch_df, table.constraints, n_viol, context=f"epoch {epoch_id}"
-                )
-            passing, violating = split_violations(batch_df, table.constraints)
-            if on_violation == "quarantine":
-                qdir = quarantine_dir or os.path.join(table.root, "_quarantine")
-                violating.write.mode("overwrite").parquet(
-                    os.path.join(qdir, f"epoch-{stream_namespace(checkpoint_dir)}-{epoch_id}-checks")
-                )
-            totals["rows_violating"] += n_viol
-            batch_df = passing
-        if bounds["lo"] is None:
+        tri = Triage(
+            batch_df,
+            LakeTable.load(table_root),
+            on_malformed,
+            on_violation,
+            context=f"epoch {epoch_id}",
+        )
+        # dir carries the stream namespace for the same reason the
+        # batch id does: two checkpoints both restart epochs at 0, and
+        # un-namespaced epoch-0 dirs would overwrite each other's
+        # diverted rows
+        diverted = tri.divert(
+            quarantine_dir or os.path.join(tri.table.root, "_quarantine"),
+            f"epoch-{stream_namespace(checkpoint_dir)}-{epoch_id}",
+        )
+        for k in ("rows_quarantined", "rows_dropped", "rows_violating"):
+            totals[k] += diverted.get(k, 0)
+        if tri.lsn_lo is None:
             return
         # concurrent-commit resilience, mirroring the batch replayer: a
         # maintenance commit (compact/rebucket/DDL/clone registration)
         # landing between this epoch's load and its commit raises the
-        # fork/rewind guard — reload and re-apply against the fresh
-        # base instead of failing the whole streaming query
-        def _reload() -> None:
-            nonlocal table
-            table = LakeTable.load(table_root)
-
+        # fork/rewind guard — tri.reload picks up the fresh base (and
+        # re-aggregates the stats after a rebucket) and the epoch
+        # re-applies instead of failing the whole streaming query
         res = retry_on_fork_rewind(
             lambda: apply_batch(
                 spark,
-                table,
-                batch_df,
+                tri.table,
+                tri.applied,
                 batch_id=stream_batch_id(checkpoint_dir, epoch_id),
-                lsn_lo=int(bounds["lo"]),
-                lsn_hi=int(bounds["hi"]),
+                lsn_lo=int(tri.lsn_lo),
+                lsn_hi=int(tri.lsn_hi),
                 write_mode=write_mode,
                 mor_max_deltas=mor_max_deltas,
+                precomputed_stats=tri.by_chunk.get(0, []),
+                precomputed_stats_n_buckets=tri.n_buckets,
                 # epochs are pure stream slices (upstream LSNs):
                 # rebase-safe, see apply.py _commit_validated
                 allow_rebase=True,
             ),
-            _reload,
+            tri.reload,
         )
         if res.get("skipped"):
             totals["epochs_skipped"] += 1

@@ -100,8 +100,9 @@ def main() -> int:
     env = dict(os.environ)
     env["SPARK_GRAFT_DRIVER_MEM"] = args.driver_mem
     # tests that spawn CLI/spark-submit subprocess JVMs size them from
-    # SPARK_GRAFT_CPUS (default 32): fine sequentially, but K shards x
-    # local[32] subprocess bursts oversubscribe the box — cap them to
+    # SPARK_GRAFT_CPUS (default: the CPUs this process may run on):
+    # fine sequentially, but K shards x local[N] subprocess bursts
+    # oversubscribe the box — cap them to
     # the same width as the in-process test sessions
     # HARD cap, not setdefault: an exported SPARK_GRAFT_CPUS=32 (the
     # bench default, natural to have in a shell) would re-enable the

@@ -269,6 +269,24 @@ def test_source_token_drift_partial_agg_and_no_text_shuffle(spark, sf_small):
         assert "text#" not in frag.splitlines()[0]
 
 
+def test_source_token_drift_scans_documents_once(spark, sf_small):
+    """The (source, bucket) counts feed four consumers (source totals,
+    bucket totals, the grand total, the grid join). They are persisted,
+    so after cache substitution no consumer plans its own documents
+    scan: every leaf that reads data is the one cached relation."""
+    from medallion_etl_spark.operators.textops import source_token_drift
+
+    try:
+        leaves = (
+            source_token_drift(spark, sf_small)._jdf.queryExecution().withCachedData().collectLeaves()
+        )
+        kinds = [leaves.apply(i).getClass().getSimpleName() for i in range(leaves.size())]
+    finally:
+        spark.catalog.clearCache()
+    assert "LogicalRelation" not in kinds, kinds
+    assert kinds.count("InMemoryRelation") >= 4, kinds
+
+
 def test_split_assignment_is_scan_speed(spark, sf_small):
     """The split is one codegen expression over the scan: no exchange
     other than the oracle-stability sort, no Python, and the scan reads
