@@ -939,15 +939,9 @@ class LakeTable:
             "_deleted"
         )
         # align to the CURRENT schema (the old snapshot may predate an
-        # add-column / type-widen evolution): missing columns -> NULL,
-        # narrower types -> cast up
-        feed_types = dict(feed.dtypes)
+        # add-column / type-widen evolution)
         old_live = old_live.select(
-            *[
-                F.col(c).cast(t) if c in old_live.columns else F.lit(None).cast(t).alias(c)
-                for c, t in feed_types.items()
-                if c != "_change_type"
-            ]
+            *aligned_cols(set(old_live.columns), self.schema_version, self.schemas), "_lsn"
         )
         # no forced broadcast: the changed-key set is O(|batch|); let
         # AQE pick broadcast when it is actually small

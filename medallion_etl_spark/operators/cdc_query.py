@@ -1,22 +1,24 @@
-"""Flagship query: a full CDC replay through the engine, oracle-checked.
+"""Engine-driven driver queries: each one replays the driver's
+``events`` table as a change stream into a scratch LakeTable, runs one
+table-format feature over it (DML, MERGE, restore, WAP publish,
+redrive, schema evolution, change feed) and returns the result as a
+lazy read, oracle-checked.
 
-Interprets the driver's ``events`` table as a change stream —
-``event_id`` is the LSN, ``user_id`` keys the doc, ``event_type =
-'error'`` means delete — builds token payloads deterministically from
-the row values, replays it chunked through the LakeTable (fused LWW
-dedup + merge -> manifest commit), and returns the final table state.
-The DuckDB oracle expresses the same semantics as one window query, so
-the driver's correctness gate exercises the ENTIRE engine spine:
-scan -> shuffle -> max-LSN agg -> merge -> atomic commit -> read back.
+The stream mapping: ``event_id`` is the LSN, ``user_id`` keys the doc,
+``event_type = 'error'`` means delete, and token payloads are built
+deterministically from the row values. The DuckDB oracle expresses the
+same semantics as one window query, so the driver's correctness gate
+exercises the ENTIRE engine spine: scan -> shuffle -> max-LSN agg ->
+merge -> atomic commit -> read back.
+
+Scratch tables go through ``util.scratch_table``: built once per
+(query family, input) per process, so a frame an earlier call returned
+stays readable, and removed at process exit.
 """
 
 from __future__ import annotations
 
-import atexit
-import hashlib
-import os
-import shutil
-import tempfile
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -24,6 +26,7 @@ from pyspark.sql import functions as F
 from ..cdc.replay import replay
 from ..cdc.table import LakeTable
 from ..sources.readers import load_table as T
+from .util import scratch_table
 
 
 def _as_change_stream(ev: DataFrame) -> DataFrame:
@@ -42,52 +45,46 @@ def _as_change_stream(ev: DataFrame) -> DataFrame:
     )
 
 
-def _scratch_dir(prefix: str, sf: str) -> str:
-    """Per-(input, PROCESS) scratch root for a query-built LakeTable.
-
-    The pid component matters: these dirs used to be keyed on the
-    input path alone, so two concurrent driver-contract processes
-    (e.g. the round driver and a local pytest run) would rmtree/
-    rebuild the SAME directory under each other's lazy reads —
-    observed as PATH_NOT_FOUND mid-query. Within one process the
-    _*_ROOTS caches (not the dir name) provide reuse, so pid
-    uniqueness costs nothing.
-
-    Dead siblings of the SAME query family (any input digest) are
-    swept on the way in: a SIGKILLed driver never runs its atexit
-    cleanup and no later process recomputes its pid-suffixed name.
-    Best-effort, not a guarantee — a family never run again stays
-    leaked until /tmp cleanup, and a recycled pid that belongs to a
-    live process keeps its namesake dir. A sibling whose pid is alive
-    is always left alone (a concurrent run's live scratch)."""
-    import glob
-    import re
-
-    digest = hashlib.md5(sf.encode()).hexdigest()[:8]
-    family = os.path.join(tempfile.gettempdir(), f"{prefix}_")
-    for stale in glob.glob(f"{family}*_p*"):
-        m = re.fullmatch(r".*_p(\d+)", stale)
-        if m is None:
-            continue
-        pid = int(m.group(1))
-        if pid == os.getpid():
-            continue
-        try:
-            os.kill(pid, 0)  # raises if no such process
-        except (ProcessLookupError, OverflowError):
-            # no such pid / pid impossible on this kernel: dead scratch
-            shutil.rmtree(stale, ignore_errors=True)
-        except OSError:
-            pass  # EPERM etc: some live process owns the pid, keep
-    return f"{family}{digest}_p{os.getpid()}"
+class _Replayed(NamedTuple):
+    events: DataFrame  # the driver's raw events table
+    stream: DataFrame  # the change stream the table was fed
+    lo: int  # the stream's lowest LSN
+    chunk: int  # LSNs per chunk
+    result: dict  # replay()'s return
 
 
-def _latest_state_projection(final: DataFrame) -> DataFrame:
+def _replay_events(
+    spark: SparkSession,
+    sf: str,
+    root: str,
+    parts: int,
+    edit=None,
+    constraints: dict[str, str] | None = None,
+    **replay_kw,
+) -> _Replayed:
+    """The prelude every events-driven query shares: map the driver
+    events to a change stream (``edit`` reshapes it), cut it into
+    ``parts`` LSN chunks and replay it into a new 8-bucket schema-v2
+    LakeTable at ``root``. ``replay_kw`` goes to ``replay`` (e.g.
+    ``max_batches=k`` lands only the first k chunks)."""
+    events = T(spark, sf, "events")
+    stream = _as_change_stream(events)
+    if edit is not None:
+        stream = edit(stream)
+    lo, hi = events.agg(F.min("event_id"), F.max("event_id")).collect()[0]
+    chunk = max(int(hi or 0) // parts, 1)
+    table = LakeTable.create(root, n_buckets=8, schema_version=2, constraints=constraints)
+    res = replay(spark, stream, table, chunk_size=chunk, **replay_kw)
+    return _Replayed(events, stream, int(lo or 0), chunk, res)
+
+
+def _latest_state_projection(final: DataFrame, *extra: str) -> DataFrame:
     """The ONE oracle-paired projection of a replayed table's final
     state (tokens carry [floor(value*100), user_id, event_id], so the
     comparison is value-based and position-independent) — shared by
     every flagship that must equal CDC_REPLAY_LATEST_STATE_SQL, so the
-    column aliases can never drift between them."""
+    column aliases can never drift between them. ``extra`` columns
+    (the DML, MERGE and DDL queries' one added column) follow."""
     return final.select(
         "doc_id",
         F.element_at("tokens", 1).alias("tok_value"),
@@ -95,36 +92,31 @@ def _latest_state_projection(final: DataFrame) -> DataFrame:
         F.element_at("tokens", 3).alias("last_lsn"),
         "n_tok",
         F.col("source").alias("last_type"),
+        *extra,
     ).orderBy("doc_id")
 
 
 def _replay_flagship(
     spark: SparkSession,
     sf: str,
-    tmp_prefix: str,
+    family: str,
     constraints: dict[str, str] | None = None,
     **replay_kw,
 ) -> DataFrame:
     """Shared flagship body: replay the driver-events change stream in
-    4 LSN chunks into a session-lifetime LakeTable (deterministic per
-    input, fresh per call, atexit-cleaned) and return the final state
+    4 LSN chunks into a scratch LakeTable and return the final state
     as a LAZY read with the oracle-paired projection — no toPandas
     round-trip, so the flagship never materializes the full final
     state on the driver (at real scale that would be a driver-memory
     bottleneck). One implementation so the COW and MOR flagships can
     never diverge in chunking or column aliases."""
-    events = T(spark, sf, "events")
-    stream = _as_change_stream(events)
-    n = events.agg(F.max("event_id")).collect()[0][0] or 0
-    chunk = max(int(n) // 4, 1)
-    tmp = _scratch_dir(tmp_prefix, sf)
-    shutil.rmtree(tmp, ignore_errors=True)
-    atexit.register(shutil.rmtree, tmp, ignore_errors=True)
-    root = f"{tmp}/t"
-    table = LakeTable.create(root, n_buckets=8, schema_version=2, constraints=constraints)
-    replay(spark, stream, table, chunk_size=chunk, **replay_kw)
-    final = LakeTable.load(root).read(spark)
-    return _latest_state_projection(final)
+
+    def build(tmp: str) -> str:
+        _replay_events(spark, sf, f"{tmp}/t", 4, constraints=constraints, **replay_kw)
+        return f"{tmp}/t"
+
+    root = scratch_table(family, sf, build)
+    return _latest_state_projection(LakeTable.load(root).read(spark))
 
 
 def cdc_replay_latest_state(spark: SparkSession, sf: str) -> DataFrame:
@@ -142,29 +134,17 @@ def cdc_replay_mor_state(spark: SparkSession, sf: str) -> DataFrame:
     return _replay_flagship(spark, sf, "cdc_flagship_mor", write_mode="mor")
 
 
-_FEED_ROOTS: dict[str, str] = {}
-
-
 def _feed_table_root(spark: SparkSession, sf: str) -> str:
     """The driver-events stream replayed in TWO LSN chunks into a
-    process-cached LakeTable (versions: 0 empty, 1 after chunk 0,
-    2+ final) — shared by the change-feed and incremental-gold
-    queries so the replay runs once per process per scale dir."""
-    cached = _FEED_ROOTS.get(sf)
-    if cached is not None and LakeTable.exists(cached):
-        return cached
-    events = T(spark, sf, "events")
-    stream = _as_change_stream(events)
-    n = events.agg(F.max("event_id")).collect()[0][0] or 0
-    chunk = max(int(n) // 2, 1)
-    tmp = _scratch_dir("cdc_feed", sf)
-    shutil.rmtree(tmp, ignore_errors=True)
-    atexit.register(shutil.rmtree, tmp, ignore_errors=True)
-    root = f"{tmp}/t"
-    table = LakeTable.create(root, n_buckets=8, schema_version=2)
-    replay(spark, stream, table, chunk_size=chunk)
-    _FEED_ROOTS[sf] = root
-    return root
+    scratch LakeTable (versions: 0 empty, 1 after chunk 0, 2+ final)
+    — shared by the change-feed, incremental-gold and IVM queries so
+    the replay runs once per process per scale dir."""
+
+    def build(tmp: str) -> str:
+        _replay_events(spark, sf, f"{tmp}/t", 2)
+        return f"{tmp}/t"
+
+    return scratch_table("cdc_feed", sf, build)
 
 
 def cdc_change_feed(spark: SparkSession, sf: str) -> DataFrame:
@@ -258,9 +238,6 @@ ORDER BY doc_id
 """
 
 
-_DML_ROOTS: dict[str, str] = {}
-
-
 def cdc_dml_state(spark: SparkSession, sf: str) -> DataFrame:
     """Predicate DML (cdc/dml.py) driven end-to-end: replay the full
     change stream, then UPDATE WHERE source='click' SET lang='redacted',
@@ -275,32 +252,17 @@ def cdc_dml_state(spark: SparkSession, sf: str) -> DataFrame:
     out-of-pipeline hand SQL, etl/load/load_sql.py delete-by-month.)"""
     from ..cdc.dml import delete_where, update_where
 
-    cached = _DML_ROOTS.get(sf)
-    if cached is None or not LakeTable.exists(cached):
-        events = T(spark, sf, "events")
-        stream = _as_change_stream(events)
-        n = events.agg(F.max("event_id")).collect()[0][0] or 0
-        tmp = _scratch_dir("cdc_dml", sf)
-        shutil.rmtree(tmp, ignore_errors=True)
-        atexit.register(shutil.rmtree, tmp, ignore_errors=True)
+    def build(tmp: str) -> str:
         root = f"{tmp}/t"
-        table = LakeTable.create(root, n_buckets=8, schema_version=2)
-        replay(spark, stream, table, chunk_size=max(int(n) // 4, 1))
+        _replay_events(spark, sf, root, 4)
         update_where(
             spark, LakeTable.load(root), "source = 'click'", {"lang": "'redacted'"}
         )
         delete_where(spark, LakeTable.load(root), "element_at(tokens, 1) >= 5000")
-        _DML_ROOTS[sf] = root
-    final = LakeTable.load(_DML_ROOTS[sf]).read(spark)
-    return final.select(
-        "doc_id",
-        F.element_at("tokens", 1).alias("tok_value"),
-        F.element_at("tokens", 2).alias("tok_user"),
-        F.element_at("tokens", 3).alias("last_lsn"),
-        "n_tok",
-        F.col("source").alias("last_type"),
-        "lang",
-    ).orderBy("doc_id")
+        return root
+
+    root = scratch_table("cdc_dml", sf, build)
+    return _latest_state_projection(LakeTable.load(root).read(spark), "lang")
 
 
 CDC_DML_STATE_SQL = """
@@ -323,9 +285,6 @@ ORDER BY doc_id
 """
 
 
-_RESTORE_ROOTS: dict[str, str] = {}
-
-
 def cdc_restore_reconverge(spark: SparkSession, sf: str) -> DataFrame:
     """RESTORE + resume, pinned by the driver's own correctness gate:
     replay the full change stream in 4 chunks, RESTORE to the snapshot
@@ -337,26 +296,16 @@ def cdc_restore_reconverge(spark: SparkSession, sf: str) -> DataFrame:
     nothing (the engine-level guarantee behind
     tests/test_restore.py::test_resume_after_restore_reconverges,
     here enforced against DuckDB at every driver run)."""
-    cached = _RESTORE_ROOTS.get(sf)
-    if cached is None or not LakeTable.exists(cached):
-        events = T(spark, sf, "events")
-        stream = _as_change_stream(events)
-        n = events.agg(F.max("event_id")).collect()[0][0] or 0
-        tmp = _scratch_dir("cdc_restore", sf)
-        shutil.rmtree(tmp, ignore_errors=True)
-        atexit.register(shutil.rmtree, tmp, ignore_errors=True)
+
+    def build(tmp: str) -> str:
         root = f"{tmp}/t"
-        table = LakeTable.create(root, n_buckets=8, schema_version=2)
-        chunk = max(int(n) // 4, 1)
-        replay(spark, stream, table, chunk_size=chunk)
+        r = _replay_events(spark, sf, root, 4)
         LakeTable.load(root).restore(2)
-        replay(spark, stream, LakeTable.load(root), chunk_size=chunk)
-        _RESTORE_ROOTS[sf] = root
-    final = LakeTable.load(_RESTORE_ROOTS[sf]).read(spark)
-    return _latest_state_projection(final)
+        replay(spark, r.stream, LakeTable.load(root), chunk_size=r.chunk)
+        return root
 
-
-_CONVERT_ROOTS: dict[str, str] = {}
+    root = scratch_table("cdc_restore", sf, build)
+    return _latest_state_projection(LakeTable.load(root).read(spark))
 
 
 def cdc_convert_documents(spark: SparkSession, sf: str) -> DataFrame:
@@ -369,8 +318,7 @@ def cdc_convert_documents(spark: SparkSession, sf: str) -> DataFrame:
     invent nothing."""
     from ..cdc.bootstrap import convert_from_parquet
 
-    cached = _CONVERT_ROOTS.get(sf)
-    if cached is None or not LakeTable.exists(cached):
+    def build(tmp: str) -> str:
         docs = T(spark, sf, "documents")
         mapped = docs.select(
             F.concat(F.lit("d"), F.col("doc_id")).alias("doc_id"),
@@ -381,14 +329,11 @@ def cdc_convert_documents(spark: SparkSession, sf: str) -> DataFrame:
             "source",
             "lang",
         )
-        tmp = _scratch_dir("cdc_convert", sf)
-        shutil.rmtree(tmp, ignore_errors=True)
-        atexit.register(shutil.rmtree, tmp, ignore_errors=True)
-        root = f"{tmp}/t"
-        convert_from_parquet(spark, mapped, root, n_buckets=8, schema_version=3)
-        _CONVERT_ROOTS[sf] = root
-    final = LakeTable.load(_CONVERT_ROOTS[sf]).read(spark)
-    return final.select(
+        convert_from_parquet(spark, mapped, f"{tmp}/t", n_buckets=8, schema_version=3)
+        return f"{tmp}/t"
+
+    root = scratch_table("cdc_convert", sf, build)
+    return LakeTable.load(root).read(spark).select(
         "doc_id",
         F.element_at("tokens", 1).alias("tok_chars"),
         F.element_at("tokens", 2).alias("tok_id"),
@@ -410,9 +355,6 @@ ORDER BY doc_id
 """
 
 
-_MERGE_ROOTS: dict[str, str] = {}
-
-
 def cdc_merge_into_state(spark: SparkSession, sf: str) -> DataFrame:
     """MERGE INTO (cdc/merge.py — the Delta ``MERGE INTO … USING``
     analog) driven end-to-end: replay the full change stream, then
@@ -425,19 +367,11 @@ def cdc_merge_into_state(spark: SparkSession, sf: str) -> DataFrame:
     overlay with an anti-join + union."""
     from ..cdc.merge import merge_into
 
-    cached = _MERGE_ROOTS.get(sf)
-    if cached is None or not LakeTable.exists(cached):
-        events = T(spark, sf, "events")
-        stream = _as_change_stream(events)
-        n = events.agg(F.max("event_id")).collect()[0][0] or 0
-        tmp = _scratch_dir("cdc_merge", sf)
-        shutil.rmtree(tmp, ignore_errors=True)
-        atexit.register(shutil.rmtree, tmp, ignore_errors=True)
+    def build(tmp: str) -> str:
         root = f"{tmp}/t"
-        table = LakeTable.create(root, n_buckets=8, schema_version=2)
-        replay(spark, stream, table, chunk_size=max(int(n) // 4, 1))
+        r = _replay_events(spark, sf, root, 4)
         src = (
-            events.select("user_id")
+            r.events.select("user_id")
             .distinct()
             .filter(F.col("user_id") % 3 == 0)
             .select(
@@ -453,17 +387,10 @@ def cdc_merge_into_state(spark: SparkSession, sf: str) -> DataFrame:
             )
         )
         merge_into(spark, LakeTable.load(root), src)
-        _MERGE_ROOTS[sf] = root
-    final = LakeTable.load(_MERGE_ROOTS[sf]).read(spark)
-    return final.select(
-        "doc_id",
-        F.element_at("tokens", 1).alias("tok_value"),
-        F.element_at("tokens", 2).alias("tok_user"),
-        F.element_at("tokens", 3).alias("last_lsn"),
-        "n_tok",
-        F.col("source").alias("last_type"),
-        "lang",
-    ).orderBy("doc_id")
+        return root
+
+    root = scratch_table("cdc_merge", sf, build)
+    return _latest_state_projection(LakeTable.load(root).read(spark), "lang")
 
 
 CDC_MERGE_INTO_STATE_SQL = """
@@ -511,9 +438,6 @@ ORDER BY doc_id
 """
 
 
-_REDRIVE_ROOTS: dict[str, str] = {}
-
-
 def cdc_redrive_reconverge(spark: SparkSession, sf: str) -> DataFrame:
     """Quarantine → redrive → reconverge, under the driver's own
     correctness gate: corrupt a deterministic slice of the change
@@ -530,27 +454,20 @@ def cdc_redrive_reconverge(spark: SparkSession, sf: str) -> DataFrame:
     comparison is over values, not minted positions."""
     from ..cdc.redrive import redrive_quarantine
 
-    cached = _REDRIVE_ROOTS.get(sf)
-    if cached is None or not LakeTable.exists(cached):
-        events = T(spark, sf, "events")
-        stream = _as_change_stream(events)
-        corrupt = (F.col("lsn") % 97 == 0) & (F.col("op") == "U")
-        dirty = stream.withColumn(
-            "op", F.when(corrupt, F.lit("X")).otherwise(F.col("op"))
-        )
-        n = events.agg(F.max("event_id")).collect()[0][0] or 0
-        tmp = _scratch_dir("cdc_redrive", sf)
-        shutil.rmtree(tmp, ignore_errors=True)
-        atexit.register(shutil.rmtree, tmp, ignore_errors=True)
+    corrupt = (F.col("lsn") % 97 == 0) & (F.col("op") == "U")
+
+    def build(tmp: str) -> str:
         root = f"{tmp}/t"
-        table = LakeTable.create(root, n_buckets=8, schema_version=2)
-        res = replay(
+        res = _replay_events(
             spark,
-            dirty,
-            table,
-            chunk_size=max(int(n) // 4, 1),
+            sf,
+            root,
+            4,
+            edit=lambda s: s.withColumn(
+                "op", F.when(corrupt, F.lit("X")).otherwise(F.col("op"))
+            ),
             on_malformed="quarantine",
-        )
+        ).result
         assert res["rows_quarantined"] > 0, "corruption slice was empty"
         redrive_quarantine(
             spark,
@@ -563,9 +480,10 @@ def cdc_redrive_reconverge(spark: SparkSession, sf: str) -> DataFrame:
                 ),
             ),
         )
-        _REDRIVE_ROOTS[sf] = root
-    final = LakeTable.load(_REDRIVE_ROOTS[sf]).read(spark)
-    return _latest_state_projection(final)
+        return root
+
+    root = scratch_table("cdc_redrive", sf, build)
+    return _latest_state_projection(LakeTable.load(root).read(spark))
 
 
 CDC_REDRIVE_RECONVERGE_SQL = """
@@ -584,9 +502,6 @@ ORDER BY doc_id
 """
 
 
-_WAP_ROOTS: dict[str, str] = {}
-
-
 def cdc_wap_publish_state(spark: SparkSession, sf: str) -> DataFrame:
     """Write-audit-publish under the driver's own correctness gate
     (``LakeTable.publish_from`` — the Iceberg WAP / branch-fast-forward
@@ -598,36 +513,23 @@ def cdc_wap_publish_state(spark: SparkSession, sf: str) -> DataFrame:
     buckets + manifest. The final source state must equal the plain
     latest-state oracle exactly: the stage detour loses and invents
     nothing, which is the entire point of WAP."""
-    cached = _WAP_ROOTS.get(sf)
-    if cached is None or not LakeTable.exists(cached):
-        events = T(spark, sf, "events")
-        stream = _as_change_stream(events)
-        n = events.agg(F.max("event_id")).collect()[0][0] or 0
-        chunk = max(int(n) // 4, 1)
-        tmp = _scratch_dir("cdc_wap", sf)
-        shutil.rmtree(tmp, ignore_errors=True)
-        atexit.register(shutil.rmtree, tmp, ignore_errors=True)
-        root = f"{tmp}/t"
-        table = LakeTable.create(root, n_buckets=8, schema_version=2)
-        # first half lands directly on the source...
-        replay(
-            spark,
-            stream.filter(F.col("lsn") < 2 * chunk),
-            table,
-            chunk_size=chunk,
-        )
+
+    def build(tmp: str) -> str:
+        root, stage_root = f"{tmp}/t", f"{tmp}/stage"
+        # the first two chunks land directly on the source...
+        r = _replay_events(spark, sf, root, 4, max_batches=2)
         # ...the tail goes through a staged WAP cycle
-        stage_root = f"{tmp}/stage"
         LakeTable.load(root).clone_to(stage_root)
-        replay(spark, stream, LakeTable.load(stage_root), chunk_size=chunk)
+        replay(spark, r.stream, LakeTable.load(stage_root), chunk_size=r.chunk)
         staged = LakeTable.load(stage_root)
         if staged.read(spark).count() == 0:  # the audit step
             raise RuntimeError("WAP audit failed: staged table is empty")
         res = LakeTable.load(root).publish_from(stage_root)
         assert res["published"], res
-        _WAP_ROOTS[sf] = root
-    final = LakeTable.load(_WAP_ROOTS[sf]).read(spark)
-    return _latest_state_projection(final)
+        return root
+
+    root = scratch_table("cdc_wap", sf, build)
+    return _latest_state_projection(LakeTable.load(root).read(spark))
 
 
 def cdc_schema_evolution_state(spark: SparkSession, sf: str) -> DataFrame:
@@ -646,58 +548,49 @@ def cdc_schema_evolution_state(spark: SparkSession, sf: str) -> DataFrame:
     handful of events and a visible share of keys' LAST event precedes
     the DDL — the oracle rows then exercise BOTH alignment sides
     (payload carried vs NULL read from pre-DDL files)."""
-    events = T(spark, sf, "events")
-    stream = _as_change_stream(events).withColumn(
-        "doc_id", F.concat(F.col("doc_id"), F.lit("-"), F.col("lsn") % 16)
-    )
-    bounds = events.agg(
-        F.min("event_id").alias("lo"), F.max("event_id").alias("hi")
-    ).collect()[0]
-    lo, hi = int(bounds["lo"]), int(bounds["hi"])
-    chunk = max(hi // 4, 1)
-    split = lo + 3 * chunk  # DDL lands at the 3/4 chunk boundary
-    tmp = _scratch_dir("cdc_evolve", sf)
-    shutil.rmtree(tmp, ignore_errors=True)
-    atexit.register(shutil.rmtree, tmp, ignore_errors=True)
-    root = f"{tmp}/t"
-    table = LakeTable.create(root, n_buckets=8, schema_version=2)
-    replay(spark, stream.filter(F.col("lsn") < split), table, chunk_size=chunk)
 
-    new_sv = LakeTable.load(root).add_column("score", "double")["schema_version"]
-    # floor-based payload: bit-identical in Spark and DuckDB (FLOOR
-    # yields an integer; one IEEE division each side)
-    score = F.when(
-        (F.col("op") != "D") & (F.col("lsn") >= split),
-        F.floor(F.col("_value") * 1000) / 100.0,
-    )
-    evolved = (
-        stream.join(
-            events.select(
-                F.col("event_id").alias("lsn"), F.col("value").alias("_value")
+    def build(tmp: str) -> str:
+        root = f"{tmp}/t"
+        # the DDL lands at the 3/4 chunk boundary
+        r = _replay_events(
+            spark,
+            sf,
+            root,
+            4,
+            edit=lambda s: s.withColumn(
+                "doc_id", F.concat(F.col("doc_id"), F.lit("-"), F.col("lsn") % 16)
             ),
-            "lsn",
+            max_batches=3,
         )
-        .withColumn("score", score)
-        .withColumn(
-            "schema_version",
-            F.when(F.col("lsn") >= split, F.lit(new_sv)).otherwise(
-                F.col("schema_version")
-            ),
+        split = r.lo + 3 * r.chunk
+        new_sv = LakeTable.load(root).add_column("score", "double")["schema_version"]
+        # floor-based payload: bit-identical in Spark and DuckDB (FLOOR
+        # yields an integer; one IEEE division each side)
+        score = F.when(
+            (F.col("op") != "D") & (F.col("lsn") >= split),
+            F.floor(F.col("_value") * 1000) / 100.0,
         )
-        .drop("_value")
-    )
-    replay(spark, evolved, LakeTable.load(root), chunk_size=chunk)
+        evolved = (
+            r.stream.join(
+                r.events.select(
+                    F.col("event_id").alias("lsn"), F.col("value").alias("_value")
+                ),
+                "lsn",
+            )
+            .withColumn("score", score)
+            .withColumn(
+                "schema_version",
+                F.when(F.col("lsn") >= split, F.lit(new_sv)).otherwise(
+                    F.col("schema_version")
+                ),
+            )
+            .drop("_value")
+        )
+        replay(spark, evolved, LakeTable.load(root), chunk_size=r.chunk)
+        return root
 
-    final = LakeTable.load(root).read(spark)
-    return final.select(
-        "doc_id",
-        F.element_at("tokens", 1).alias("tok_value"),
-        F.element_at("tokens", 2).alias("tok_user"),
-        F.element_at("tokens", 3).alias("last_lsn"),
-        "n_tok",
-        F.col("source").alias("last_type"),
-        "score",
-    ).orderBy("doc_id")
+    root = scratch_table("cdc_evolve", sf, build)
+    return _latest_state_projection(LakeTable.load(root).read(spark), "score")
 
 
 CDC_SCHEMA_EVOLUTION_STATE_SQL = """

@@ -35,7 +35,7 @@ from pyspark.sql import functions as F
 from ..sources.readers import load_table as T
 from .dedup_text import _shingles, _words, _SHINGLES_SQL
 from .textops import _MIX_BUCKET_SQL, _MIX_RATE_SQL, _STOP_SQL, quality_features
-from .util import spread
+from .util import scratch_table, spread
 
 QUALITY_MIN = 0.4  # keeps ~2/3 of the synthetic corpus (median 0.45)
 # a doc is contaminated when >= 80% of its DISTINCT shingles appear in
@@ -209,18 +209,12 @@ CURATED_TRAINING_MIX_SQL = _curated_sql()
 # parquet). Green here = the table-format layer and the training-data
 # ops compose.
 
-_MOR_DOC_ROOTS: dict[str, str] = {}
-
 
 def curated_mix_over_mor_corpus(spark: SparkSession, sf: str) -> DataFrame:
-    import atexit
-    import shutil
-
     from pyspark.sql import types as T_
 
     from ..cdc.apply import apply_batch
     from ..cdc.table import LakeTable
-    from .cdc_query import _scratch_dir
 
     schema = T_.StructType(
         [
@@ -232,13 +226,10 @@ def curated_mix_over_mor_corpus(spark: SparkSession, sf: str) -> DataFrame:
             T_.StructField("n_chars", T_.LongType(), True),
         ]
     )
-    cached = _MOR_DOC_ROOTS.get(sf)
-    if cached is None or not LakeTable.exists(cached):
+
+    def build(tmp: str) -> str:
         docs = T(spark, sf, "documents")
         n = int(docs.agg(F.max("doc_id")).collect()[0][0] or 0) + 1
-        tmp = _scratch_dir("curation_mor", sf)
-        shutil.rmtree(tmp, ignore_errors=True)
-        atexit.register(shutil.rmtree, tmp, ignore_errors=True)
         root = f"{tmp}/docs"
         table = LakeTable.create(root, n_buckets=8, schemas={1: schema})
 
@@ -268,8 +259,9 @@ def curated_mix_over_mor_corpus(spark: SparkSession, sf: str) -> DataFrame:
             batch_id=2, lsn_lo=n + 1, lsn_hi=2 * n,
             write_mode="mor", mor_max_deltas=1_000_000,
         )
-        _MOR_DOC_ROOTS[sf] = root
-    merged = LakeTable.load(_MOR_DOC_ROOTS[sf]).read(spark)
+        return root
+
+    merged = LakeTable.load(scratch_table("curation_mor", sf, build)).read(spark)
     docs_shaped = merged.select(
         F.col("orig_id").alias("doc_id"), "text", "lang", "source", "n_chars"
     )

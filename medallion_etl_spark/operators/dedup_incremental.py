@@ -41,6 +41,7 @@ from pyspark.sql import types as T
 from ..cdc.apply import apply_batch
 from ..cdc.table import LakeTable, retry_on_fork_rewind
 from .dedup_text import N_HASHES, _minhash_sig, _shingles, band_buckets
+from .util import scratch_table
 
 SIG_SCHEMA_V1 = T.StructType(
     [
@@ -229,41 +230,32 @@ def incremental_candidates(
 # checks feed -> per-changed-doc recompute -> exactly-once merge ->
 # tombstone propagation end-to-end.
 
-_SIG_ROOTS: dict[str, str] = {}
 
-
-def cdc_incremental_signatures(spark: SparkSession, sf: str) -> DataFrame:
-    import atexit
-    import shutil
-
-    from ..cdc.replay import replay
-    from ..sources.readers import load_table as T
-    from .cdc_query import _as_change_stream, _scratch_dir
-
-    cached = _SIG_ROOTS.get(sf)
-    if cached is None or not LakeTable.exists(cached):
-        events = T(spark, sf, "events")
-        stream = _as_change_stream(events)
-        n = events.agg(F.max("event_id")).collect()[0][0] or 0
-        tmp = _scratch_dir("cdc_sig", sf)
-        shutil.rmtree(tmp, ignore_errors=True)
-        atexit.register(shutil.rmtree, tmp, ignore_errors=True)
-        corpus = LakeTable.create(f"{tmp}/corpus", n_buckets=8, schema_version=2)
-        sig = create_signature_table(f"{tmp}/sig", n_buckets=8)
-        chunk = max(int(n) // 2, 1)
-        replay(spark, stream, corpus, chunk_size=chunk, max_batches=1)
-        corpus = LakeTable.load(f"{tmp}/corpus")
-        v_mid = corpus.version
-        refresh_signatures(spark, corpus, sig, since_version=0)
-        replay(spark, stream, corpus, chunk_size=chunk)  # resume the tail
-        corpus = LakeTable.load(f"{tmp}/corpus")
-        refresh_signatures(spark, corpus, LakeTable.load(f"{tmp}/sig"), since_version=v_mid)
-        _SIG_ROOTS[sf] = f"{tmp}/sig"
-    final = LakeTable.load(_SIG_ROOTS[sf]).read(spark)
+def _signatures_frame(final: DataFrame) -> DataFrame:
     return final.select(
         "doc_id",
         *[F.element_at("mh", i + 1).alias(f"mh_{i}") for i in range(N_HASHES)],
     ).orderBy("doc_id")
+
+
+def cdc_incremental_signatures(spark: SparkSession, sf: str) -> DataFrame:
+    from ..cdc.replay import replay
+    from .cdc_query import _replay_events
+
+    def build(tmp: str) -> str:
+        corpus_root, sig_root = f"{tmp}/corpus", f"{tmp}/sig"
+        sig = create_signature_table(sig_root, n_buckets=8)
+        r = _replay_events(spark, sf, corpus_root, 2, max_batches=1)
+        corpus = LakeTable.load(corpus_root)
+        v_mid = corpus.version
+        refresh_signatures(spark, corpus, sig, since_version=0)
+        replay(spark, r.stream, corpus, chunk_size=r.chunk)  # resume the tail
+        corpus = LakeTable.load(corpus_root)
+        refresh_signatures(spark, corpus, LakeTable.load(sig_root), since_version=v_mid)
+        return sig_root
+
+    root = scratch_table("cdc_sig", sf, build)
+    return _signatures_frame(LakeTable.load(root).read(spark))
 
 
 _TOK_STR = (
@@ -303,36 +295,23 @@ ORDER BY doc_id
 # green row proving the table-format layer (restore, feed gates,
 # manifest rollback) and the derived-table maintenance compose.
 
-_SIG_RESTORE_ROOTS: dict[str, str] = {}
-
 
 def sig_rebootstrap_after_restore(spark: SparkSession, sf: str) -> DataFrame:
-    import atexit
     import os
     import shutil
 
     from ..cdc.replay import replay
-    from ..sources.readers import load_table as T
-    from .cdc_query import _as_change_stream, _scratch_dir
+    from .cdc_query import _replay_events
 
-    cached = _SIG_RESTORE_ROOTS.get(sf)
-    if cached is None or not LakeTable.exists(cached):
-        events = T(spark, sf, "events")
-        stream = _as_change_stream(events)
-        n = events.agg(F.max("event_id")).collect()[0][0] or 0
-        tmp = _scratch_dir("cdc_sig_restore", sf)
-        shutil.rmtree(tmp, ignore_errors=True)
-        atexit.register(shutil.rmtree, tmp, ignore_errors=True)
-        corpus = LakeTable.create(f"{tmp}/corpus", n_buckets=8, schema_version=2)
-        sig_root = f"{tmp}/sig"
+    def build(tmp: str) -> str:
+        corpus_root, sig_root = f"{tmp}/corpus", f"{tmp}/sig"
         sig = create_signature_table(sig_root, n_buckets=8)
-        chunk = max(int(n) // 2, 1)
-        replay(spark, stream, corpus, chunk_size=chunk, max_batches=1)
-        corpus = LakeTable.load(f"{tmp}/corpus")
+        r = _replay_events(spark, sf, corpus_root, 2, max_batches=1)
+        corpus = LakeTable.load(corpus_root)
         v_mid = corpus.version
         refresh_signatures(spark, corpus, sig, since_version=0)
-        replay(spark, stream, corpus, chunk_size=chunk)  # the tail
-        corpus = LakeTable.load(f"{tmp}/corpus")
+        replay(spark, r.stream, corpus, chunk_size=r.chunk)  # the tail
+        corpus = LakeTable.load(corpus_root)
         v_full = corpus.version
         refresh_signatures(
             spark, corpus, LakeTable.load(sig_root), since_version=v_mid
@@ -341,7 +320,7 @@ def sig_rebootstrap_after_restore(spark: SparkSession, sf: str) -> DataFrame:
         # signature table now holds stale higher-LSN rows no feed
         # refresh can revert — the gate must refuse the span
         corpus.restore(v_mid)
-        corpus = LakeTable.load(f"{tmp}/corpus")
+        corpus = LakeTable.load(corpus_root)
         v_restored = corpus.version
         try:
             refresh_signatures(
@@ -358,17 +337,15 @@ def sig_rebootstrap_after_restore(spark: SparkSession, sf: str) -> DataFrame:
         shutil.rmtree(sig_root)
         os.rename(rebuild, sig_root)
         # resume: the restore made the tail chunks pending again
-        replay(spark, stream, LakeTable.load(f"{tmp}/corpus"), chunk_size=chunk)
-        corpus = LakeTable.load(f"{tmp}/corpus")
+        replay(spark, r.stream, LakeTable.load(corpus_root), chunk_size=r.chunk)
+        corpus = LakeTable.load(corpus_root)
         refresh_signatures(
             spark, corpus, LakeTable.load(sig_root), since_version=v_restored
         )
-        _SIG_RESTORE_ROOTS[sf] = sig_root
-    final = LakeTable.load(_SIG_RESTORE_ROOTS[sf]).read(spark)
-    return final.select(
-        "doc_id",
-        *[F.element_at("mh", i + 1).alias(f"mh_{i}") for i in range(N_HASHES)],
-    ).orderBy("doc_id")
+        return sig_root
+
+    root = scratch_table("cdc_sig_restore", sf, build)
+    return _signatures_frame(LakeTable.load(root).read(spark))
 
 
 QUERIES = {

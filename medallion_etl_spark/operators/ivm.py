@@ -64,7 +64,7 @@ from pyspark.sql import types as T
 from ..cdc.apply import apply_batch
 from ..cdc.manifest import RANGE_REFRESH_BASE
 from ..cdc.table import LakeTable, retry_on_fork_rewind
-from .util import persist_replacing
+from .util import persist_replacing, scratch_table
 
 AGG_SCHEMA_V1 = T.StructType(
     [
@@ -245,24 +245,17 @@ def refresh_agg(
 
 
 def ivm_source_stats(spark: SparkSession, sf: str) -> DataFrame:
-    import atexit
-    import shutil
+    from .cdc_query import _feed_table_root
 
-    from .cdc_query import _feed_table_root, _scratch_dir
+    def build(tmp: str) -> str:
+        feed_root = _feed_table_root(spark, sf)
+        agg = create_agg_table(f"{tmp}/agg", n_buckets=4)
+        bootstrap_agg(spark, LakeTable.load_version(feed_root, 1), agg)
+        refresh_agg(spark, LakeTable.load(feed_root), LakeTable.load(f"{tmp}/agg"))
+        return f"{tmp}/agg"
 
-    root = _feed_table_root(spark, sf)
-    tmp = _scratch_dir("cdc_ivm", sf)
-    shutil.rmtree(tmp, ignore_errors=True)
-    atexit.register(shutil.rmtree, tmp, ignore_errors=True)
-    agg = create_agg_table(f"{tmp}/agg", n_buckets=4)
-    bootstrap_agg(spark, LakeTable.load_version(root, 1), agg)
-    refresh_agg(spark, LakeTable.load(root), LakeTable.load(f"{tmp}/agg"))
-    return (
-        LakeTable.load(f"{tmp}/agg")
-        .read(spark)
-        .select("source", "n_rows", "sum_tok")
-        .orderBy("source")
-    )
+    root = scratch_table("cdc_ivm", sf, build)
+    return LakeTable.load(root).read(spark).select("source", "n_rows", "sum_tok").orderBy("source")
 
 
 IVM_SOURCE_STATS_SQL = """

@@ -202,11 +202,12 @@ def tokenize_documents_raw(spark: SparkSession, sf: str) -> DataFrame:
     docs = spread(spark, T(spark, sf, "documents"))
     words = F.filter(F.split(F.lower("text"), " "), lambda w: F.length(w) > 0)
     tokens = F.transform(words, _token_id)
-    # n_tok reads the projected array: one tokenization per row (plan-pinned)
-    return (
-        docs.select("doc_id", tokens.alias("tokens"), "source")
-        .select("doc_id", "tokens", F.size("tokens").cast("int").alias("n_tok"), "source")
-        .orderBy("doc_id")
+    # n_tok reads the projected array: one tokenization per row (plan-pinned).
+    # Unsorted: callers that return rows sort their own output, and a
+    # global sort here would range-shuffle every document for the
+    # consumers that only count tokens (source_token_drift).
+    return docs.select("doc_id", tokens.alias("tokens"), "source").select(
+        "doc_id", "tokens", F.size("tokens").cast("int").alias("n_tok"), "source"
     )
 
 
@@ -283,11 +284,16 @@ def token_ngram_decontaminate(spark: SparkSession, sf: str) -> DataFrame:
         ),
     )
     # persisted: the benchmark distinct-set and the corpus probe are
-    # both built from this explode (same reason as dup_span_stats)
+    # both built from this explode (same reason as dup_span_stats). The
+    # short-doc cut sits inside an explode_outer with a NULL filter
+    # above: Catalyst pushes a filter on n_tok, or the non-empty filter
+    # it infers from a plain explode, below the spread, onto a second
+    # tokenization (plan-pinned)
     flat = persist_replacing(
         "token_decon_ngrams",
         sf,
-        raw.filter(n >= TOKEN_DECON_K).select("doc_id", F.explode(wins).alias("g")),
+        raw.select("doc_id", F.explode_outer(F.when(n >= TOKEN_DECON_K, wins)).alias("g"))
+        .filter(F.col("g").isNotNull()),
         StorageLevel.MEMORY_AND_DISK,
     )
     is_bench = F.col("doc_id") % 20 == 0

@@ -588,11 +588,14 @@ def source_token_drift(spark: SparkSession, sf: str) -> DataFrame:
     raw = tokenize_documents_raw(spark, sf)
     # four consumers below (source totals, bucket totals, grand total,
     # the grid join): persisted, the documents are scanned and
-    # tokenized once instead of once per consumer
+    # tokenized once instead of once per consumer. explode_outer plus a
+    # NULL filter: Catalyst pushes the non-empty filter it infers from a
+    # plain explode below the spread, onto a second tokenization
     counts = persist_replacing(
         "drift_counts",
         sf,
-        raw.select("source", F.explode("tokens").alias("tok"))
+        raw.select("source", F.explode_outer("tokens").alias("tok"))
+        .filter(F.col("tok").isNotNull())
         .groupBy("source", (F.col("tok") % DRIFT_BUCKETS).alias("bucket"))
         .agg(F.count(F.lit(1)).alias("n")),
     )

@@ -15,6 +15,7 @@ from __future__ import annotations
 
 import contextlib
 import io
+import re
 
 import pytest
 from pyspark.sql import functions as F
@@ -513,22 +514,54 @@ def test_word_split_is_bound_once_per_projection(spark, sf_small, name):
     assert most == 1, f"{name}: a projection splits the text {most} times"
 
 
-_TOKENIZERS = ["tokenize_documents_raw", "packed_batch_payloads"]
+_TOKENIZERS = [
+    "tokenize_documents_raw",
+    "packed_batch_payloads",
+    "source_token_drift",
+    "token_ngram_decontaminate",
+]
+
+
+def _nodes_mentioning(df, needle: str) -> set[str]:
+    """The distinct optimized-plan nodes that mention ``needle``, tree
+    glyphs stripped: a persisted relation prints its stored plan once
+    per reader, and those copies are one computation."""
+    p = df._jdf.queryExecution().optimizedPlan().toString()
+    return {re.sub(r"^[\s:|+-]*", "", line) for line in p.splitlines() if needle in line}
 
 
 @pytest.mark.smoke
 @pytest.mark.parametrize("name", _TOKENIZERS)
 def test_tokenizer_hashes_each_word_once_and_tokenizes_each_row_once(spark, sf_small, name):
-    """Counted over the whole optimized plan: one md5 per word inside
-    the token-id lambda (md5_bucket reads its digest five times) and
-    one tokenization per row (``n_tok`` reads the projected token
-    array; the empty-doc filter is not pushed onto a second copy)."""
-    from medallion_etl_spark.operators import packing, repetition
+    """Over the whole optimized plan: one node tokenizes, once per row
+    (``n_tok`` reads the projected token array; neither the empty-doc
+    filter nor the non-empty filter Catalyst infers from an explode is
+    pushed onto a second copy), with one md5 per word inside the
+    token-id lambda (md5_bucket reads its digest five times)."""
+    from medallion_etl_spark.operators import collect_queries, packing, repetition
 
-    fn = getattr(repetition, name, None) or getattr(packing, name)
-    p = fn(spark, sf_small)._jdf.queryExecution().optimizedPlan().toString()
-    assert p.count("split(lower(text") == 1, f"{name}: the text is tokenized more than once"
-    assert p.count("md5(static_invoke(Encode.encode(lambda") == 1, f"{name}: md5 per word > 1"
+    fn = getattr(repetition, name, None) or getattr(packing, name, None)
+    fn = fn or collect_queries()[name][0]
+    try:
+        df = fn(spark, sf_small)
+        for needle in ("split(lower(text", "md5(static_invoke(Encode.encode(lambda"):
+            nodes = _nodes_mentioning(df, needle)
+            assert len(nodes) == 1, f"{name}: {len(nodes)} nodes compute {needle}"
+            assert next(iter(nodes)).count(needle) == 1, f"{name}: {needle} twice in a row"
+    finally:
+        spark.catalog.clearCache()
+
+
+def test_source_token_drift_does_not_sort_the_documents(spark, sf_small):
+    """The drift only counts tokens per (source, bucket): no range
+    shuffle of the documents by doc_id under its aggregation."""
+    from medallion_etl_spark.operators.textops import source_token_drift
+
+    try:
+        executed = source_token_drift(spark, sf_small)._jdf.queryExecution().executedPlan()
+        assert "rangepartitioning(doc_id" not in executed.toString()
+    finally:
+        spark.catalog.clearCache()
 
 
 @pytest.mark.smoke

@@ -175,3 +175,43 @@ def test_drop_column_and_name_reservation(spark, tmp_path):
     # pre-drop snapshots still expose the column
     old = LakeTable.load_version(root, res["version"] - 1)
     assert "lang" in old.read(spark).columns
+
+
+def test_preimages_across_add_and_widen_column(spark, tmp_path):
+    """A preimage feed whose span crosses ``widen_column`` and
+    ``add_column`` serves the old rows at the CURRENT schema: the
+    widened column cast up, the added column NULL."""
+    root = str(tmp_path / "t")
+    LakeTable.create(root, n_buckets=4)
+    ev = gen_events(spark, n_events=600, n_keys=60, delete_pct=0).cache()
+    ev.count()
+    sv_cnt = LakeTable.load(root).add_column("cnt", "int")["schema_version"]
+    replay(
+        spark,
+        ev.filter("lsn < 300")
+        .withColumn("cnt", (F.col("lsn") % 7).cast("int"))
+        .withColumn("schema_version", F.lit(sv_cnt)),
+        LakeTable.load(root),
+        chunk_size=300,
+    )
+    since = LakeTable.load(root).version
+    LakeTable.load(root).widen_column("cnt", "bigint")
+    sv = LakeTable.load(root).add_column("score", "double")["schema_version"]
+    replay(
+        spark,
+        ev.withColumn("cnt", (F.col("lsn") % 7).cast("bigint"))
+        .withColumn("score", F.lit(1.5))
+        .withColumn("schema_version", F.lit(sv)),
+        LakeTable.load(root),
+        chunk_size=300,
+    )
+
+    feed = LakeTable.load(root).read_changes(spark, since, include_preimage=True)
+    assert dict(feed.dtypes)["cnt"] == "bigint"
+    assert dict(feed.dtypes)["score"] == "double"
+    pre = feed.filter(F.col("_change_type") == "update_preimage").collect()
+    assert pre, "the span changed no key that was live before it"
+    assert all(r["score"] is None for r in pre)
+    assert all(r["_lsn"] < 300 and r["cnt"] == r["_lsn"] % 7 for r in pre)
+    post = feed.filter(F.col("_change_type") == "upsert").collect()
+    assert post and all(r["score"] == 1.5 and r["_lsn"] >= 300 for r in post)
