@@ -29,7 +29,8 @@ Scale shape:
 - Lineage (per-bucket LSN range / events / bytes) comes from one
   partial-aggregate pass over the raw chunk (n_buckets rows per map
   task cross the wire, nothing else); 'rows_applied' counts the
-  chunk's events landing in that bucket.
+  chunk's events landing in that bucket. The rows ride the commit's
+  own record (LakeTable.commit), durable in the same swap as the data.
 """
 
 from __future__ import annotations
@@ -43,7 +44,6 @@ from pyspark.sql import functions as F
 from .constraints import violation_reason
 from .dedup import dedup_latest
 from .evolve import aligned_cols
-from .lineage import write_lineage
 from .table import (
     LakeTable,
     bucket_expr,
@@ -164,6 +164,27 @@ def _dir_bytes(path: str) -> int:
         for fn in filenames:
             total += os.path.getsize(os.path.join(dirpath, fn))
     return total
+
+
+def write_lineage(table_root: str, batch_id: int, stats: list, new_dirs: dict[int, str]) -> list[dict]:
+    """This commit's lineage rows, one per touched bucket: the chunk's
+    LSN range and event count in that bucket (from the apply stats) and
+    the bytes written under its new dir (0 for a bucket whose rows were
+    all deleted, which gets no dir). Built before the commit, which
+    stores them in its record."""
+    return [
+        {
+            "batch_id": batch_id,
+            "partition_id": int(r["_bucket"]),
+            "lsn_lo": int(r["lsn_lo"]),
+            "lsn_hi": int(r["lsn_hi"]),
+            "rows_applied": int(r["rows_applied"]),
+            "bytes_written": _dir_bytes(os.path.join(table_root, new_dirs[int(r["_bucket"])]))
+            if int(r["_bucket"]) in new_dirs
+            else 0,
+        }
+        for r in stats
+    ]
 
 
 def check_write_mode(write_mode: str) -> None:
@@ -395,25 +416,12 @@ def apply_batch(
     mark("merge_write")
 
     # A COW bucket with all rows deleted produces no dir and is dropped
-    # from metadata. The lineage rows are only BUILT here and written
-    # AFTER the manifest commit succeeds, so durable lineage never
+    # from metadata. The lineage rows go into the commit's own record:
+    # they are durable exactly when the batch is, so lineage never
     # describes an uncommitted attempt (a racing loser's overwrite, a
-    # crash before commit) — a crash in the narrow window after commit
-    # loses only the diagnostic row, never invents one.
+    # crash before commit) and a crash after the swap cannot lose it.
     new_dirs = map_bucket_dirs(table.root, rel_dir)
-    lineage_rows = [
-        {
-            "batch_id": batch_id,
-            "partition_id": int(r["_bucket"]),
-            "lsn_lo": int(r["lsn_lo"]),
-            "lsn_hi": int(r["lsn_hi"]),
-            "rows_applied": int(r["rows_applied"]),
-            "bytes_written": _dir_bytes(os.path.join(table.root, new_dirs[int(r["_bucket"])]))
-            if int(r["_bucket"]) in new_dirs
-            else 0,
-        }
-        for r in stats
-    ]
+    lineage = write_lineage(table.root, batch_id, stats, new_dirs)
     fstats = bucket_footer_stats(table.root, new_dirs)
     mark("footer_stats")
     if mode == "mor":
@@ -446,14 +454,13 @@ def apply_batch(
         ),
         dict(
             schema_version=target_sv if target_sv != table.schema_version else None,
+            lineage=lineage,
             **commit_kw,
         ),
         mode=mode,
         allow_rebase=allow_rebase,
     )
     mark("commit")
-    write_lineage(spark, table.root, batch_id, lineage_rows)
-    mark("lineage")
     return {
         "batch_id": batch_id,
         "rows_applied": rows_applied,

@@ -48,14 +48,6 @@ def parse_type(t: str | T.DataType) -> T.DataType:
     return T._parse_datatype_string(t)
 
 
-def schema_to_json(st: T.StructType) -> dict:
-    return st.jsonValue()
-
-
-def schema_from_json(d: dict) -> T.StructType:
-    return T.StructType.fromJson(d)
-
-
 def is_widening(src: T.DataType, dst: T.DataType) -> bool:
     return dst.simpleString() in WIDENINGS.get(src.simpleString(), set())
 

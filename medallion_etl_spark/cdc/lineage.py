@@ -3,67 +3,45 @@ the source LSN range, rows applied, and bytes written.
 
 Reference analog: per-run throughput logging (reference
 sales_transformer.py:240-242) — upgraded to a queryable table as the
-north_star requires. Written under ``<table_root>/lineage/batch_id=N/``
-so a resumed re-apply of the same batch overwrites its own records
-(idempotent), and the whole history reads back as one partitioned
-parquet table.
+north_star requires. Every ``version-N.json`` carries one ``commit``
+record (the Delta ``commitInfo`` analog) whose ``lineage`` list holds
+the rows of the batches that commit applied, written by
+``LakeTable.commit`` in the same swap that makes the data visible. Like
+``history()``, lineage spans the retained versions; a clone starts with
+an empty record at its own version 0.
 """
 
 from __future__ import annotations
 
-import os
-
-import pyarrow as pa
-import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 
 from ..schemas import LINEAGE_SCHEMA
-
-_ARROW_SCHEMA = pa.schema(
-    [
-        ("partition_id", pa.int32()),
-        ("lsn_lo", pa.int64()),
-        ("lsn_hi", pa.int64()),
-        ("rows_applied", pa.int64()),
-        ("bytes_written", pa.int64()),
-    ]
-)
+from . import metalog
 
 
-def lineage_dir(table_root: str) -> str:
-    return os.path.join(table_root, "lineage")
-
-
-def write_lineage(spark: SparkSession, table_root: str, batch_id: int, rows: list[dict]) -> None:
-    """Lineage rows are driver-side metadata (one per touched bucket),
-    so they are written with pyarrow directly — no Spark job — into the
-    same hive-partitioned layout spark.read.parquet discovers. A
-    resumed re-apply of the same batch overwrites its own file
-    (idempotent)."""
-    if not rows:
-        return
-    out = os.path.join(lineage_dir(table_root), f"batch_id={batch_id}")
-    os.makedirs(out, exist_ok=True)
-    table = pa.table(
-        {
-            "partition_id": [int(r["partition_id"]) for r in rows],
-            "lsn_lo": [int(r["lsn_lo"]) for r in rows],
-            "lsn_hi": [int(r["lsn_hi"]) for r in rows],
-            "rows_applied": [int(r["rows_applied"]) for r in rows],
-            "bytes_written": [int(r["bytes_written"]) for r in rows],
-        },
-        schema=_ARROW_SCHEMA,
-    )
-    pq.write_table(table, os.path.join(out, "part-0.parquet"))
+def lineage_rows(root: str) -> list[dict]:
+    """The lineage rows of every batch HEAD has committed, read from the
+    retained versions' commit records, oldest first. A batch applied
+    again after a restore has rows in two records: the newest wins.
+    Batches a restore undid are not in HEAD's manifest and are left
+    out."""
+    by_batch: dict[int, list[dict]] = {}
+    meta: dict = {}
+    for v in metalog.versions(root):
+        meta = metalog.read(root, v)
+        rows: dict[int, list[dict]] = {}
+        for r in meta.get("commit", {}).get("lineage", []):
+            rows.setdefault(int(r["batch_id"]), []).append(r)
+        by_batch.update(rows)
+    committed = meta.get("committed_batches", {})
+    return [r for b, rs in sorted(by_batch.items()) if str(b) in committed for r in rs]
 
 
 def read_lineage(spark: SparkSession, table_root: str) -> DataFrame:
-    """Every batch's lineage rows, always in ``LINEAGE_SCHEMA``'s column
-    order and types. The schema is passed, not inferred: inference
-    costs a Spark job, types the ``batch_id`` partition column by the
-    values on disk (``int`` below 2^31, ``bigint`` for stream-range
-    ids) and puts it last."""
-    path = lineage_dir(table_root)
-    if not os.path.exists(path):
-        return spark.createDataFrame([], LINEAGE_SCHEMA)
-    return spark.read.schema(LINEAGE_SCHEMA).parquet(path).select(*LINEAGE_SCHEMA.fieldNames())
+    """Every committed batch's lineage rows, always in
+    ``LINEAGE_SCHEMA``'s column order and types. Built on the driver
+    from the metadata log: no file scan, no Spark job."""
+    names = LINEAGE_SCHEMA.fieldNames()
+    return spark.createDataFrame(
+        [tuple(r[n] for n in names) for r in lineage_rows(table_root)], LINEAGE_SCHEMA
+    )

@@ -3,7 +3,8 @@
 Layout under ``<root>/metadata``:
 
 - ``version-N.json``: the full table document of snapshot N (bucket
-  pointers, batch manifest, schemas, ...). Written once, never edited.
+  pointers, batch manifest, schemas, ...), plus the ``commit`` record
+  of version N alone. Written once, never edited.
 - ``CURRENT``: names the HEAD document. Replacing it is THE commit: data
   visibility and the exactly-once manifest change in one ``os.replace``
   (closes the reference's BUG-001 delete-before-insert window).

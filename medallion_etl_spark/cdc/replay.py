@@ -2,9 +2,10 @@
 
 Splits the event stream into deterministic LSN ranges and applies each
 not-yet-committed chunk to the LakeTable (fused LWW dedup + tombstone
-merge, see apply.py), committing manifest + lineage atomically per
-chunk. Resuming (after a kill at ANY point) is just calling replay()
-again: committed chunks are skipped, the in-flight one is recomputed.
+merge, see apply.py), manifest entry + lineage record in the chunk's
+own version document, one pointer swap. Resuming (after a kill at ANY
+point) is just calling replay() again: committed chunks are skipped,
+the in-flight one is recomputed.
 
 Correctness note on chunking: the merge is max-LSN-wins over rows that
 carry their producing LSN (with delete tombstones), so the final state

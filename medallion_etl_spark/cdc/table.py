@@ -41,6 +41,7 @@ from ..schemas import DOCS_SCHEMAS
 from . import metalog
 from .dedup import dedup_latest
 from .evolve import aligned_cols
+from .lineage import lineage_rows
 
 # Row-level bookkeeping persisted in every data file (never surfaced by
 # a non-raw read):
@@ -58,12 +59,6 @@ INTERNAL_FIELDS = [
     T.StructField("_deleted", T.BooleanType(), True),
 ]
 INTERNAL_COLS = [f.name for f in INTERNAL_FIELDS]
-
-
-def count_dir_rows(abs_dir: str) -> int:
-    """Row count of a bucket dir from parquet footers (driver-side,
-    no Spark job — footers only)."""
-    return dir_footer_stats(abs_dir)[0]
 
 
 def dir_footer_stats(abs_dir: str) -> tuple[int, int | None]:
@@ -364,6 +359,12 @@ _ADOPTED_FIELDS = (
 )
 
 
+def empty_commit() -> dict:
+    """The commit record of a version that added nothing: a new table's
+    and a clone's version 0. See ``LakeTable.commit``."""
+    return {"batches": [], "buckets_changed": 0, "lineage": []}
+
+
 class LakeTable:
     def __init__(self, root: str, meta: dict):
         self.root = root
@@ -428,6 +429,7 @@ class LakeTable:
             # CHECK constraints (cdc/constraints.py): name -> SQL predicate
             # every non-tombstone write must not evaluate to FALSE
             "constraints": dict(constraints or {}),
+            "commit": empty_commit(),
         }
         metalog.write(root, meta)
         return cls(root, meta)
@@ -1340,7 +1342,8 @@ class LakeTable:
         def absolutize(d: str) -> str:
             return d if os.path.isabs(d) else os.path.join(src_root, d)
 
-        meta = json.loads(json.dumps(self.meta))  # deep copy
+        # deep copy, minus the source version's own commit record
+        meta = json.loads(json.dumps({k: v for k, v in self.meta.items() if k != "commit"}))
         for entry in meta["buckets"].values():
             entry["dir"] = absolutize(entry["dir"])
             for d in entry.get("deltas", []):
@@ -1356,6 +1359,7 @@ class LakeTable:
         # load_as_of resolve timestamps from before the clone existed
         meta.pop("clones", None)
         meta["committed_at_unix"] = time.time()
+        meta["commit"] = empty_commit()  # its history starts here
         os.makedirs(os.path.join(dst_root, "data"), exist_ok=True)
         metalog.write(dst_root, meta)
         clone = LakeTable(dst_root, meta)
@@ -1416,7 +1420,8 @@ class LakeTable:
         commit adopts the stage's buckets, batch manifest, schema map,
         clustering, compaction watermark and constraints — the staged
         batches become pending-dedupe history exactly as if they had
-        been applied directly. The stage is invalidated afterwards
+        been applied directly, and the commit's record carries their
+        lineage rows. The stage is invalidated afterwards
         (its ``metadata/CURRENT`` is replaced by a ``PUBLISHED``
         marker): its local dirs moved away, so leaving it loadable
         would be silent-corruption bait.
@@ -1506,6 +1511,9 @@ class LakeTable:
             }
 
         fork_state = data_state(LakeTable.load_version(src_root, fork).meta)
+        # the stage's commit records from its fork onward (its version 0
+        # is the clone's empty record): the publish commit carries them
+        staged_lineage = lineage_rows(stage.root)
 
         def check_not_diverged(h: "LakeTable") -> None:
             if data_state(h.meta) != fork_state:
@@ -1574,6 +1582,7 @@ class LakeTable:
                             if c != stage_abs
                         ],
                     },
+                    lineage=staged_lineage,
                 )
                 return h
 
@@ -1681,26 +1690,21 @@ class LakeTable:
     def history(self) -> list[dict]:
         """Commit history from retained metadata versions (the Delta
         ``DESCRIBE HISTORY`` analog): one record per snapshot, oldest
-        first, each with the batches that commit added, how many
-        bucket pointers moved, and the schema/clustering state. Pure
-        driver-side metadata reads — no Spark job, cost O(versions),
-        independent of table size."""
+        first, each with the batches that commit added and how many
+        bucket pointers moved (from the version's own commit record;
+        None for a document older than the records), and the
+        schema/clustering state. Pure driver-side metadata reads — no
+        Spark job, one document per version, independent of table size."""
         out: list[dict] = []
-        prev_meta: dict | None = None
         for v in metalog.versions(self.root):
             meta = metalog.read(self.root, v)
-            # after expire_snapshots the oldest retained version has no
-            # predecessor on disk: its per-commit diff is UNKNOWABLE,
-            # not "everything ever" — report it as a baseline instead
-            # of fabricating a commit that added all history at once.
-            # Version 0 is the true creation, so its diff-vs-empty is
-            # real.
-            baseline = prev_meta is None and v > 0
-            record = {
+            rec = meta.get("commit")
+            out.append({
                 "version": v,
                 "schema_version": int(meta.get("schema_version", 1)),
                 "committed_at_unix": meta.get("committed_at_unix"),
-                "baseline": baseline,
+                "batches_added": None if rec is None else rec["batches"],
+                "buckets_changed": None if rec is None else rec["buckets_changed"],
                 "max_committed_lsn": max(
                     (int(r["lsn_hi"]) for r in meta["committed_batches"].values()),
                     default=-1,
@@ -1709,26 +1713,7 @@ class LakeTable:
                 "compaction_watermark_lsn": int(
                     meta.get("compaction_watermark_lsn", -1)
                 ),
-            }
-            if baseline:
-                record["batches_added"] = None
-                record["buckets_changed"] = None
-            else:
-                prev_batches = set((prev_meta or {}).get("committed_batches", {}))
-                prev_buckets = {
-                    b: entry_signature(e)
-                    for b, e in (prev_meta or {}).get("buckets", {}).items()
-                }
-                record["batches_added"] = sorted(
-                    int(b) for b in meta["committed_batches"] if b not in prev_batches
-                )
-                record["buckets_changed"] = sum(
-                    1
-                    for b, e in meta["buckets"].items()
-                    if prev_buckets.get(b) != entry_signature(e)
-                ) + sum(1 for b in prev_buckets if b not in meta["buckets"])
-            out.append(record)
-            prev_meta = meta
+            })
         return out
 
     def remove_orphans(self, *, older_than_seconds: int = 3 * 86400) -> dict:
@@ -1863,9 +1848,16 @@ class LakeTable:
         meta_updates: dict | None = None,
         bucket_max_lsns: dict[int, int | None] | None = None,
         delta_appends: dict[int, dict] | None = None,
+        lineage: list[dict] | None = None,
     ) -> None:
         """Atomically publish: rewritten bucket pointers + manifest entry
         (+ optional schema evolution) in one metadata swap.
+
+        The new document carries this commit's own ``commit`` record,
+        never copied forward: ``batches`` (ids added to the manifest;
+        the diff when ``meta_updates`` replaces it), ``buckets_changed``
+        (entries whose layout signature moved, removals included) and
+        the caller's ``lineage`` rows, each naming its ``batch_id``.
 
         ``delta_appends``: merge-on-read commits — per bucket, a source
         record ``{dir, schema_version, rows?, max_lsn?}`` APPENDED to
@@ -1882,7 +1874,8 @@ class LakeTable:
         commit — the single-filesystem analog of Iceberg's conditional
         metadata swap (on an object store this would be a
         compare-and-swap / conditional PUT)."""
-        meta = json.loads(json.dumps(self.meta))  # deep copy
+        # deep copy; the parent's commit record is its own, never copied
+        meta = json.loads(json.dumps({k: v for k, v in self.meta.items() if k != "commit"}))
         meta["version"] = self.version + 1
         if schema_version is not None:
             meta["schema_version"] = schema_version
@@ -1918,5 +1911,18 @@ class LakeTable:
             meta["committed_batches"][str(batch_id)] = rec
         if meta_updates:
             meta.update(meta_updates)
+        batches = [int(batch_record[0])] if batch_record is not None else []
+        if "committed_batches" in (meta_updates or {}):
+            had = self.meta["committed_batches"]
+            batches = sorted(int(b) for b in meta["committed_batches"] if b not in had)
+        old, new = self.meta["buckets"], meta["buckets"]
+        meta["commit"] = {
+            "batches": batches,
+            "buckets_changed": sum(
+                1 for b, e in new.items()
+                if b not in old or entry_signature(old[b]) != entry_signature(e)
+            ) + sum(1 for b in old if b not in new),
+            "lineage": list(lineage or []),
+        }
         metalog.commit(self.root, self.version, meta)
         self.meta = meta

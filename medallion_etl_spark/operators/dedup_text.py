@@ -58,6 +58,16 @@ def _windows(words: F.Column, k: int) -> F.Column:
     )
 
 
+def _long_doc_windows(k: int) -> F.Column:
+    """The k-word window digests of the text, or NULL for a document
+    shorter than k words. The length cut reads the bound words array:
+    as a row filter, Catalyst pushes it below the projection onto a
+    second split of the text. Explode it with ``explode_outer`` and
+    drop the NULL row after: a plain explode makes Catalyst infer the
+    same pushed-down filter."""
+    return let(_words(), lambda w: F.when(F.size(w) >= k, _windows(w, k)))
+
+
 def _grams(words: F.Column, k: int) -> F.Column:
     """Word k-gram digests of a BOUND words array; a document shorter
     than k words is one gram, the digest of all its words."""
@@ -478,15 +488,13 @@ DUP_SPAN_KEEP_MAX = 0.3  # keep docs with <= 30% cross-doc duplicated windows
 
 def dup_span_stats(spark: SparkSession, sf: str) -> DataFrame:
     docs = spread(spark, T(spark, sf, "documents"))
-    words = _words()
-    n = F.size(words)
-    wins = let(words, lambda w: _windows(w, DUP_SPAN_K))
     # persisted for the same reason as the shingle frames above: the
     # window-frequency agg and the join-back are both built from it
     flat = persist_replacing(
         "dup_span_wins",
         sf,
-        docs.filter(n >= DUP_SPAN_K).select("doc_id", F.explode(wins).alias("w")),
+        docs.select("doc_id", F.explode_outer(_long_doc_windows(DUP_SPAN_K)).alias("w"))
+        .filter(F.col("w").isNotNull()),
         StorageLevel.MEMORY_AND_DISK,
     )
     freq = flat.groupBy("w").agg(F.count_distinct("doc_id").alias("nd"))
@@ -565,11 +573,9 @@ def dup_span_removal(docs: DataFrame, k: int = DUP_SPAN_K) -> DataFrame:
     shorter than k words carry no window and pass through untouched.
     """
     words = _words()
-    n = F.size(words)
-    wins = let(words, lambda w: _windows(w, k))
     flat = (
-        docs.filter(n >= k)
-        .select("doc_id", F.posexplode(wins).alias("p0", "w"))
+        docs.select("doc_id", F.posexplode_outer(_long_doc_windows(k)).alias("p0", "w"))
+        .filter(F.col("w").isNotNull())
         .select("doc_id", (F.col("p0") + 1).alias("pos"), "w")
     )
     rn = F.row_number().over(Window.partitionBy("w").orderBy("doc_id", "pos"))

@@ -129,9 +129,3 @@ def get_spark(
             stacklevel=2,
         )
     return spark
-
-
-def stop_spark() -> None:
-    active = SparkSession.getActiveSession()
-    if active is not None:
-        active.stop()

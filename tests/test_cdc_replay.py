@@ -136,17 +136,17 @@ def test_manifest_and_lineage(spark, tmp_path, events_path):
 )
 def test_lineage_reads_in_its_declared_schema(spark, tmp_path, batch_ids):
     """Column order and types come from LINEAGE_SCHEMA whatever the ids
-    on disk: inferred, ``batch_id`` read as ``int`` below 2^31, as
-    ``bigint`` above, and came last unless the table was empty."""
-    from medallion_etl_spark.cdc.lineage import write_lineage
+    in the commit records: inferred, ``batch_id`` would be ``int``
+    below 2^31 and ``bigint`` above."""
     from medallion_etl_spark.schemas import LINEAGE_SCHEMA
 
-    root = str(tmp_path / "t")
+    table = LakeTable.create(str(tmp_path / "t"), n_buckets=8)
     for b in batch_ids:
-        row = {"partition_id": 3, "lsn_lo": b, "lsn_hi": b + 1, "rows_applied": 2,
-               "bytes_written": 10}
-        write_lineage(spark, root, b, [row])
-    lin = read_lineage(spark, root)
+        row = {"batch_id": b, "partition_id": 3, "lsn_lo": b, "lsn_hi": b + 1,
+               "rows_applied": 2, "bytes_written": 10}
+        table.commit({}, set(), (b, {"lsn_lo": b, "lsn_hi": b + 1, "rows_applied": 2}),
+                     lineage=[row])
+    lin = read_lineage(spark, table.root)
     assert lin.dtypes == [(f.name, f.dataType.simpleString()) for f in LINEAGE_SCHEMA]
     assert sorted(tuple(r) for r in lin.collect()) == [(b, 3, b, b + 1, 2, 10) for b in batch_ids]
 

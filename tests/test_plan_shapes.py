@@ -552,6 +552,22 @@ def test_tokenizer_hashes_each_word_once_and_tokenizes_each_row_once(spark, sf_s
         spark.catalog.clearCache()
 
 
+@pytest.mark.parametrize("name", ["dup_span_stats", "dup_span_removal"])
+def test_dup_span_length_cut_does_not_split_the_text_again(spark, sf_small, name):
+    """The short-document cut reads the bound word array: no Filter in
+    the optimized plan splits the text (a pushed-down
+    ``size(split(lower(text…))) >= k`` is a second tokenization of
+    every row)."""
+    from medallion_etl_spark.operators import collect_queries
+
+    fn, _ = collect_queries()[name]
+    try:
+        filters = _nodes_mentioning(fn(spark, sf_small), "split(lower(text")
+    finally:
+        spark.catalog.clearCache()
+    assert not [n for n in filters if n.startswith("Filter")], filters
+
+
 def test_source_token_drift_does_not_sort_the_documents(spark, sf_small):
     """The drift only counts tokens per (source, bucket): no range
     shuffle of the documents by doc_id under its aggregation."""

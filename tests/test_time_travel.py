@@ -323,15 +323,13 @@ def test_feed_is_metadata_pruned_across_compaction_and_rebucket(spark, replayed)
 
 def test_history_marks_post_expiry_baseline(spark, replayed):
     """After snapshot expiry the oldest retained version has no
-    predecessor: history() must report it as a baseline (diff
-    unknowable), never as a commit that added all prior batches."""
+    predecessor on disk, but its own commit record still says what it
+    added: its one batch, never all prior batches at once."""
     table, _ = replayed
     table.expire_snapshots(keep_last=2, grace_seconds=0)
     hist = LakeTable.load(table.root).history()
     assert [h["version"] for h in hist] == [2, 3]
-    assert hist[0]["baseline"] is True
-    assert hist[0]["batches_added"] is None and hist[0]["buckets_changed"] is None
-    assert hist[1]["baseline"] is False
+    assert hist[0]["batches_added"] == [1] and hist[0]["buckets_changed"] > 0
     assert hist[1]["batches_added"] == [2]
 
 
