@@ -41,6 +41,7 @@ import time
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from . import manifest
 from .constraints import violation_reason
 from .dedup import dedup_latest
 from .evolve import aligned_cols
@@ -79,9 +80,9 @@ def _rebase_safe(
       to the same bucket (even a COW rewrite or compaction that
       dropped the bucket's earlier deltas).
     """
-    hm = head.meta
-    if str(batch_id) in hm.get("committed_batches", {}):
+    if head.is_committed(batch_id):
         return False
+    hm = head.meta
     if hm["n_buckets"] != base_meta["n_buckets"]:
         return False
     if hm["schema_version"] != base_meta["schema_version"]:
@@ -244,22 +245,8 @@ def apply_batch(
         timings[phase] = round(now - t_last, 3)
         t_last = now
 
-    if table.is_committed(batch_id):
-        # A skip is only safe when this is a true redelivery — same
-        # batch identity, same LSN range. A committed id with a
-        # DIFFERENT range means two distinct streams collided on one
-        # batch-id namespace (e.g. a recreated streaming checkpoint
-        # restarting epochs at 0): skipping would silently drop data,
-        # so fail loudly instead.
-        rec = table.committed_batches()[batch_id]
-        if (int(rec["lsn_lo"]), int(rec["lsn_hi"])) != (int(lsn_lo), int(lsn_hi)):
-            raise RuntimeError(
-                f"batch_id {batch_id} already committed for LSN range "
-                f"[{rec['lsn_lo']}, {rec['lsn_hi']}] but was re-presented "
-                f"with range [{lsn_lo}, {lsn_hi}]: batch-id collision between "
-                "distinct streams/chunkings, not an idempotent redelivery. "
-                "Use a distinct checkpoint/namespace (or the original chunk_size)."
-            )
+    # skip a true redelivery; a committed id with another LSN range raises
+    if manifest.redelivered(table.committed_batches(), batch_id, lsn_lo, lsn_hi):
         return {"batch_id": batch_id, "skipped": True}
 
     key = table.key_col
@@ -331,7 +318,7 @@ def apply_batch(
         # re-read a planned-but-empty LSN range
         if skip_empty_commit:
             return {"batch_id": batch_id, "rows_applied": 0, "buckets": [], "skipped_empty": True}
-        table.commit({}, set(), (batch_id, {"lsn_lo": lsn_lo, "lsn_hi": lsn_hi, "rows_applied": 0}))
+        table.commit({}, set(), (batch_id, manifest.entry(lsn_lo, lsn_hi, 0)))
         return {"batch_id": batch_id, "rows_applied": 0, "buckets": []}
 
     # schema evolution: the stream tells us WHEN to evolve, but the
@@ -450,7 +437,7 @@ def apply_batch(
         (
             replaced,
             removed,
-            (batch_id, {"lsn_lo": lsn_lo, "lsn_hi": lsn_hi, "rows_applied": rows_applied}),
+            (batch_id, manifest.entry(lsn_lo, lsn_hi, rows_applied)),
         ),
         dict(
             schema_version=target_sv if target_sv != table.schema_version else None,

@@ -28,13 +28,8 @@ from pyspark.sql import functions as F
 
 from ..schemas import DOCS_SCHEMAS
 from .apply import apply_batch
+from .manifest import CONVERT_BATCH_ID
 from .table import LakeTable
-
-# own batch-id namespace (below DML 2^38, refresh 2^39, streaming
-# 2^40): replay chunk ids are dense-from-zero, so a converted table's
-# bulk batch must never claim an id a later replay's chunk plan will
-# re-derive with a different LSN range
-CONVERT_BATCH_ID = 1 << 37
 
 
 def convert_from_parquet(

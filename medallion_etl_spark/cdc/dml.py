@@ -19,9 +19,9 @@ IN the lineage/manifest/feed like everything else):
   small DELETE over a big base lands as MOR delta appends, not bucket
   rewrites, and shows up in the manifest, lineage, history() and the
   change feed like any other batch;
-- batch ids live in their own namespace (2^38, below the range-refresh
-  2^39 and streaming 2^40 namespaces) so DML can never collide with a
-  replay chunk id;
+- batch ids come from the table's DML counter, in their own namespace
+  (``manifest.NAMESPACES``), so DML can never collide with a replay
+  chunk id;
 - optimistic concurrency: a commit conflict (another writer landed
   first) reloads the table and re-derives the match set, the LSN and
   the batch id against the new snapshot.
@@ -38,21 +38,8 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .apply import apply_batch
+from .manifest import next_dml_id
 from .table import LakeTable, retry_on_fork_rewind
-
-from .manifest import REDRIVE_BASE
-
-DML_BASE = 1 << 38
-# the top half of the former DML region ([3·2^37, 2^39)) belongs to
-# quarantine redrives (cdc/redrive.py — hash-stable ids, so a crashed
-# redrive resumes as a manifest no-op); the DML counter would need
-# 2^37 commits on one table to reach it
-_DML_END = REDRIVE_BASE
-
-
-def _next_dml_id(table: LakeTable) -> int:
-    used = [b for b in table.committed_batches() if DML_BASE <= b < _DML_END]
-    return (max(used) + 1) if used else DML_BASE
 
 
 def _as_predicate(predicate: str | Column) -> Column:
@@ -84,7 +71,7 @@ def _apply_dml(
             spark,
             table,
             events,
-            batch_id=_next_dml_id(table),
+            batch_id=next_dml_id(table.meta),
             lsn_lo=lsn,
             lsn_hi=lsn,
             write_mode=write_mode,

@@ -25,7 +25,7 @@ from __future__ import annotations
 
 from collections.abc import Collection, Mapping
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -83,26 +83,3 @@ def aligned_cols(
         for f in reg[to_version].fields
     ]
 
-
-def align_to_version(
-    df: DataFrame,
-    from_version: int,
-    to_version: int,
-    schemas: Mapping[int, T.StructType] | None = None,
-) -> DataFrame:
-    """Project ``df`` (shaped like version ``from_version``) onto
-    ``to_version``. Narrowing (int64 -> int32 etc.) would be lossy and
-    is refused."""
-    if to_version < from_version:
-        raise ValueError(f"cannot narrow schema v{from_version} -> v{to_version}")
-    return df.select(*aligned_cols(set(df.columns), to_version, schemas))
-
-
-def align_frame(
-    df: DataFrame,
-    to_version: int,
-    schemas: Mapping[int, T.StructType] | None = None,
-) -> DataFrame:
-    """Align an arbitrary frame carrying some subset of doc columns to
-    the target schema version (used for upsert payloads)."""
-    return df.select(*aligned_cols(set(df.columns), to_version, schemas))

@@ -16,7 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from ..schemas import LINEAGE_SCHEMA
-from . import metalog
+from . import manifest, metalog
 
 
 def lineage_rows(root: str) -> list[dict]:
@@ -33,8 +33,7 @@ def lineage_rows(root: str) -> list[dict]:
         for r in meta.get("commit", {}).get("lineage", []):
             rows.setdefault(int(r["batch_id"]), []).append(r)
         by_batch.update(rows)
-    committed = meta.get("committed_batches", {})
-    return [r for b, rs in sorted(by_batch.items()) if str(b) in committed for r in rs]
+    return [r for b, rs in sorted(by_batch.items()) if manifest.is_committed(meta, b) for r in rs]
 
 
 def read_lineage(spark: SparkSession, table_root: str) -> DataFrame:

@@ -18,10 +18,8 @@ not a policy).
 
 Exactly-once: the batch id is STABLE — derived from the quarantine
 dir's name XOR a content signature (wrapping sum of per-row
-xxhash64, count-mixed), in
-its own namespace carved from the top of the DML region
-([3·2^37, 2^39); ``dml._DML_END`` was lowered to match, and no real
-table's DML counter approaches 2^37 commits). Re-running the same
+xxhash64, count-mixed), in its own namespace
+(``manifest.redrive_batch_id``). Re-running the same
 redrive after a crash-between-commit-and-cleanup finds the id already
 in the manifest, skips the apply, and finishes the cleanup. If a
 LATER replay window re-quarantines new rows into the same dir name,
@@ -47,7 +45,6 @@ apply itself is the normal distributed merge path. No per-row Python.
 
 from __future__ import annotations
 
-import hashlib
 import os
 import shutil
 
@@ -55,20 +52,9 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .apply import apply_batch
-from .manifest import RANGE_REFRESH_BASE, REDRIVE_BASE
+from .manifest import redrive_batch_id
 from .table import LakeTable, retry_on_fork_rewind
 from .triage import event_reason
-
-REDRIVE_END = RANGE_REFRESH_BASE  # namespace boundaries live in manifest.py
-_ID_MASK = (1 << 37) - 1
-
-
-def _batch_id(path: str, content_sig: int) -> int:
-    dir_tag = int.from_bytes(
-        hashlib.sha256(os.path.basename(os.path.normpath(path)).encode()).digest()[:8],
-        "big",
-    )
-    return REDRIVE_BASE | ((dir_tag ^ content_sig) & _ID_MASK)
 
 
 def redrive_quarantine(
@@ -138,8 +124,8 @@ def redrive_quarantine(
 
     # mix the kept-row count in as well: with SUM a collision now
     # needs both equal hash-sums and equal cardinality
-    batch_id = _batch_id(path, int(crow["sig"]) ^ (n_keep * 0x9E3779B97F4A7C15))
-    if batch_id in LakeTable.load(table.root).committed_batches():
+    batch_id = redrive_batch_id(path, int(crow["sig"]) ^ (n_keep * 0x9E3779B97F4A7C15))
+    if LakeTable.load(table.root).is_committed(batch_id):
         # crash-between-commit-and-cleanup resume: finish the cleanup
         shutil.rmtree(path, ignore_errors=True)
         return {

@@ -38,7 +38,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..schemas import DOCS_SCHEMAS
-from . import metalog
+from . import manifest, metalog
 from .dedup import dedup_latest
 from .evolve import aligned_cols
 from .lineage import lineage_rows
@@ -186,9 +186,10 @@ def plan_changes(
             "— re-bootstrap the downstream from the current snapshot (or "
             "feed from a version >= the restore)."
         )
-    old_batches = old_meta["committed_batches"]
-    watermark = max((int(r["lsn_hi"]) for r in old_batches.values()), default=-1)
-    purge_lsn = int(new_meta.get("compaction_watermark_lsn", -1)) if old_batches else -1
+    watermark = manifest.watermark(old_meta)
+    purge_lsn = (
+        int(new_meta.get("compaction_watermark_lsn", -1)) if manifest.batches(old_meta) else -1
+    )
     if watermark < purge_lsn and not allow_incomplete:
         raise ValueError(
             f"change feed since version {since} (watermark LSN {watermark}) "
@@ -197,13 +198,7 @@ def plan_changes(
             "from the current snapshot (read_changes also accepts "
             "allow_incomplete=True when missing deletes are acceptable)."
         )
-    crossers = sorted(
-        int(bid)
-        for bid, rec in new_meta["committed_batches"].items()
-        if bid not in old_batches
-        and int(rec.get("rows_applied", 0)) > 0
-        and int(rec["lsn_lo"]) <= watermark
-    )
+    crossers = manifest.late_batches(old_meta, new_meta)
     if crossers:
         raise ValueError(
             f"change feed since version {since} (watermark LSN {watermark}) "
@@ -627,8 +622,8 @@ class LakeTable:
         if not is_widening(old_dt, dt):
             raise ValueError(
                 f"cannot change {name!r} {old_dt.simpleString()} -> "
-                f"{dt.simpleString()}: not a lossless widening "
-                f"(allowed: {WIDENINGS})"
+                f"{dt.simpleString()}: not a lossless widening (a narrowing "
+                f"or a type change would lose values; allowed: {WIDENINGS})"
             )
         new_sv = self._declare_schema(
             [T.StructField(f.name, dt if f.name == name else f.dataType, f.nullable) for f in cur.fields]
@@ -658,16 +653,15 @@ class LakeTable:
         return {}
 
     def is_committed(self, batch_id: int) -> bool:
-        return str(batch_id) in self.meta["committed_batches"]
+        return manifest.is_committed(self.meta, batch_id)
 
     def max_committed_lsn(self) -> int:
         """Highest LSN any committed batch has applied (-1 for an empty
         table) — the snapshot's change-feed watermark."""
-        batches = self.meta["committed_batches"].values()
-        return max((int(r["lsn_hi"]) for r in batches), default=-1)
+        return manifest.watermark(self.meta)
 
     def committed_batches(self) -> dict[int, dict]:
-        return {int(k): v for k, v in self.meta["committed_batches"].items()}
+        return manifest.batches(self.meta)
 
     @property
     def constraints(self) -> dict[str, str]:
@@ -977,7 +971,7 @@ class LakeTable:
             "buckets_populated": len(buckets),
             "delta_dirs": sum(len(e.get("deltas", [])) for e in buckets.values()),
             "stored_rows": rows,
-            "committed_batches": len(self.meta["committed_batches"]),
+            "committed_batches": len(self.committed_batches()),
             "max_committed_lsn": self.max_committed_lsn(),
             "compaction_watermark_lsn": int(self.meta.get("compaction_watermark_lsn", -1)),
             "clustering": self.meta.get("clustering"),
@@ -1601,11 +1595,7 @@ class LakeTable:
             "published": True,
             "version": head.version,  # commit() advanced the handle in place
             "staged_commits": stage.version,
-            "staged_batches": sorted(
-                int(b)
-                for b in stage.meta["committed_batches"]
-                if b not in self.meta.get("committed_batches", {})
-            ),
+            "staged_batches": head.meta["commit"]["batches"],
         }
 
     def expire_snapshots(
@@ -1705,10 +1695,7 @@ class LakeTable:
                 "committed_at_unix": meta.get("committed_at_unix"),
                 "batches_added": None if rec is None else rec["batches"],
                 "buckets_changed": None if rec is None else rec["buckets_changed"],
-                "max_committed_lsn": max(
-                    (int(r["lsn_hi"]) for r in meta["committed_batches"].values()),
-                    default=-1,
-                ),
+                "max_committed_lsn": manifest.watermark(meta),
                 "clustering": meta.get("clustering"),
                 "compaction_watermark_lsn": int(
                     meta.get("compaction_watermark_lsn", -1)
@@ -1854,8 +1841,8 @@ class LakeTable:
         (+ optional schema evolution) in one metadata swap.
 
         The new document carries this commit's own ``commit`` record,
-        never copied forward: ``batches`` (ids added to the manifest;
-        the diff when ``meta_updates`` replaces it), ``buckets_changed``
+        never copied forward: ``batches`` (ids added to the manifest,
+        ``manifest.added``), ``buckets_changed``
         (entries whose layout signature moved, removals included) and
         the caller's ``lineage`` rows, each naming its ``batch_id``.
 
@@ -1907,17 +1894,12 @@ class LakeTable:
             else:
                 cur.setdefault("deltas", []).append(src)
         if batch_record is not None:
-            batch_id, rec = batch_record
-            meta["committed_batches"][str(batch_id)] = rec
+            manifest.record(meta, *batch_record)
         if meta_updates:
             meta.update(meta_updates)
-        batches = [int(batch_record[0])] if batch_record is not None else []
-        if "committed_batches" in (meta_updates or {}):
-            had = self.meta["committed_batches"]
-            batches = sorted(int(b) for b in meta["committed_batches"] if b not in had)
         old, new = self.meta["buckets"], meta["buckets"]
         meta["commit"] = {
-            "batches": batches,
+            "batches": manifest.added(self.meta, meta),
             "buckets_changed": sum(
                 1 for b, e in new.items()
                 if b not in old or entry_signature(old[b]) != entry_signature(e)

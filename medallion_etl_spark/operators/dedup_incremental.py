@@ -24,7 +24,7 @@ signature table to. They live in the signature table's own manifest —
 no collision with the corpus's replay-chunk / range-refresh /
 streaming-epoch namespaces — and a re-run of the same span is skipped
 by the manifest while a DIFFERENT span presenting the same target
-version fails loudly (apply.py's range guard).
+version fails loudly (``manifest.redelivered``).
 
 Scale shape: signature recompute is per-row expressions over the feed
 (no shuffle beyond the merge's own); the candidate probe explodes
@@ -386,7 +386,7 @@ def stream_refresh_signatures(
     """Drain the corpus change feed into the signature table (one
     availableNow pass; rerun to follow new commits). Returns totals."""
     from ..streaming.feed_source import read_feed_stream
-    from ..streaming.stream_replay import stream_batch_id
+    from ..cdc.manifest import stream_batch_id
 
     totals = {"epochs": 0, "rows_applied": 0}
 

@@ -40,7 +40,8 @@ is deliberately absent: the streaming feed carries no preimage rows
 (per-bucket old∩changed reads would add them — same-bucket locality
 makes that cheap — but a rebucket inside a span shifts bucket ids and
 needs the batch path's full-old-read fallback), and streaming epoch
-batch ids live at 2^40+, outside the contiguity cursor's namespace, so
+batch ids live in the stream namespace, outside the replay namespace
+the contiguity cursor reads (``manifest.replay_cursor``), so
 mixing stream and batch refreshes would corrupt read-modify-write
 totals. Until the feed source grows preimages AND an epoch-aware
 cursor, pace streaming maintenance by calling ``refresh_agg`` per
@@ -62,7 +63,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..cdc.apply import apply_batch
-from ..cdc.manifest import RANGE_REFRESH_BASE
+from ..cdc.manifest import replay_cursor
 from ..cdc.table import LakeTable, retry_on_fork_rewind
 from .util import persist_replacing, scratch_table
 
@@ -97,14 +98,14 @@ def _contrib(rows: DataFrame, sign: int) -> DataFrame:
 
 
 def agg_cursor(agg: LakeTable) -> int:
-    """The corpus version the totals are caught up to = the highest
-    committed maintenance batch id (range/stream namespaces excluded)."""
-    ids = [int(b) for b in agg.committed_batches() if int(b) < RANGE_REFRESH_BASE]
-    if not ids:
+    """The corpus version the totals are caught up to
+    (``manifest.replay_cursor``)."""
+    cursor = replay_cursor(agg.meta)
+    if cursor is None:
         raise ValueError(
             "aggregate table has no bootstrap commit; run bootstrap_agg first"
         )
-    return max(ids)
+    return cursor
 
 
 def bootstrap_agg(spark: SparkSession, corpus: LakeTable, agg: LakeTable, **kw) -> dict:

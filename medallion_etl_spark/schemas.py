@@ -62,16 +62,6 @@ EVENTS_SCHEMA = T.StructType(
 
 # ---- engine-owned bookkeeping tables ------------------------------------
 
-MANIFEST_SCHEMA = T.StructType(
-    [
-        T.StructField("batch_id", T.LongType(), False),
-        T.StructField("lsn_lo", T.LongType(), False),
-        T.StructField("lsn_hi", T.LongType(), False),
-        T.StructField("state", T.StringType(), False),  # 'committed'
-        T.StructField("committed_at", T.TimestampType(), True),
-    ]
-)
-
 LINEAGE_SCHEMA = T.StructType(
     [
         T.StructField("batch_id", T.LongType(), False),

@@ -25,6 +25,11 @@ from pyspark.sql import SparkSession
 # local[N] width: $SPARK_GRAFT_CPUS when set, else the CPUs this
 # process may run on (the one default bench.py shares)
 DEFAULT_PARALLELISM = int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
+# driver heap cap: $SPARK_GRAFT_DRIVER_MEM when set, else a quarter of
+# physical RAM. A fixed 48g let one JVM's heap grow to 7.3 GiB of RSS
+# over the test suite on a 15 GiB host, next to the JVMs of the
+# replay_cli processes some tests start.
+DEFAULT_DRIVER_MEM = f"{os.sysconf('SC_PAGE_SIZE') * os.sysconf('SC_PHYS_PAGES') // 4 >> 20}m"
 _warned_submit_gc = False
 
 
@@ -94,7 +99,8 @@ def get_spark(
             .config("spark.sql.shuffle.partitions", str(shuffle))
             .config("spark.default.parallelism", str(n))
             .config(
-                "spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g")
+                "spark.driver.memory",
+                os.environ.get("SPARK_GRAFT_DRIVER_MEM", DEFAULT_DRIVER_MEM),
             )
             # JVM ergonomics size GC threads to the HOST's cores (23 on
             # the 32-core sandbox); with local[32] task threads that is

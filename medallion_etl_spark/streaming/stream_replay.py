@@ -40,45 +40,15 @@ the lake table, so there is no state-store blow-up on 10^10 keys.
 
 from __future__ import annotations
 
-import hashlib
 import os
 
 from pyspark.sql import DataFrame, SparkSession
 
 from ..schemas import EVENTS_SCHEMA
 from ..cdc.apply import apply_batch, check_write_mode
+from ..cdc.manifest import stream_batch_id, stream_namespace
 from ..cdc.table import LakeTable, retry_on_fork_rewind
 from ..cdc.triage import Triage, check_policies
-
-# Streaming epochs and batch-replay chunk ids share the table's one
-# commit manifest; without a namespace, epoch 0 of a streaming drain
-# onto a table that already has batch chunk 0 committed would be
-# silently skipped (checkpoint advances, events lost). Batch chunk ids
-# are dense-from-zero and bounded by stream_size/chunk_size, far below
-# this base.
-STREAM_EPOCH_BASE = 1 << 40
-
-# Each stream additionally gets its own namespace derived from its
-# checkpoint path (the Delta txnAppId/txnVersion pattern): two queries
-# with DIFFERENT checkpoints draining the same table both restart
-# epochs at 0, and without a per-stream namespace the second query's
-# epochs would collide with the first's committed ids and be silently
-# skipped — permanent data loss. 2^32 epochs per stream is far beyond
-# any real query's lifetime; Python ints (and the JSON manifest) carry
-# the composed id without overflow.
-EPOCH_STRIDE = 1 << 32
-
-
-def stream_namespace(checkpoint_dir: str) -> int:
-    """Stable 31-bit namespace for a stream identity (its checkpoint
-    path). Same checkpoint -> same namespace -> redelivered epochs
-    dedupe; different checkpoint -> disjoint batch-id space."""
-    digest = hashlib.sha256(os.path.abspath(checkpoint_dir).encode()).digest()
-    return int.from_bytes(digest[:4], "big") >> 1
-
-
-def stream_batch_id(checkpoint_dir: str, epoch_id: int) -> int:
-    return STREAM_EPOCH_BASE + stream_namespace(checkpoint_dir) * EPOCH_STRIDE + int(epoch_id)
 
 
 def stream_replay(

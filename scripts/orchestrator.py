@@ -31,24 +31,16 @@ guarantees this only for in-order month ranges).
 from __future__ import annotations
 
 import argparse
-import hashlib
 import json
 import os
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-# Refresh batches get their own id namespace (below the streaming base
-# of 2^40, above any replay chunk index): a range maps to a stable id,
-# so the same refresh re-run is deduped by the manifest while distinct
-# ranges never collide with replay/stream batch ids. The boundary is
-# defined ONCE in cdc/manifest.py.
-from medallion_etl_spark.cdc.manifest import RANGE_REFRESH_BASE as REFRESH_BASE
-
-
-def refresh_batch_id(lsn_lo: int, lsn_hi: int) -> int:
-    digest = hashlib.sha256(f"{lsn_lo}:{lsn_hi}".encode()).digest()
-    return REFRESH_BASE + (int.from_bytes(digest[:5], "big") >> 2)
+# A partial refresh commits under a stable id in its own namespace:
+# the same range re-run is deduped by the manifest, distinct ranges
+# never collide with replay/stream batch ids.
+from medallion_etl_spark.cdc.manifest import refresh_batch_id, replay_cursor
 
 
 def _table_root(out_dir: str) -> str:
@@ -322,11 +314,10 @@ def cmd_refresh_signatures(spark, args) -> dict:
         }
     if LakeTable.exists(args.sig_root):
         sig = LakeTable.load(args.sig_root)
-        # batch refreshes commit under the corpus version (small ints);
-        # a concurrent stream_refresh_signatures drain commits in the
-        # 2^40+ streaming-epoch namespace — not a version cursor
-        done = [b for b in sig.committed_batches() if b < REFRESH_BASE]
-        since = max(done) if done else 0
+        # batch refreshes commit under the corpus version; a concurrent
+        # stream_refresh_signatures drain commits in the streaming
+        # namespace — not a version cursor
+        since = replay_cursor(sig.meta) or 0
         try:
             out = refresh_signatures(spark, corpus, sig, since_version=int(since))
         except ValueError as e:
@@ -364,7 +355,6 @@ def cmd_refresh_agg(spark, args) -> dict:
     from cron like refresh-signatures."""
     import shutil
 
-    from medallion_etl_spark.cdc.manifest import RANGE_REFRESH_BASE
     from medallion_etl_spark.cdc.table import LakeTable
     from medallion_etl_spark.operators.ivm import (
         bootstrap_agg,
@@ -393,8 +383,8 @@ def cmd_refresh_agg(spark, args) -> dict:
         }
     if LakeTable.exists(args.agg_root):
         agg = LakeTable.load(args.agg_root)
-        done = [b for b in agg.committed_batches() if b < RANGE_REFRESH_BASE]
-        if not done:
+        since = replay_cursor(agg.meta)
+        if since is None:
             # crash window between create_agg_table and the bootstrap
             # commit left an existing-but-empty table: finish the
             # bootstrap (its empty-table guard accepts a v0 table)
@@ -403,7 +393,6 @@ def cmd_refresh_agg(spark, args) -> dict:
             out = bootstrap_agg(spark, corpus, agg)
             bootstrapped = True
         else:
-            since = max(done)
             try:
                 out = refresh_agg(spark, corpus, agg)
             except ValueError as e:

@@ -18,7 +18,7 @@ from pyspark.sql import functions as F
 from medallion_etl_spark.cdc.apply import apply_batch
 from medallion_etl_spark.cdc.table import LakeTable
 from medallion_etl_spark.schemas import EVENTS_SCHEMA
-from medallion_etl_spark.streaming.stream_replay import (
+from medallion_etl_spark.cdc.manifest import (
     EPOCH_STRIDE,
     STREAM_EPOCH_BASE,
     stream_batch_id,

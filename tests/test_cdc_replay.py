@@ -10,7 +10,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from medallion_etl_spark.cdc.lineage import read_lineage
-from medallion_etl_spark.cdc.manifest import manifest_df
 from medallion_etl_spark.cdc.replay import replay
 from medallion_etl_spark.cdc.table import LakeTable
 from medallion_etl_spark.synth import gen_docs, gen_events, write_events_shuffled
@@ -116,10 +115,10 @@ def test_manifest_and_lineage(spark, tmp_path, events_path):
     events = spark.read.parquet(events_path)
     replay(spark, events, table, chunk_size=2_000)
     table = LakeTable.load(table.root)
-    man = manifest_df(spark, table).toPandas().sort_values("batch_id")
-    assert man["batch_id"].tolist() == [0, 1, 2, 3]
-    assert man["lsn_lo"].tolist() == [0, 2000, 4000, 6000]
-    assert man["lsn_hi"].tolist() == [1999, 3999, 5999, 7999]
+    man = sorted(table.committed_batches().items())
+    assert [b for b, _ in man] == [0, 1, 2, 3]
+    assert [r["lsn_lo"] for _, r in man] == [0, 2000, 4000, 6000]
+    assert [r["lsn_hi"] for _, r in man] == [1999, 3999, 5999, 7999]
     lin = read_lineage(spark, table.root).toPandas()
     assert set(lin["batch_id"]) == {0, 1, 2, 3}
     # lineage rows applied per batch == events deduped per chunk; ranges nest

@@ -7,7 +7,8 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from medallion_etl_spark.cdc.dml import DML_BASE, delete_where, update_where
+from medallion_etl_spark.cdc.dml import delete_where, update_where
+from medallion_etl_spark.cdc.manifest import DML_BASE
 from medallion_etl_spark.cdc.replay import replay
 from medallion_etl_spark.cdc.table import LakeTable
 from medallion_etl_spark.synth import gen_events

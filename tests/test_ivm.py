@@ -10,6 +10,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from medallion_etl_spark.cdc.dml import delete_where
 from medallion_etl_spark.cdc.replay import replay
 from medallion_etl_spark.cdc.table import LakeTable
 from medallion_etl_spark.operators.ivm import (
@@ -159,6 +160,22 @@ def test_redelivery_is_a_noop_and_empty_span_advances_cursor(spark, crafted):
     refresh_agg(spark, corpus, LakeTable.load(aroot))
     assert agg_cursor(LakeTable.load(aroot)) == corpus.version
     assert _totals(spark, LakeTable.load(aroot)) == state_before
+
+
+def test_dml_on_the_totals_table_does_not_move_the_cursor(spark, crafted):
+    """A DELETE on the totals table commits under a DML-namespace id.
+    The cursor reads only the replay namespace, so the next refresh
+    still advances from the corpus version instead of taking the DML id
+    for a version ahead of the corpus."""
+    root, aroot, step = crafted
+    cursor = agg_cursor(LakeTable.load(aroot))
+    assert delete_where(spark, LakeTable.load(aroot), "source = 'Y'")["rows_deleted"] == 1
+    assert agg_cursor(LakeTable.load(aroot)) == cursor
+    step()
+    corpus = LakeTable.load(root)
+    out = refresh_agg(spark, corpus, LakeTable.load(aroot))
+    assert not out.get("skipped_empty")
+    assert agg_cursor(LakeTable.load(aroot)) == corpus.version > cursor
 
 
 def test_bootstrap_refuses_non_empty_table(spark, crafted):

@@ -8,7 +8,7 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from medallion_etl_spark.cdc.dml import DML_BASE
+from medallion_etl_spark.cdc.manifest import DML_BASE
 from medallion_etl_spark.cdc.merge import merge_into
 from medallion_etl_spark.cdc.replay import replay
 from medallion_etl_spark.cdc.table import LakeTable

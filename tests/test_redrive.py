@@ -10,11 +10,8 @@ import shutil
 import pytest
 from pyspark.sql import functions as F
 
-from medallion_etl_spark.cdc.redrive import (
-    REDRIVE_BASE,
-    REDRIVE_END,
-    redrive_quarantine,
-)
+from medallion_etl_spark.cdc.manifest import REDRIVE_BASE, REDRIVE_END
+from medallion_etl_spark.cdc.redrive import redrive_quarantine
 from medallion_etl_spark.cdc.replay import replay
 from medallion_etl_spark.cdc.table import LakeTable
 from medallion_etl_spark.synth import gen_events
